@@ -94,8 +94,9 @@ object QueryService {
     * CLASSIFY-ONLY requests are read-only probes and run CONCURRENTLY
     * under the read lock (the round-14 verdict's serving finding: the
     * old whole-corpus monitor queued c8 classify p50 at ~8 s of pure
-    * waiting). Classify cost is the partition-pruned trickle probe, so
-    * a micro-batch request is a few Spark jobs, not a corpus scan
+    * waiting). A micro-batch request runs no Spark job while the
+    * standing corpus is under its driver-replica gate, and a few
+    * partition-pruned reads past it — never a corpus scan
     * (BenchHttpDedup measures the boundary, incl. the zero-mismatch
     * check under concurrency). */
   def serve(engine: QueryEngine, vec: Option[VectorEngine],
@@ -114,10 +115,19 @@ object QueryService {
     // hard ~220 qps ceiling at any client concurrency (BenchHttp). The
     // probe paths are thread-safe by design (monitor-disciplined caches,
     // spec-pinned under concurrent load), so handlers parallelize freely;
-    // cached pool = zero threads when idle.
-    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
+    // cached pool = zero threads when idle. Daemon threads: HttpServer.stop
+    // never shuts its executor down, and idle non-daemon pool threads would
+    // hold the JVM open for the pool's 60 s keep-alive after a stop.
+    server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(handlerThreads))
     server.start()
     server
+  }
+
+  private val handlerThreadCount = new java.util.concurrent.atomic.AtomicInteger()
+  private val handlerThreads: java.util.concurrent.ThreadFactory = (r: Runnable) => {
+    val t = new Thread(r, s"graft-http-handler-${handlerThreadCount.incrementAndGet()}")
+    t.setDaemon(true)
+    t
   }
 
   private def handle(engine: QueryEngine, ex: HttpExchange): Unit = {

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.core.{Lsh, Shingling}
+import graft.api.QueryEngine
+import graft.core.{Kernels, Lsh, Shingling}
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Disk-resident STANDING-CORPUS dedup artifacts with partition-pruned
@@ -51,6 +52,24 @@ import org.apache.spark.sql.functions._
   *
   * Signature family: md5-hashed word k-shingles (K=3 by default), the
   * oracle-replayable family every dedup gate uses.
+  *
+  * STANDING REPLICA. Below the gates the query replica uses
+  * ([[Lsh.warmDriverIndex]]: at most `Lsh.DriverReplicaMaxDocs` (2^17)
+  * base docs and `Lsh.DriverStatsMaxEntries` (2^20) postings, bounded by
+  * nDocs x bands), the base tables also live on the driver, in the same
+  * lookup view that holds the absorbed deltas — the reference's
+  * in-memory tables (worker_tasks.py:79-117). A trickle batch is then
+  * signed on the driver and answered from that one view of base ∪
+  * deltas: classify, classifyShared, absorb and classifyAbsorb over a
+  * driver-local (LocalRelation) batch run ZERO Spark jobs. The gate is
+  * evaluated on the base at build, open, compaction swap and compact;
+  * delta growth between those points is bounded by
+  * compactEveryBatches x trickleMaxDocs. Driver-heap cost at the gate:
+  * ~134 MB of 128-long signatures at 2^17 docs, plus the postings map at
+  * ~130-200 bytes per posting (boxed bucket triple + member array), i.e.
+  * up to ~200 MB at 2^20 postings, plus ~100 bytes per md5 hex. Above the
+  * gates the base stays on disk and the trickle fold reads it through the
+  * partition-pruned reads described above.
   *
   * Not thread-safe; call from a single ingest loop (Structured Streaming
   * serializes micro-batches per query).
@@ -126,6 +145,126 @@ object StandingCorpus {
       minhash_signature(shingle_hashes_md5(
         Shingling.shingles(col(textCol), meta.kShingle, byWord = meta.byWord))).as("sig"))
 
+  /** Driver twin of [[sign]] plus the md5 hex of one text: the same
+    * [[Kernels]] calls the Catalyst expressions wrap (Shingling's null
+    * guard — a null text is the empty shingle set, hence the all-sentinel
+    * signature — then word/char k-grams, md5-mod-p shingle hashes and the
+    * clean MinHash family), and the hex through DigestUtils.md5Hex over
+    * the same bytes, as Spark's `Md5` does. `utf8` is the text's UTF-8
+    * bytes as Spark holds them; null = null text (null md5). */
+  private[graft] def signLocal(utf8: Array[Byte], kShingle: Int,
+                               byWord: Boolean): (String, Array[Long]) = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val shingles =
+      if (utf8 == null) new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+      else if (byWord) Kernels.wordShingles(UTF8String.fromBytes(utf8), kShingle)
+      else Kernels.charShingles(UTF8String.fromBytes(utf8), kShingle)
+    val sig = Kernels.minhashSignature(Kernels.shingleHashesMd5(shingles)).toLongArray()
+    (if (utf8 == null) null else org.apache.commons.codec.digest.DigestUtils.md5Hex(utf8), sig)
+  }
+
+  /** The standing replica's gate (see the class doc): the query
+    * replica's bounds, with postings bounded by nDocs x bands so the
+    * check needs no count. */
+  private[graft] def replicaFits(nDocs: Long, bands: Int): Boolean =
+    nDocs <= Lsh.DriverReplicaMaxDocs && nDocs * bands <= Lsh.DriverStatsMaxEntries
+
+  /** Run `tasks` concurrently — all but the last on their own daemon
+    * threads, the last on the caller — and return or throw only once
+    * every one has finished: a build must not return while a writer
+    * thread still writes into its dir (a caller that catches and retries
+    * into the same dir would race two writers on one path). The first
+    * failure (the caller's own first) is rethrown with the others
+    * attached as suppressed exceptions. */
+  private def concurrently(tasks: (String, () => Unit)*): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val ts = tasks.init.map { case (name, body) =>
+      val t = new Thread(() => try body() catch { case e: Throwable => errs.add(e); () }, name)
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    val own = try { tasks.last._2(); None } catch { case e: Throwable => Some(e) }
+    ts.foreach(_.join())
+    import scala.jdk.CollectionConverters._
+    val all = own.toSeq ++ errs.asScala
+    all.headOption.foreach { first =>
+      all.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  /** Standing base rows the trickle fold saw in one bucket: its non-null
+    * member ids (what a join can surface as candidates) and its row
+    * count (the occupancy the cap counts — a null id takes a slot but
+    * joins nothing). */
+  private final case class BaseBucket(ids: Array[Long], n: Int)
+
+  /** Driver mirror of one absorbed delta generation — the same rows its
+    * three LocalRelation frames carry, as plain arrays so trickle probes
+    * consult deltas without a job. */
+  private final case class LocalDelta(hashes: Array[String],
+                                      sigs: Array[(Long, Array[Long])],
+                                      postings: Array[(Long, Int, Long, Long)])
+
+  /** Driver lookup view the trickle fold answers from: hash membership,
+    * signatures by id and postings by bucket triple over the absorbed
+    * deltas and, when `holdsBase` (the standing replica), the base
+    * tables too — each row exactly once. Base rows load as the pruned
+    * joins treat them: a null md5 or sig id is dropped (no join matches
+    * it), a null sig is kept (sigsOf filters it), a null posting id
+    * counts toward its bucket's occupancy only. The three `load*`
+    * methods touch disjoint maps, so the three tables can load on three
+    * threads; deltas are added under the owner's exclusive lock. */
+  private final class LocalView(val holdsBase: Boolean) {
+    val hashSet = scala.collection.mutable.HashSet.empty[String]
+    val sigsById = scala.collection.mutable.HashMap.empty[Long, List[Array[Long]]]
+    val postingsByTriple = scala.collection.mutable.HashMap
+      .empty[(Int, Long, Long), Array[Long]]
+    val nullIdPostings = scala.collection.mutable.HashMap.empty[(Int, Long, Long), Int]
+
+    def bucketCount(t: (Int, Long, Long)): Long =
+      postingsByTriple.get(t).fold(0L)(_.length.toLong) + nullIdPostings.getOrElse(t, 0)
+
+    /** Rows of (_h). */
+    def loadHashes(rows: Array[Row]): Unit =
+      rows.foreach(r => if (!r.isNullAt(0)) hashSet += r.getString(0))
+    /** Rows of (doc_id, sig). */
+    def loadSigs(rows: Array[Row]): Unit =
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val id = r.getLong(0)
+          val sig = if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray
+          sigsById.update(id, sig :: sigsById.getOrElse(id, Nil))
+        }
+      }
+    /** Rows of (id, band, key64, key64b). */
+    def loadPostings(rows: Array[Row]): Unit = {
+      val acc = scala.collection.mutable.HashMap
+        .empty[(Int, Long, Long), scala.collection.mutable.ArrayBuilder.ofLong]
+      rows.foreach { r =>
+        if (!r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3)) {
+          val t = (r.getInt(1), r.getLong(2), r.getLong(3))
+          if (r.isNullAt(0)) nullIdPostings.update(t, nullIdPostings.getOrElse(t, 0) + 1)
+          else acc.getOrElseUpdate(t, new scala.collection.mutable.ArrayBuilder.ofLong) +=
+            r.getLong(0)
+        }
+      }
+      acc.foreach { case (t, b) => postingsByTriple.update(t, b.result()) }
+    }
+
+    def add(d: LocalDelta): Unit = {
+      d.hashes.foreach(h => if (h != null) hashSet += h)
+      d.sigs.foreach { case (id, sig) =>
+        sigsById.update(id, sig :: sigsById.getOrElse(id, Nil))
+      }
+      d.postings.groupBy(p => (p._2, p._3, p._4)).foreach { case (t, ps) =>
+        postingsByTriple.update(t,
+          postingsByTriple.getOrElse(t, Array.emptyLongArray) ++ ps.map(_._1))
+      }
+    }
+  }
+
   private def writePartitioned(df: DataFrame, pbCol: org.apache.spark.sql.Column,
                                nParts: Int, path: String,
                                sortKey: org.apache.spark.sql.Column,
@@ -174,8 +313,8 @@ object StandingCorpus {
     def writeSigs(sf: DataFrame): Unit =
       writePartitioned(sf, pbSig(col("doc_id"), meta.pSig), meta.pSig, s"$v/sigs",
         col("doc_id"), nDocs, SigRowsPerPart)
-    def writeIndex(sf: DataFrame): Unit =
-      writePartitioned(Lsh.postings(sf, "doc_id", "sig", lsh),
+    def writeIndex(postings: DataFrame): Unit =
+      writePartitioned(postings,
         pbIdx(col("key64"), meta.pIdx), meta.pIdx, s"$v/index", col("key64"),
         nDocs * lsh.bands, IdxRowsPerPart)
     // The three table writes are mutually independent once the signature
@@ -190,36 +329,48 @@ object StandingCorpus {
     // the concurrent shuffles' combined disk footprint is the constraint
     // (the same reason compaction writes serially with GC between
     // tables), so big builds keep the serial order.
-    if (nDocs <= ParallelBuildMaxDocs) {
-      val sMat = s.localCheckpoint(true)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-      def th(name: String)(body: => Unit): Thread = {
-        val t = new Thread(() => try body catch {
-          case e: Throwable => err.compareAndSet(null, e)
-        }, name)
-        t.setDaemon(true)
-        t.start()
-        t
+    val view =
+      if (nDocs <= ParallelBuildMaxDocs) {
+        val sMat = s.localCheckpoint(true)
+        // under the replica gate each writer thread also seeds its table
+        // of the driver view from the frame it writes — the checkpointed
+        // signatures and postings, the docs' md5 projection — never by
+        // reading the written parquet back
+        val seeded = if (replicaFits(nDocs, lsh.bands)) new LocalView(holdsBase = true) else null
+        try concurrently(
+          "graft-standing-build-hashes" -> (() => {
+            writeHashes()
+            if (seeded != null) seeded.loadHashes(docs.select(md5(col(textCol))).collect())
+          }),
+          "graft-standing-build-sigs" -> (() => {
+            writeSigs(sMat)
+            if (seeded != null) seeded.loadSigs(sMat.select("doc_id", "sig").collect())
+          }),
+          "graft-standing-build-index" -> (() =>
+            if (seeded == null) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh))
+            else {
+              val post = Lsh.postings(sMat, "doc_id", "sig", lsh)
+                .select("id", "band", "key64", "key64b").localCheckpoint(true)
+              try {
+                writeIndex(post)
+                seeded.loadPostings(post.collect())
+              } finally QueryEngine.releaseFrame(post)
+            }))
+        // releaseFrame, not unpersist: Dataset.unpersist leaves a local
+        // checkpoint's RDD persisted
+        finally QueryEngine.releaseFrame(sMat)
+        seeded
+      } else {
+        writeHashes()
+        writeSigs(s)
+        // sign from the WRITTEN sig table so the (expensive) signature
+        // projection is not recomputed for the postings pass
+        writeIndex(Lsh.postings(spark.read.parquet(s"$v/sigs").drop("_pb"),
+          "doc_id", "sig", lsh))
+        null
       }
-      val ts = Seq(th("graft-standing-build-hashes")(writeHashes()),
-        th("graft-standing-build-sigs")(writeSigs(sMat)))
-      // join in a finally: the method must not return/throw while a
-      // writer thread is still writing into $dir — a caller that catches
-      // and retries build() into the same dir would otherwise race two
-      // concurrent writers on one path
-      try writeIndex(sMat)
-      finally ts.foreach(_.join())
-      sMat.unpersist(blocking = false)
-      if (err.get() != null) throw err.get()
-    } else {
-      writeHashes()
-      writeSigs(s)
-      // sign from the WRITTEN sig table so the (expensive) signature
-      // projection is not recomputed for the postings pass
-      writeIndex(spark.read.parquet(s"$v/sigs").drop("_pb"))
-    }
     writeMeta(dir, meta)
-    new StandingCorpus(spark, dir, meta)
+    new StandingCorpus(spark, dir, meta, view)
   }
 
   /** Past this corpus size [[build]] writes its three tables serially:
@@ -229,7 +380,9 @@ object StandingCorpus {
 
   /** Open standing artifacts previously written by [[build]] (or left by
     * a [[StandingCorpus.compact]]) — the serving-start path: no corpus
-    * pass, just the meta read and lazy partitioned-table handles. */
+    * pass, just the meta read and lazy partitioned-table handles, plus,
+    * under the replica gate, one concurrent read of the base tables into
+    * the driver view. */
   def open(spark: SparkSession, dir: String): StandingCorpus = {
     val meta = readMeta(dir)
     // drop version dirs meta does not reference: a crash between a
@@ -244,7 +397,9 @@ object StandingCorpus {
         (f.getName.startsWith(".build-v") ||
           (f.getName.startsWith("v") && f.getName != s"v${meta.version}")))
       .foreach(deleteRecursivelyStatic)
-    new StandingCorpus(spark, dir, meta)
+    // under the replica gate the constructor loads the driver view: the
+    // three base tables read concurrently
+    new StandingCorpus(spark, dir, meta, null)
   }
 
   private def deleteRecursivelyStatic(f: java.io.File): Unit = {
@@ -281,7 +436,8 @@ object StandingCorpus {
 }
 
 final class StandingCorpus private (val spark: SparkSession, val dir: String,
-                                    private var meta: StandingCorpus.Meta) {
+                                    private var meta: StandingCorpus.Meta,
+                                    builtView: StandingCorpus.LocalView) {
   import StandingCorpus._
 
   /** Batches above this size classify via the bulk scan path (one
@@ -377,74 +533,73 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private val deltaIndex = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private var deltaBatches = 0
 
-  // ---- driver-side trickle fast path (round 15) ----------------------
+  // ---- driver-side trickle fast path --------------------------------
   // A trickle batch is <= trickleMaxDocs docs; its md5s, signatures and
-  // band keys all fit on the driver. The fast path runs ONE Spark job to
-  // sign+collect the batch, derives every probe key driver-side (the
-  // same Catalyst expressions, evaluated locally — Lsh.queryKeysLocal),
-  // and keeps only the three pruned standing reads as cluster jobs; the
-  // verdict fold, the absorb cap discipline and the delta append are
-  // in-process. This removes the ~16-job-per-batch floor (three pruning
-  // collects + ~10 localCheckpoints) the round-14 verdict measured as
-  // the dominant trickle cost at every scale. Verdicts are bit-identical
-  // to the Spark trickle plan (same pruned reads, same est-Jaccard
-  // arithmetic, same cap fold — StandingCorpusSpec pins trickle==bulk);
-  // any case the local fold cannot faithfully reproduce (null batch ids,
-  // a distributed delta from a bulk absorb, over-bound candidate
-  // fan-out) falls back to the Spark plan.
+  // band keys all fit on the driver. The fast path collects the batch's
+  // (id, text) rows — no job when the batch is a driver-local
+  // LocalRelation — signs them on the driver through the Kernels the
+  // Catalyst expressions wrap (signLocal), derives every probe key
+  // driver-side (the same Catalyst XxHash64, evaluated locally —
+  // Lsh.queryKeysLocal) and folds verdicts, the absorb cap discipline and
+  // the delta append in-process. Under the replica gate the standing base
+  // is in the driver view too and a batch runs ZERO Spark jobs; above it
+  // the fold reads the base through three partition-pruned reads (exact,
+  // candidate and signature tier) as cluster jobs. Verdicts are
+  // bit-identical to the Spark trickle plan (same rows, same est-Jaccard
+  // arithmetic, same cap fold — StandingCorpusSpec pins trickle==bulk and
+  // replica==pruned); any case the local fold cannot faithfully
+  // reproduce (null batch ids, a distributed delta from a bulk absorb,
+  // over-bound candidate fan-out on the pruned reads) falls back to the
+  // Spark plan.
 
-  /** One collected batch row: boxed id (null-safe), md5 hex and
-    * signature (both null for a null text). */
+  /** One collected batch row: boxed id (null-safe), md5 hex (null for a
+    * null text) and signature. */
   private final case class BatchRow(id: java.lang.Long, h: String, sig: Array[Long])
 
-  /** Driver mirror of one absorbed delta generation — the same rows its
-    * three LocalRelation frames carry, as plain arrays so trickle probes
-    * consult deltas without a job. Parallel to deltaHashes/deltaSigs/
-    * deltaIndex while every delta is local ([[deltasAllLocal]]). */
-  private final case class LocalDelta(hashes: Array[String],
-                                      sigs: Array[(Long, Array[Long])],
-                                      postings: Array[(Long, Int, Long, Long)])
   private val localDeltas = scala.collection.mutable.ArrayBuffer.empty[LocalDelta]
   private var deltasAllLocal = true
 
-  /** Cumulative lookup view over [[localDeltas]] (hash membership, sigs
-    * by id, postings by bucket triple) — appended incrementally per
-    * absorb, rebuilt after a compaction swap drops folded deltas. */
-  private final class LocalView {
-    val hashSet = scala.collection.mutable.HashSet.empty[String]
-    val sigsById = scala.collection.mutable.HashMap
-      .empty[Long, List[Array[Long]]]
-    val postingsByTriple = scala.collection.mutable.HashMap
-      .empty[(Int, Long, Long), scala.collection.mutable.ArrayBuffer[Long]]
-    def add(d: LocalDelta): Unit = {
-      d.hashes.foreach(h => if (h != null) hashSet += h)
-      d.sigs.foreach { case (id, sig) =>
-        sigsById.update(id, sig :: sigsById.getOrElse(id, Nil))
-      }
-      d.postings.foreach { case (id, b, k, kb) =>
-        postingsByTriple.getOrElseUpdate((b, k, kb),
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += id
-      }
-    }
-  }
-  private var lvCache: LocalView = null
-  // init-synchronized: concurrent read-locked classifies may race the
-  // lazy rebuild after an absorb invalidated it (absorbs themselves are
-  // exclusive, so localDeltas is stable while any classify runs)
-  private val lvLock = new Object
-  private def localView(): LocalView = lvLock.synchronized {
-    if (lvCache == null) {
-      val lv = new LocalView
-      localDeltas.foreach(lv.add)
-      lvCache = lv
-    }
-    lvCache
+  /** Docs in the on-disk base — the replica gate's input. */
+  private var baseDocs = meta.nDocs
+  private var replicaOff = false
+  private def wantReplica: Boolean = !replicaOff && replicaFits(baseDocs, meta.bands)
+
+  /** Spec hook: true keeps the base off the driver whatever its size —
+    * the pruned-read fold that corpora past the replica gate run (pins
+    * that path at spec scale, where the gate otherwise always holds);
+    * false = the size-gated default. Takes effect at once. */
+  private[graft] def driverReplicaOff: Boolean = replicaOff
+  private[graft] def driverReplicaOff_=(off: Boolean): Unit = {
+    replicaOff = off
+    val want = deltasAllLocal && wantReplica
+    if (want != view.holdsBase) resetView(want)
   }
 
-  /** Bounds on what a driver fold will hold: standing postings matched to
-    * one batch's buckets, and distinct standing candidate ids whose
-    * signatures are fetched. Past either bound the probe falls back to
-    * the distributed plan (which never collects candidates). */
+  /** The driver view the trickle fold reads (base ∪ local deltas under
+    * the replica gate, local deltas alone otherwise). Replaced or grown
+    * only under the owner's exclusive lock; volatile so concurrent
+    * read-locked classifies see the current one. */
+  @volatile private var view: LocalView = _
+
+  /** Rebuild the view from the local deltas, over a fresh concurrent read
+    * of the base tables when `withBase`. */
+  private def resetView(withBase: Boolean): Unit = {
+    val v = new LocalView(withBase)
+    if (withBase) concurrently(
+      "graft-standing-load-hashes" -> (() => v.loadHashes(baseHashes.select("_h").collect())),
+      "graft-standing-load-sigs" -> (() => v.loadSigs(baseSigs.select("doc_id", "sig").collect())),
+      "graft-standing-load-index" -> (() =>
+        v.loadPostings(baseIndex.select("id", "band", "key64", "key64b").collect())))
+    localDeltas.foreach(v.add)
+    view = v
+  }
+
+  if (builtView != null) view = builtView else resetView(wantReplica)
+
+  /** Bounds on what a pruned-read fold will hold: standing postings
+    * matched to one batch's buckets, and distinct standing candidate ids
+    * whose signatures are fetched. Past either bound the probe falls back
+    * to the distributed plan (which never collects candidates). */
   private val PostingsCollectBound = 1 << 19
   private val CandSigBound = MaxPushedKeys
 
@@ -490,33 +645,29 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     (((h % p) + p) % p).toInt
   }
 
-  /** Sign + collect a trickle-sized batch in ONE job. None when the
-    * batch exceeds trickleMaxDocs (bulk territory), a distributed delta
-    * exists (the local fold could not see it), or any id is null (the
-    * distributed plan's null-key join semantics are not worth
-    * reproducing locally). */
+  /** Collect and sign a trickle-sized batch on the driver. The collect
+    * reads (id, text bytes) only, so over a LocalRelation batch the
+    * optimizer folds it into the relation and no job runs; signing is
+    * [[StandingCorpus.signLocal]], spread over the common fork-join pool.
+    * None when the batch exceeds trickleMaxDocs (bulk territory), a
+    * distributed delta exists (the local fold could not see it), or any
+    * id is null (the distributed plan's null-key join semantics are not
+    * worth reproducing locally). */
   private def collectBatch(batchDocs: DataFrame, idCol: String,
                            textCol: String): Option[Array[BatchRow]] = {
     if (!deltasAllLocal || trickleMaxDocs <= 0 ||
       trickleMaxDocs >= Int.MaxValue.toLong) return None
-    val signed = batchDocs.select(
-      col(idCol).cast("long").as(idCol),
-      md5(col(textCol)).as("_h"),
-      minhash_signature(shingle_hashes_md5(
-        Shingling.shingles(col(textCol), meta.kShingle,
-          byWord = meta.byWord))).as("sig"))
-    val rows = signed.limit(trickleMaxDocs.toInt + 1).collect()
-    if (rows.length > trickleMaxDocs) None
+    // text as binary: the exact bytes Spark's Md5 and shingle kernels see
+    val rows = batchDocs.select(col(idCol).cast("long"), col(textCol).cast("binary"))
+      .limit(trickleMaxDocs.toInt + 1).collect()
+    if (rows.length > trickleMaxDocs || rows.exists(_.isNullAt(0))) None
     else {
       val out = new Array[BatchRow](rows.length)
-      var i = 0
-      while (i < rows.length) {
+      java.util.stream.IntStream.range(0, rows.length).parallel().forEach { i =>
         val r = rows(i)
-        if (r.isNullAt(0)) return None // null id: fall back
-        out(i) = BatchRow(java.lang.Long.valueOf(r.getLong(0)),
-          if (r.isNullAt(1)) null else r.getString(1),
-          if (r.isNullAt(2)) null else r.getSeq[Long](2).toArray)
-        i += 1
+        val (h, sig) = signLocal(if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1),
+          meta.kShingle, meta.byWord)
+        out(i) = BatchRow(java.lang.Long.valueOf(r.getLong(0)), h, sig)
       }
       Some(out)
     }
@@ -564,109 +715,130 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       org.apache.spark.sql.types.StringType, nullable = false)))
 
   /** Everything the driver fold learned about one classified batch —
-    * handed from classify to absorb so classifyAbsorb never re-probes. */
+    * handed from classify to absorb so classifyAbsorb never re-probes.
+    * `baseBuckets` is the pruned base read of the batch's buckets (empty
+    * when the view holds the base). */
   private final class DriverClassified(
       val rows: Array[BatchRow],
       val statuses: DataFrame,
       val statusById: Map[Long, String],
-      val standingByTriple: Map[(Int, Long, Long), Array[Long]])
+      val baseBuckets: Map[(Int, Long, Long), BaseBucket])
 
-  /** The three-tier trickle classify folded on the driver: one pruned
-    * standing read per tier, all joins against broadcast LocalRelations
-    * of the batch's own keys, verdicts computed in-process. None = fall
-    * back to the distributed plan (over-bound fan-out). */
-  private def driverClassify(rows: Array[BatchRow], idCol: String)
-      : Option[DriverClassified] = withPushConf(anyPushGateOpen) {
-    // ^ ONE push-conf window across the whole classify: the exact tier
-    // below runs on its own driver thread concurrent with the candidate
-    // -> signature chain, and the per-tier conf set/restore would race
+  /** Base postings in `triples`' buckets: one partition-pruned index read
+    * joined to a broadcast LocalRelation of the triples. None past
+    * PostingsCollectBound. */
+  private def prunedBaseBuckets(triples: Array[(Int, Long, Long)])
+      : Option[Map[(Int, Long, Long), BaseBucket]] =
+    if (triples.isEmpty) Some(Map.empty)
+    else {
+      val ks = triples.map(_._2).distinct.toSeq
+      val p = meta.pIdx.toLong
+      val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
+      val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
+      val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
+      val pruned =
+        if (fat && ks.size <= MaxPushedKeys) pruned0.filter(col("key64").isin(ks: _*))
+        else pruned0
+      val localT = localDf(
+        triples.map(t => Row(t._1, t._2, t._3)).toSeq, tripleSchema)
+      val matched = withPushConf(fat) {
+        pruned.join(broadcast(localT), Seq("band", "key64", "key64b"))
+          .select("band", "key64", "key64b", "id")
+          .limit(PostingsCollectBound + 1).collect()
+      }
+      if (matched.length > PostingsCollectBound) None
+      else Some(matched.groupBy(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+        .map { case (t, rs) =>
+          t -> BaseBucket(rs.filterNot(_.isNullAt(3)).map(_.getLong(3)), rs.length)
+        })
+    }
+
+  /** The three-tier trickle classify folded on the driver. With the base
+    * in the view every tier is a lookup; otherwise each tier first reads
+    * the base through one pruned read joined to a broadcast LocalRelation
+    * of the batch's own keys. None = fall back to the distributed plan
+    * (over-bound fan-out on the pruned reads). */
+  private def driverClassify(rows: Array[BatchRow]): Option[DriverClassified] = {
+    val lv = view
+    // ONE push-conf window across the whole pruned classify: the exact
+    // tier runs on its own driver thread concurrent with the candidate ->
+    // signature chain, and the per-tier conf set/restore would race
     // across threads (same final value, but a probe could plan with the
     // push off). Inside this window the per-tier withPushConf calls are
     // idempotent no-ops.
-    import org.apache.spark.sql.Row
-    val lv = localView()
-    // exact tier: which of the batch's md5s exist in the standing
-    // corpus. Independent of the candidate -> signature chain, so it
-    // runs on its own driver thread and the two pruned reads overlap
-    // (guide §2.6) — per-batch latency is max(exact, cand+sig) instead
-    // of their sum.
+    withPushConf(!lv.holdsBase && anyPushGateOpen)(classifyWith(rows, lv))
+  }
+
+  private def classifyWith(rows: Array[BatchRow], lv: LocalView): Option[DriverClassified] = {
+    // exact tier: which of the batch's md5s exist in the base. On the
+    // pruned path it is independent of the candidate -> signature chain,
+    // so it runs on its own driver thread and the two pruned reads overlap
+    // (guide §2.6) — per-batch latency is max(exact, cand+sig) instead of
+    // their sum.
     val hs = rows.iterator.map(_.h).filter(_ != null).toSeq.distinct
-    val standingHF = new java.util.concurrent.FutureTask[Set[String]](() =>
-      if (hs.isEmpty) Set.empty
+    val standingHF =
+      if (lv.holdsBase || hs.isEmpty) null
       else {
-        val pbs = hs.map(h =>
-          (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
-        val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
-        val pruned0 = baseHashes.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat && hs.size <= MaxPushedKeys) pruned0.filter(col("_h").isin(hs: _*))
-          else pruned0
-        withPushConf(fat) {
-          pruned.join(broadcast(localDf(hs.map(Row(_)), hashSchema)),
-              Seq("_h"), "left_semi")
-            .select("_h").distinct().collect().map(_.getString(0)).toSet
-        }
-      })
-    val hThread = new Thread(standingHF, "graft-trickle-exact")
-    hThread.setDaemon(true)
-    hThread.start()
+        val task = new java.util.concurrent.FutureTask[Set[String]](() => {
+          val pbs = hs.map(h =>
+            (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
+          val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
+          val pruned0 = baseHashes.filter(col("_pb").isin(pbs: _*))
+          val pruned =
+            if (fat && hs.size <= MaxPushedKeys) pruned0.filter(col("_h").isin(hs: _*))
+            else pruned0
+          withPushConf(fat) {
+            pruned.join(broadcast(localDf(hs.map(Row(_)), hashSchema)),
+                Seq("_h"), "left_semi")
+              .select("_h").distinct().collect().map(_.getString(0)).toSet
+          }
+        })
+        val t = new Thread(task, "graft-trickle-exact")
+        t.setDaemon(true)
+        t.start()
+        task
+      }
     // the fallback returns must not leave the exact-tier job in flight
     // (its plan would race the conf restore; the caller may start the
     // distributed fallback immediately after)
     def awaitExact(): Set[String] =
-      try standingHF.get()
+      if (standingHF == null) Set.empty
+      else try standingHF.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    // candidate tier: standing postings in the batch's buckets
+    // candidate tier: base and view postings in the batch's buckets
     val batchPostings = cappedLocalPostings(rows.iterator.collect {
       case r if r.sig != null => (r.id.longValue(), r.sig)
     })
-    val triples = batchPostings.keys.toArray
-    val standingByTriple: Map[(Int, Long, Long), Array[Long]] =
-      if (triples.isEmpty) Map.empty
-      else {
-        val ks = triples.map(_._2).distinct.toSeq
-        val p = meta.pIdx.toLong
-        val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
-        val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
-        val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat && ks.size <= MaxPushedKeys) pruned0.filter(col("key64").isin(ks: _*))
-          else pruned0
-        val localT = localDf(
-          triples.map(t => Row(t._1, t._2, t._3)).toSeq, tripleSchema)
-        val matched = withPushConf(fat) {
-          pruned.join(broadcast(localT), Seq("band", "key64", "key64b"))
-            .select("band", "key64", "key64b", "id")
-            .limit(PostingsCollectBound + 1).collect()
-        }
-        if (matched.length > PostingsCollectBound) { awaitExact(); return None }
-        matched.groupBy(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-          .map { case (t, rs) => t -> rs.map(_.getLong(3)) }
+    val baseBuckets =
+      if (lv.holdsBase) Map.empty[(Int, Long, Long), BaseBucket]
+      else prunedBaseBuckets(batchPostings.keys.toArray) match {
+        case Some(m) => m
+        case None => awaitExact(); return None
       }
-    // per-id candidate sets (standing + local-delta bucket members)
+    // per-id candidate sets
     val candByBid = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.HashSet[Long]]
     batchPostings.foreach { case (t, bids) =>
-      val standing = standingByTriple.getOrElse(t, Array.empty[Long])
-      val deltas = lv.postingsByTriple.get(t)
-      if (standing.nonEmpty || deltas.exists(_.nonEmpty)) {
+      val base = baseBuckets.get(t).fold(Array.emptyLongArray)(_.ids)
+      val local = lv.postingsByTriple.get(t)
+      if (base.nonEmpty || local.exists(_.nonEmpty)) {
         bids.foreach { bid =>
           val set = candByBid.getOrElseUpdate(bid,
             scala.collection.mutable.HashSet.empty[Long])
-          set ++= standing
-          deltas.foreach(set ++= _)
+          set ++= base
+          local.foreach(set ++= _)
         }
       }
     }
-    // signature tier: fetch every distinct candidate id's base sigs
-    // (delta sigs merge in locally — an id can legitimately exist in
-    // both, e.g. a batch id coinciding with a standing id); bound the
-    // distinct-id fetch
-    val standIds = candByBid.valuesIterator.flatten.toArray.distinct
-    if (standIds.length > CandSigBound) { awaitExact(); return None }
-    val standSig: Map[Long, Seq[Array[Long]]] =
-      if (standIds.isEmpty) Map.empty
+    // signature tier: on the pruned path, fetch every distinct candidate
+    // id's base sigs (view sigs merge in locally — an id can legitimately
+    // exist in both, e.g. a batch id coinciding with a standing id); bound
+    // the distinct-id fetch
+    val baseSig: Map[Long, Seq[Array[Long]]] =
+      if (lv.holdsBase || candByBid.isEmpty) Map.empty
       else {
+        val standIds = candByBid.valuesIterator.flatten.toArray.distinct
+        if (standIds.length > CandSigBound) { awaitExact(); return None }
         val pbs = standIds.map(pbSigLocal).distinct.toSeq
         val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
         val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
@@ -685,7 +857,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         }
       }
     def sigsOf(id: Long): Iterator[Array[Long]] =
-      (standSig.getOrElse(id, Nil).iterator ++
+      (baseSig.getOrElse(id, Nil).iterator ++
         lv.sigsById.getOrElse(id, Nil).iterator).filter(_ != null)
     // verdict fold: exact > near > new, per distinct id
     val sigsByBid = scala.collection.mutable.HashMap
@@ -695,9 +867,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         sigsByBid.update(r.id.longValue(),
           r.sig :: sigsByBid.getOrElse(r.id.longValue(), Nil))
     }
-    val standingH = awaitExact()
+    val baseH = awaitExact()
     val exactIds = rows.iterator
-      .filter(r => r.h != null && (standingH.contains(r.h) || lv.hashSet.contains(r.h)))
+      .filter(r => r.h != null && (baseH.contains(r.h) || lv.hashSet.contains(r.h)))
       .map(_.id.longValue()).toSet
     val thr = meta.threshold
     def isNear(bid: Long): Boolean = candByBid.get(bid).exists { cands =>
@@ -715,28 +887,40 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       Row(bid, st)
     }
     Some(new DriverClassified(rows, localDf(stRows.toSeq, statusSchema),
-      statusById.toMap, standingByTriple))
+      statusById.toMap, baseBuckets))
   }
 
-  /** Driver-side absorb of a classified batch: in-batch cap + admit-
+  /** Driver-side absorb of a batch's `new` rows: in-batch cap + admit-
     * under-cap folded locally (same discipline as Lsh.postings +
     * Lsh.admitUnderCap over the same standing counts), deltas appended
-    * as LocalRelations — ZERO Spark jobs. */
-  private def driverAbsorb(c: DriverClassified): Unit = {
-    val lv = localView()
-    val newRows = c.rows.filter(r => c.statusById(r.id.longValue()) == "new")
+    * as LocalRelations and to the view — no Spark job when the view holds
+    * the base. `classified` is classify's pruned base read of the batch's
+    * buckets; without it (and without the base in the view) the counts
+    * come from the same pruned read over the new postings' buckets.
+    * Returns false, having changed nothing, when that read is over its
+    * bound (the caller falls back to the distributed absorb). */
+  private def driverAbsorb(newRows: Array[BatchRow],
+                           classified: Option[Map[(Int, Long, Long), BaseBucket]]): Boolean = {
+    val lv = view
     if (newRows.nonEmpty) {
       val newCapped = cappedLocalPostings(newRows.iterator.collect {
         case r if r.sig != null => (r.id.longValue(), r.sig)
       })
       val cap = meta.maxBucketSize
+      // each bucket's occupancy counted ONCE: from the view alone when it
+      // holds the base, else the pruned base read plus the delta-only view
+      val base =
+        if (cap <= 0 || lv.holdsBase) Map.empty[(Int, Long, Long), BaseBucket]
+        else classified.orElse(prunedBaseBuckets(newCapped.keys.toArray)) match {
+          case Some(m) => m
+          case None => return false
+        }
       val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Long)]
       newCapped.foreach { case (t, ids) =>
         val keep =
           if (cap <= 0) ids
           else {
-            val standCnt = c.standingByTriple.get(t).map(_.length.toLong).getOrElse(0L) +
-              lv.postingsByTriple.get(t).map(_.length.toLong).getOrElse(0L)
+            val standCnt = base.get(t).fold(0L)(_.n.toLong) + lv.bucketCount(t)
             // ids are already cap-smallest-sorted; rank rn admits while
             // standCnt + rn <= cap (Lsh.admitUnderCap's filter)
             val room = math.max(0L, cap.toLong - standCnt)
@@ -748,7 +932,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         newRows.map(_.h),
         newRows.map(r => (r.id.longValue(), r.sig)),
         admitted.toArray)
-      import org.apache.spark.sql.Row
       deltaHashes += localDf(d.hashes.map(Row(_)).toSeq, hashSchema)
       deltaSigs += localDf(
         d.sigs.map { case (id, sig) =>
@@ -765,6 +948,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     if (deltaBatches >= compactEveryBatches) {
       if (compactInBackground) startBackgroundCompaction() else compact()
     }
+    true
   }
 
   def currentMeta: Meta = meta
@@ -871,7 +1055,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
                textCol: String = "text"): DataFrame = {
     maybeSwapCompacted()
     val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
+      .flatMap(driverClassify)
     fast match {
       case Some(c) => renameId(c.statuses, idCol)
       case None => classifyKeepingSigs(batchDocs, idCol, textCol)._3
@@ -896,13 +1080,13 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * difference is that the compaction swap is skipped (the caller swaps
     * under its write lock via [[swapCompactedIfReady]]), so no standing
     * state mutates on this path. The shared state it reads is safe
-    * under concurrency: localView is init-synchronized, the push-conf
-    * window is reference-counted, and deltas/meta/base tables only
-    * mutate under the caller's exclusive lock. */
+    * under concurrency: the driver view is read-only here, the push-conf
+    * window is reference-counted, and the view, deltas, meta and base
+    * tables only change under the caller's exclusive lock. */
   def classifyShared(batchDocs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
+      .flatMap(driverClassify)
     fast match {
       case Some(c) => renameId(c.statuses, idCol)
       case None => classifyKeepingSigs(batchDocs, idCol, textCol, swap = false)._3
@@ -972,10 +1156,23 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * (hashes, signatures, and postings APPENDED UNDER THE CAP), so a
     * later batch repeating them classifies as a duplicate. `statuses` is
     * [[classify]]'s output for this batch. Per-batch cost is O(batch):
-    * only the increments are checkpointed, never the standing state. */
+    * only the increments are checkpointed, never the standing state. A
+    * trickle batch absorbs on the driver like [[classifyAbsorb]] (the
+    * caller's statuses collected — no job for classify's own
+    * LocalRelation output), so later batches stay on the fast path. */
   def absorb(batchDocs: DataFrame, statuses: DataFrame,
-             idCol: String = "doc_id", textCol: String = "text"): Unit =
-    absorbImpl(batchDocs, statuses, idCol, textCol, precomputedSigs = null)
+             idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    maybeSwapCompacted()
+    val onDriver = collectBatch(batchDocs, idCol, textCol).exists { rows =>
+      // a row is absorbed iff some status row of its id says 'new' (the
+      // distributed path's left-semi join)
+      val newIds = statuses.filter(col("status") === "new")
+        .select(col(idCol).cast("long")).collect()
+        .iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+      driverAbsorb(rows.filter(r => newIds.contains(r.id.longValue())), None)
+    }
+    if (!onDriver) absorbImpl(batchDocs, statuses, idCol, textCol, precomputedSigs = null)
+  }
 
   private def absorbImpl(batchDocs: DataFrame, statuses: DataFrame,
                          idCol: String, textCol: String,
@@ -1018,7 +1215,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       // probes fall back to the Spark plan until a compaction folds it
       deltasAllLocal = false
       localDeltas.clear()
-      lvCache = null
+      resetView(false)
       meta = meta.copy(nDocs = meta.nDocs + nNew)
     }
     deltaBatches += 1
@@ -1035,10 +1232,11 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
                      textCol: String = "text"): DataFrame = {
     maybeSwapCompacted()
     val fast = collectBatch(batchDocs, idCol, textCol)
-      .flatMap(driverClassify(_, idCol))
+      .flatMap(driverClassify)
     fast match {
       case Some(c) =>
-        driverAbsorb(c)
+        driverAbsorb(c.rows.filter(r => c.statusById(r.id.longValue()) == "new"),
+          Some(c.baseBuckets))
         renameId(c.statuses, idCol)
       case None =>
         val (b, batchSigs, st) = classifyKeepingSigs(batchDocs, idCol, textCol)
@@ -1058,7 +1256,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     var thread: Thread = _
   }
-  private var pendingCompaction: Option[PendingCompaction] = None
+  // volatile: compactionReady is read by serving threads outside the
+  // corpus lock
+  @volatile private var pendingCompaction: Option[PendingCompaction] = None
 
   /** Write the three standing tables for `grown` under its version dir.
     * Pure write — no mutable state touched (safe off-thread). Each
@@ -1178,16 +1378,23 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         deltaHashes.remove(0, p.nDeltas)
         deltaSigs.remove(0, p.nDeltas)
         deltaIndex.remove(0, p.nDeltas)
-        if (deltasAllLocal && p.nDeltas <= localDeltas.length)
+        baseDocs = p.grown.nDocs
+        if (deltasAllLocal && p.nDeltas <= localDeltas.length) {
           localDeltas.remove(0, p.nDeltas)
-        else {
+          // the new base is the old one plus exactly the folded deltas, so
+          // a view holding the base already holds the new one — nothing
+          // reloads. A delta-only view (or a base now past the gate) drops
+          // the folded deltas, which the pruned reads now find on disk.
+          if (!(view.holdsBase && wantReplica)) resetView(false)
+        } else {
           // a distributed-delta epoch folded away: the remaining deltas
           // (if any) may still be distributed — stay on the Spark path
-          // until the buffers empty, then the local fold resumes
+          // until the buffers empty, then the local fold resumes (over a
+          // fresh read of the base, under the gate)
           localDeltas.clear()
           deltasAllLocal = deltaHashes.isEmpty
+          resetView(deltasAllLocal && wantReplica)
         }
-        lvCache = null
         deleteRecursively(new java.io.File(old))
       }
     case _ => ()
@@ -1221,13 +1428,18 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     writeVersion(grown, fullHashes, fullSigs, fullIndex)
     writeMeta(dir, grown)
     val old = vdir
+    // as at a swap: a view holding the base and every delta already holds
+    // the compacted base
+    val viewCurrent = deltasAllLocal && view.holdsBase
     meta = grown
     version = grown.version
+    baseDocs = grown.nDocs
     baseHashes = spark.read.parquet(s"$vdir/hashes")
     baseSigs = spark.read.parquet(s"$vdir/sigs")
     baseIndex = spark.read.parquet(s"$vdir/index")
     deltaHashes.clear(); deltaSigs.clear(); deltaIndex.clear()
-    localDeltas.clear(); lvCache = null; deltasAllLocal = true
+    localDeltas.clear(); deltasAllLocal = true
+    if (!(viewCurrent && wantReplica)) resetView(wantReplica)
     deltaBatches = 0
     deleteRecursively(new java.io.File(old))
   }

@@ -229,4 +229,33 @@ class QueryServiceSpec extends SparkSpec {
       lshEng.close()
     }
   }
+
+  test("stop leaves no non-daemon handler thread holding the JVM open") {
+    val corpus = spark.read.parquet(
+      getClass.getResource("/reference_corpus.parquet").getPath)
+    val eng = QueryEngine.build(corpus,
+      mp = graft.core.MinHashPipeline.Params(kShingle = 1, byWord = true)).warmUp()
+    val qSig = longs("query_sig")
+    val before = Thread.getAllStackTraces.keySet.asScala.toSet
+    val server = QueryService.serve(eng, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      // several concurrent posts, so the pool holds more than one thread
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      try {
+        val fs = (0 until 8).map { _ =>
+          pool.submit(() => post(port, s"""{"vector":[${qSig.mkString(",")}],"k":5}"""))
+        }
+        fs.foreach(f => assert(f.get()._1 == 200))
+      } finally pool.shutdown()
+      assert(pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      server.stop(0)
+      eng.close()
+    }
+    val lingering = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon && !before(t))
+    assert(lingering.isEmpty,
+      s"non-daemon threads left after stop: ${lingering.map(_.getName).mkString(", ")}")
+  }
 }

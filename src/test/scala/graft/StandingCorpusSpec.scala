@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Lsh
 import graft.operators.{Dedup, StandingCorpus}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -32,10 +32,90 @@ class StandingCorpusSpec extends SparkSpec {
     df.select("doc_id", "status").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
 
+  /** `body`'s result and the Spark jobs it started, on its thread or the
+    * threads it spawned (counted by a job group they inherit; a marker
+    * job flushes the listener queue before the count is read). */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    val group = s"standing-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def postings(sc: StandingCorpus): Seq[(Long, Int, Long, Long)] =
+    sc.fullIndex.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+      .sorted.toSeq
+
+  private def assertSamePostings(a: StandingCorpus, b: StandingCorpus, what: String): Unit = {
+    val (pa, pb) = (postings(a), postings(b))
+    val (onlyA, onlyB) = (pa.diff(pb).size, pb.diff(pa).size)
+    assert(onlyA == 0 && onlyB == 0, s"$what: $onlyA postings only in one, $onlyB only in the other")
+  }
+
+  private def words(tag: String): Seq[String] = (0 until 30).map(w => s"$tag$w")
+  /** `tag`'s 30-word text with its first `n` words replaced: Jaccard
+    * (30 - n) / (30 + n) to the original, so n = 3..6 (0.82..0.67) stays
+    * under the 0.9 threshold of [[cappedCorpus]] while sharing many LSH
+    * buckets with it. */
+  private def variant(tag: String, n: Int, mark: String): String =
+    ((0 until n).map(j => s"$mark$j") ++ words(tag).drop(n)).mkString(" ")
+
+  /** mkDocs' near-dup families plus buckets at every occupancy a cap of 3
+    * can see: five copies of one text (over cap), two of another, one of
+    * a third. */
+  private def cappedCorpus: DataFrame =
+    mkDocs(0L until 60L).unionByName(
+      ((100L until 105L).map(i => (i, words("c").mkString(" "))) ++
+        Seq((105L, words("d").mkString(" ")), (106L, words("d").mkString(" ")),
+          (107L, words("e").mkString(" ")))).toDF("doc_id", "text"))
+
+  private def buildCapped(lsh: Lsh.Params): StandingCorpus =
+    StandingCorpus.build(cappedCorpus, null, tmpDir(), threshold = 0.9, lsh = lsh)
+
+  /** Five trickle batches with monotone ids: exact and near copies of
+    * standing docs, new docs, duplicate batch ids, null texts, an
+    * in-batch pair, and new variants that share buckets with standing
+    * and absorbed docs at every occupancy. */
+  private def trickleBatches: Seq[DataFrame] = {
+    val base = mkDocs(Seq(0L, 5L, 10L)).select(col("text")).as[String].collect()
+    def w(tag: String) = words(tag).mkString(" ")
+    Seq(
+      Seq((1000L, base(0)), (1001L, base(1).split(" ").dropRight(1).mkString(" ") + " y1"),
+        (1002L, w("f")), (1002L, w("f")), (1003L, variant("c", 3, "va")),
+        (1004L, variant("d", 3, "vb")), (1005L, null)),
+      Seq((1010L, w("g")), (1011L, w("g")), (1012L, variant("e", 4, "vc")),
+        (1013L, variant("f", 3, "vd")), (1014L, variant("d", 5, "ve")), (1015L, null)),
+      Seq((1020L, variant("g", 3, "vf")), (1021L, variant("g", 4, "vg")), (1022L, w("f")),
+        (1023L, w("c")), (1024L, variant("c", 5, "vh")), (1025L, variant("d", 4, "vi"))),
+      Seq((1030L, variant("c", 4, "vj")), (1031L, variant("e", 3, "vk")),
+        (1032L, variant("g", 5, "vl")), (1033L, base(2)), (1034L, variant("d", 6, "vm"))),
+      Seq((1040L, variant("f", 5, "vn")), (1041L, variant("c", 6, "vo")), (1042L, w("h")),
+        (1042L, w("h")), (1043L, variant("e", 5, "vp")))
+    ).map(_.toDF("doc_id", "text"))
+  }
+
   test("trickle classify equals the bulk scan path (exact/near/new + dup batch ids)") {
     val dir = tmpDir()
     val corpus = mkDocs(0L until 200L)
     val sc = StandingCorpus.build(corpus, null, dir)
+    sc.driverReplicaOff = true // the pruned-read fold, as past the replica gate
     // batch: exact copies (re-keyed corpus texts), near-dups (one word
     // changed from a family base), fresh docs, and a DUPLICATE id
     val base = mkDocs(Seq(0L, 5L)).select(col("text")).as[String].collect()
@@ -108,6 +188,7 @@ class StandingCorpusSpec extends SparkSpec {
     val dir = tmpDir()
     val corpus = mkDocs(0L until 3000L)
     val sc = StandingCorpus.build(corpus, null, dir)
+    sc.driverReplicaOff = true // the pruned-read fold, as past the replica gate
     // warm: file listing + first probe compile
     sc.classify(Seq((9000L, "warm up probe text one two three")).toDF("doc_id", "text"))
     val bytesRead = new java.util.concurrent.atomic.AtomicLong
@@ -160,6 +241,7 @@ class StandingCorpusSpec extends SparkSpec {
     val corpus = mkDocs(0L until 200L)
     val sc = StandingCorpus.build(corpus, null, dir)
     sc.keyPushdownOverride = Some(true) // the gate only opens past MaxParts x perPart
+    sc.driverReplicaOff = true // the pruned-read fold, as past the replica gate
     val base = mkDocs(Seq(0L, 5L)).select(col("text")).as[String].collect()
     val batch = Seq(
       (1000L, base(0)),                                               // exact
@@ -302,5 +384,123 @@ class StandingCorpusSpec extends SparkSpec {
     sc.trickleMaxDocs = 1L // force the bulk path
     val bulk = statuses(sc.classify(batch))
     assert(trickle === bulk)
+  }
+
+  test("standing replica: verdicts and admitted postings equal the pruned-read fold") {
+    // capped (over-cap standing buckets, in-batch cap, admit-under-cap
+    // against base and delta counts) and uncapped params, with absorbs
+    // on both sides of a background-compaction swap
+    for (lsh <- Seq(Lsh.Params(maxBucketSize = 3), Lsh.Params(maxBucketSize = 0))) {
+      val on = buildCapped(lsh)
+      val off = buildCapped(lsh)
+      off.driverReplicaOff = true
+      Seq(on, off).foreach { sc =>
+        sc.compactEveryBatches = 2
+        sc.compactInBackground = true
+      }
+      val batches = trickleBatches
+      batches.zipWithIndex.foreach { case (b, i) =>
+        // batch 3 absorbs while (or right after) batch 2's background
+        // compaction builds; batches 4-5 run on the swapped-in version
+        if (i == 3) Seq(on, off).foreach(_.awaitCompaction())
+        assert(statuses(on.classifyAbsorb(b)) === statuses(off.classifyAbsorb(b)),
+          s"batch ${i + 1}, $lsh")
+      }
+      Seq(on, off).foreach(_.awaitCompaction())
+      assert(on.currentVersion >= 2 && off.currentVersion >= 2)
+      assertSamePostings(on, off, s"admitted postings, $lsh")
+      // the swap kept the replica: a later batch still runs no job
+      val again = batches.head
+      val (st, jobs) = jobsIn(statuses(on.classify(again)))
+      assert(jobs === 0, "a swap must not drop the replica")
+      assert(st === statuses(off.classify(again)))
+      assert(st.map(_._2).forall(_ != "new"), s"every doc of a re-posted batch is held: $st")
+    }
+  }
+
+  test("trickle absorb stays on the driver path: classify + absorb, then classifyAbsorb at zero jobs") {
+    val lsh = Lsh.Params(maxBucketSize = 3)
+    val split = buildCapped(lsh)
+    val joint = buildCapped(lsh)
+    val batches = trickleBatches
+    val st1 = split.classify(batches.head)
+    split.absorb(batches.head, st1)
+    assert(statuses(st1) === statuses(joint.classifyAbsorb(batches.head)))
+    assertSamePostings(split, joint, "absorb must admit what classifyAbsorb admits")
+    batches.tail.zipWithIndex.foreach { case (b, i) =>
+      val (st, jobs) = jobsIn(statuses(split.classifyAbsorb(b)))
+      assert(jobs === 0, s"batch ${i + 2} ran $jobs Spark jobs")
+      assert(st === statuses(joint.classifyAbsorb(b)), s"batch ${i + 2}")
+    }
+    assertSamePostings(split, joint, "after batches 2-5")
+  }
+
+  test("driver batch signer equals StandingCorpus.sign (word/char; empty, short and null texts)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261019L)
+    val pieces = Seq("a", "b", "ab", "abc", "é", "日本", "x1", " ", "  ", "\t", "\n")
+    val texts: Seq[String] = (0 until 400).map { i =>
+      i % 10 match {
+        case 0 => null
+        case 1 => ""
+        case 2 => pieces(rnd.nextInt(pieces.size))
+        case _ => Seq.fill(rnd.nextInt(30))(pieces(rnd.nextInt(pieces.size))).mkString
+      }
+    }
+    // an RDD-backed frame: the Catalyst side runs as a codegen job, not
+    // folded into a LocalRelation on the driver
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(texts.zipWithIndex.map { case (t, i) => Row(i.toLong, t) }, 4),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    for (byWord <- Seq(true, false); k <- Seq(1, 3, 5)) {
+      val meta = StandingCorpus.Meta(1, 0L, 16, 16, 16, k, byWord, 32, 128, 5000, 0.5)
+      val catalyst = StandingCorpus.sign(df, meta)
+        .join(df.select(col("doc_id"), md5(col("text")).as("_h")), "doc_id")
+        .collect().map(r => r.getLong(0) ->
+          (if (r.isNullAt(2)) null else r.getString(2), r.getSeq[Long](1)))
+        .toMap
+      texts.zipWithIndex.foreach { case (t, i) =>
+        val (h, sig) = StandingCorpus.signLocal(
+          if (t == null) null else t.getBytes(java.nio.charset.StandardCharsets.UTF_8), k, byWord)
+        val (eh, esig) = catalyst(i.toLong)
+        assert(h === eh, s"md5 of ${Option(t).map(_.take(20))}, k=$k, byWord=$byWord")
+        assert(sig.toSeq === esig, s"sig of ${Option(t).map(_.take(20))}, k=$k, byWord=$byWord")
+      }
+    }
+  }
+
+  test("past the replica gate the trickle fold keeps its pruned reads") {
+    // the gate: the query replica's 2^17 docs and 2^20 (= docs x bands) postings
+    assert(StandingCorpus.replicaFits(32768L, 32) && !StandingCorpus.replicaFits(32769L, 32))
+    assert(StandingCorpus.replicaFits(1L << 17, 4) && !StandingCorpus.replicaFits((1L << 17) + 1, 4))
+    val sc = StandingCorpus.build(mkDocs(0L until 300L), null, tmpDir())
+    val batch = Seq((5000L, mkDocs(Seq(40L)).select(col("text")).as[String].head()),
+      (5001L, words("pg").mkString(" "))).toDF("doc_id", "text")
+    val (onSt, onJobs) = jobsIn(statuses(sc.classify(batch)))
+    assert(onJobs === 0, "under the gate a trickle classify runs no job")
+    sc.driverReplicaOff = true // as a corpus past the gate
+    val (offSt, offJobs) = jobsIn(statuses(sc.classify(batch)))
+    assert(offJobs > 0, "past the gate the base is read through the pruned reads")
+    assert(offSt === onSt)
+    sc.driverReplicaOff = false // reloads the replica
+    val (backSt, backJobs) = jobsIn(statuses(sc.classify(batch)))
+    assert(backJobs === 0 && backSt === onSt)
+  }
+
+  test("a failed parallel build surfaces every writer's error and releases its checkpoints") {
+    // a regular file where the corpus dir's parent should be: all three
+    // table writes fail
+    val blocker = java.io.File.createTempFile("graft-standing-spec", ".file")
+    blocker.deleteOnExit()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](
+      StandingCorpus.build(mkDocs(0L until 20L), null, s"${blocker.getPath}/corpus"))
+    // (Spark attaches its own caller-stacktrace marker as one more)
+    val attached = e.getSuppressed.filterNot(_.getClass.getSimpleName == "OriginalTryStackTraceException")
+    assert(attached.length === 2,
+      s"the two writer threads' errors ride on the thrown one: ${e.getSuppressed.toSeq}")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the signature and postings checkpoints must be released")
   }
 }
