@@ -19,15 +19,19 @@ import java.nio.charset.StandardCharsets
   * [..]}]}`, score-desc, padded with id=-1/score=0.0 to k (O12/O21).
   *
   * Serving shape: a warmed engine answers a single-vector probe from the
-  * driver replica with ZERO Spark jobs, so the handler is a sub-ms
-  * in-process call — the executor default (a cached thread pool) is
-  * plenty; the heavy lifting (index build) happened before `serve`.
-  * Errors mirror the reference's envelope: a malformed body or missing
-  * vector returns `{"error": ...}` (query_service.py:162-163). */
+  * driver replica with ZERO Spark jobs, in-process — served at ~1.5 ms
+  * p50 over HTTP on a 20k-doc index (perfbench `query`, 4-core box) — so
+  * a cached thread pool of handlers is plenty; the heavy lifting (index
+  * build) happened before `serve`. Errors mirror the reference's
+  * envelope (query_service.py:162-163): a malformed body, a missing
+  * vector, a non-integral element or a vector whose length is not the
+  * index's signature width returns 400 `{"error": ...}`, and any other
+  * failure inside a handler returns 500 with the same envelope instead of
+  * dropping the connection. */
 object QueryService {
   // TCP_NODELAY on exchange sockets: without it, small request/response
   // pairs stall on the Nagle + delayed-ACK interaction — measured as a
-  // flat ~50 ms per POST against a sub-ms in-process probe (BenchHttp's
+  // flat ~50 ms per POST against a few-ms in-process probe (BenchHttp's
   // first run: p50 48-56 ms at EVERY concurrency). The JDK server reads
   // this property once, in ServerConfig's static init, so it must be set
   // before the first HttpServer is created — this object owns every
@@ -130,19 +134,22 @@ object QueryService {
     t
   }
 
-  private def handle(engine: QueryEngine, ex: HttpExchange): Unit = {
+  private def errorJson(msg: String): String =
+    s"""{"error":${mapper.writeValueAsString(msg)}}"""
+
+  /** Answer one exchange: 405 unless POST, else `answer(body)`; any
+    * exception `answer` lets escape becomes a 500 envelope, so a client
+    * always receives a response. Error strings are Jackson-serialized:
+    * parser messages can embed quotes/control chars (source excerpts),
+    * which an interpolated envelope would emit as invalid JSON. */
+  private def respond(ex: HttpExchange)(answer: String => (Int, String)): Unit = {
     try {
       val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parse(raw) match {
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((vector, k, maxCand)) =>
-              (200, toJson(engine.query(vector, k, maxCand)))
-          }
+        try {
+          if (ex.getRequestMethod != "POST") (405, errorJson("POST required"))
+          else answer(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+        } catch {
+          case scala.util.control.NonFatal(e) => (500, errorJson(s"internal error: $e"))
         }
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -151,91 +158,75 @@ object QueryService {
     } finally ex.close()
   }
 
-  private def handleVec(engine: VectorEngine, ex: HttpExchange): Unit = {
-    try {
-      val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parseVec(raw) match {
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((vector, k, nprobe, mode)) =>
-              try {
-                val hits = engine.query(vector, k, mode, nprobe)
-                (200, hits.map { case (id, rank) => s"""{"id":$id,"rank":$rank}""" }
-                  .mkString("""{"candidates":[""", ",", "]}"))
-              } catch {
-                // a lean engine refusing a float-rescoring mode, or an
-                // unknown mode: the caller's error, reference envelope
-                case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
-                  (400, s"""{"error":"${e.getMessage.replace('"', '\'')}"}""")
-              }
+  private def handle(engine: QueryEngine, ex: HttpExchange): Unit =
+    respond(ex) { raw =>
+      parse(raw) match {
+        case Left(err) => (400, errorJson(err))
+        case Right((vector, k, maxCand)) =>
+          // QueryEngine.query rejects a vector of the wrong width
+          try (200, toJson(engine.query(vector, k, maxCand)))
+          catch { case e: IllegalArgumentException => (400, errorJson(String.valueOf(e.getMessage))) }
+      }
+    }
+
+  private def handleVec(engine: VectorEngine, ex: HttpExchange): Unit =
+    respond(ex) { raw =>
+      parseVec(raw) match {
+        case Left(err) => (400, errorJson(err))
+        case Right((vector, k, nprobe, mode)) =>
+          try {
+            val hits = engine.query(vector, k, mode, nprobe)
+            (200, hits.map { case (id, rank) => s"""{"id":$id,"rank":$rank}""" }
+              .mkString("""{"candidates":[""", ",", "]}"))
+          } catch {
+            // a lean engine refusing a float-rescoring mode, or an
+            // unknown mode: the caller's error, reference envelope
+            case e @ (_: IllegalStateException | _: IllegalArgumentException) =>
+              (400, errorJson(String.valueOf(e.getMessage)))
           }
-        }
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-    } finally ex.close()
-  }
+      }
+    }
 
   private def handleDedup(standing: graft.operators.StandingCorpus,
                           lock: java.util.concurrent.locks.ReentrantReadWriteLock,
-                          ex: HttpExchange): Unit = {
-    try {
-      val (status, body) =
-        if (ex.getRequestMethod != "POST")
-          (405, """{"error":"POST required"}""")
-        else {
-          val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          parseDedup(raw) match {
-            // Jackson-serialize the error string: parser messages can
-            // embed quotes/control chars (source excerpts), which an
-            // interpolated envelope would emit as invalid JSON
-            case Left(err) =>
-              (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
-            case Right((docs, absorb)) =>
-              val spark = standing.spark
-              val df = spark.createDataFrame(
-                java.util.Arrays.asList(docs.map { case (id, text) =>
-                  org.apache.spark.sql.Row(id, text) }: _*),
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("doc_id",
-                    org.apache.spark.sql.types.LongType, nullable = false),
-                  org.apache.spark.sql.types.StructField("text",
-                    org.apache.spark.sql.types.StringType, nullable = true))))
-              // single-ingest-loop contract for MUTATION: absorbs hold
-              // the write lock exclusively. Classifies are read-only and
-              // share the read lock — concurrent probes no longer queue
-              // behind each other; any completed background compaction
-              // is swapped under the write lock FIRST so the read-locked
-              // path never mutates standing state.
-              val st =
-                if (absorb) {
-                  val w = lock.writeLock(); w.lock()
-                  try standing.classifyAbsorb(df) finally w.unlock()
-                } else {
-                  if (standing.compactionReady) {
-                    val w = lock.writeLock(); w.lock()
-                    try standing.swapCompactedIfReady() finally w.unlock()
-                  }
-                  val r = lock.readLock(); r.lock()
-                  try standing.classifyShared(df) finally r.unlock()
-                }
-              val byId = st.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-              (200, docs.map { case (id, _) =>
-                s"""{"id":$id,"status":"${byId(id)}"}"""
-              }.mkString("""{"statuses":[""", ",", "]}"))
-          }
-        }
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(status, bytes.length.toLong)
-      ex.getResponseBody.write(bytes)
-    } finally ex.close()
-  }
+                          ex: HttpExchange): Unit =
+    respond(ex) { raw =>
+      parseDedup(raw) match {
+        case Left(err) => (400, errorJson(err))
+        case Right((docs, absorb)) =>
+          val spark = standing.spark
+          val df = spark.createDataFrame(
+            java.util.Arrays.asList(docs.map { case (id, text) =>
+              org.apache.spark.sql.Row(id, text) }: _*),
+            org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("doc_id",
+                org.apache.spark.sql.types.LongType, nullable = false),
+              org.apache.spark.sql.types.StructField("text",
+                org.apache.spark.sql.types.StringType, nullable = true))))
+          // single-ingest-loop contract for MUTATION: absorbs hold
+          // the write lock exclusively. Classifies are read-only and
+          // share the read lock — concurrent probes no longer queue
+          // behind each other; any completed background compaction
+          // is swapped under the write lock FIRST so the read-locked
+          // path never mutates standing state.
+          val st =
+            if (absorb) {
+              val w = lock.writeLock(); w.lock()
+              try standing.classifyAbsorb(df) finally w.unlock()
+            } else {
+              if (standing.compactionReady) {
+                val w = lock.writeLock(); w.lock()
+                try standing.swapCompactedIfReady() finally w.unlock()
+              }
+              val r = lock.readLock(); r.lock()
+              try standing.classifyShared(df) finally r.unlock()
+            }
+          val byId = st.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+          (200, docs.map { case (id, _) =>
+            s"""{"id":$id,"status":"${byId(id)}"}"""
+          }.mkString("""{"statuses":[""", ",", "]}"))
+      }
+    }
 
   /** Parse `{"docs":[{"id":n,"text":s}...], "absorb":b}`. */
   private def parseDedup(raw: String): Either[String, (Seq[(Long, String)], Boolean)] =
@@ -309,13 +300,17 @@ object QueryService {
       if (vec == null || !vec.isArray || vec.isEmpty)
         Left("missing or empty vector")
       else {
-        val arr = new Array[Long](vec.size())
-        var i = 0
-        while (i < arr.length) { arr(i) = vec.get(i).asLong(); i += 1 }
+        // asLong() silently coerces "a" to 0 and truncates 1.5 to 1 —
+        // shifted scores, answered 200; reject as parseDedup does ids
+        val bad = (0 until vec.size()).find { i =>
+          !vec.get(i).canConvertToLong || !vec.get(i).canConvertToExactIntegral
+        }
+        val arr = Array.tabulate(vec.size())(vec.get(_).asLong())
         val k = if (root.hasNonNull("k")) root.get("k").asInt(10) else 10
         val mc = if (root.hasNonNull("max_candidates"))
           root.get("max_candidates").asInt(2000) else 2000
-        if (k <= 0) Left("k must be positive") else Right((arr, k, mc))
+        if (bad.isDefined) Left(s"vector[${bad.get}] is not an integral number")
+        else if (k <= 0) Left("k must be positive") else Right((arr, k, mc))
       }
     } catch { case e: Exception => Left(s"malformed JSON: ${e.getMessage}") }
 }

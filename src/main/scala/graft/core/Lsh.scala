@@ -173,11 +173,18 @@ object Lsh {
     * `QueryEngine.warmUp`); probes never trigger the collect. Indexes
     * whose stats exceed [[DriverStatsMaxEntries]] keep the distributed
     * join path — a driver map stops being scale-safe there (at 100 TB the
-    * stats table itself is distributed). Sizing note: the boxed-tuple
-    * Scala Map costs ~200-300 bytes/entry, so a full 2^20-entry map is
-    * ~200-300 MB of driver heap, and the 8-slot LRU bounds the worst case
-    * at ~2 GB — a serving driver should be sized for that, or this
-    * constant lowered. */
+    * stats table itself is distributed). The same bound gates the
+    * postings of the full serving replica ([[warmDriverIndex]]).
+    *
+    * Sizing note: the stats map is a boxed-tuple Scala Map at ~200-300
+    * bytes/entry, so a full 2^20-entry map is ~200-300 MB of driver heap.
+    * The replica's bucket table is open-addressed with two to four slots
+    * per posting, each two key longs, a flag and a reference (~21
+    * bytes), plus 4 bytes per posting in the member arrays and a 16-byte
+    * header per bucket, so 2^20 postings cost at most ~65 MB. The 8-slot
+    * LRU bounds the worst case at ~4 GB of stats maps plus replicas,
+    * signatures included — a serving driver should be sized for that,
+    * or this constant lowered. */
   final val DriverStatsMaxEntries: Long = 1L << 20
 
   /** Ceiling on DISTINCT doc ids the full driver replica
@@ -185,8 +192,9 @@ object Lsh {
     * does not bound the signature collect (a heavily-duplicated corpus
     * caps to few postings while its sigs table stays huge), so the
     * replica also requires the REFERENCED id set — the only docs a probe
-    * can ever surface — to stay under this bound (~130 MB of 128-long
-    * signatures). */
+    * can ever surface — to stay under this bound. The flat layout spends
+    * 8 bytes per signature slot plus 8 bytes per id, so a full replica of
+    * 128-slot signatures is ~129 MiB in two primitive arrays. */
   final val DriverReplicaMaxDocs: Int = 1 << 17
 
   /** Largest batch the capped [[queryBatch]] will collect to the driver
@@ -226,22 +234,66 @@ object Lsh {
   private def driverStats(index: DataFrame): Option[Map[(Int, Long, Long), Long]] =
     statsMapCache.synchronized(Option(statsMapCache.get(index)))
 
-  /** Driver-RESIDENT serving replica of a small index: bucket -> member
-    * ids and id -> signature, the reference's per-worker in-memory tables
-    * (worker_tasks.py:79-117) rebuilt on the driver. A warmed capped
-    * probe over it runs ZERO Spark jobs — candidate lookup, scoring and
-    * top-k are in-process, the reference's own serving architecture — so
-    * single-vector latency drops from the multi-job scheduler floor
-    * (~250 ms) to sub-millisecond. Strictly a fast path: results are
+  /** Driver-RESIDENT serving replica of a small index, the reference's
+    * per-worker in-memory tables (worker_tasks.py:79-117) rebuilt on the
+    * driver over primitive arrays. A warmed capped probe over it runs
+    * ZERO Spark jobs — candidate lookup, scoring and top-k are
+    * in-process, the reference's own serving architecture — so a served
+    * single-vector probe drops from the multi-job scheduler floor
+    * (~250 ms) to about a millisecond. Strictly a fast path: results are
     * bit-identical to [[querySignature]] (same band-prefix cap fold, same
     * m/128 estimated-Jaccard arithmetic, same score-desc/id-asc order),
-    * pinned by QueryEngineSpec. Indexes above [[DriverStatsMaxEntries]]
+    * pinned by LshKernelSpec. Indexes above [[DriverStatsMaxEntries]]
     * postings never build one — at 100 TB the index is disk/cluster
     * resident and probes stay distributed (or go through the bucketed
-    * parquet path). */
+    * parquet path).
+    *
+    * Layout: the referenced ids sorted ascending (a doc's POSITION is its
+    * rank, so position order is id order), every signature in one flat
+    * array at `position * width`, and an open-addressed (key64, key64b)
+    * table whose buckets hold their members' positions ascending. */
   final class DriverIndex private[Lsh] (
-      private[Lsh] val postings: java.util.HashMap[(Long, Long), Array[Long]],
-      private[Lsh] val sigById: java.util.HashMap[Long, Array[Long]])
+      private[Lsh] val ids: Array[Long],
+      private[Lsh] val width: Int,
+      private[Lsh] val sigs: Array[Long],
+      // positions of referenced ids with no signature row (never scored)
+      private[Lsh] val unsigned: java.util.BitSet,
+      private[Lsh] val table: Slots,
+      // table slot -> the bucket's member positions, ascending
+      private[Lsh] val members: Array[Array[Int]]) {
+    private[Lsh] def bucket(key: Long, keyB: Long): Array[Int] = {
+      val s = table.find(key, keyB)
+      if (s < 0) null else members(s)
+    }
+  }
+
+  /** Open-addressed (key64, key64b) slots for up to `n` keys at 25-50%
+    * load, probed linearly from key64's folded low bits (key64 is already
+    * an xxhash, so they spread evenly). */
+  private[Lsh] final class Slots(n: Int) {
+    val mask: Int = (Integer.highestOneBit(math.max(1, 2 * n - 1)) << 1) - 1
+    val keys = new Array[Long](2 * (mask + 1))
+    private val used = new Array[Boolean](mask + 1)
+
+    private def probe(key: Long, keyB: Long): Int = {
+      var s = (key ^ (key >>> 32)).toInt & mask
+      while (used(s) && (keys(2 * s) != key || keys(2 * s + 1) != keyB)) s = (s + 1) & mask
+      s
+    }
+
+    /** The slot (key, keyB) occupies, or -1. */
+    def find(key: Long, keyB: Long): Int = {
+      val s = probe(key, keyB)
+      if (used(s)) s else -1
+    }
+
+    /** The slot of (key, keyB), claimed if absent. */
+    def slot(key: Long, keyB: Long): Int = {
+      val s = probe(key, keyB)
+      if (!used(s)) { used(s) = true; keys(2 * s) = key; keys(2 * s + 1) = keyB }
+      s
+    }
+  }
 
   private val driverIndexCache =
     new java.util.LinkedHashMap[DataFrame, DriverIndex](16, 0.75f, true) {
@@ -252,7 +304,9 @@ object Lsh {
 
   /** Build the driver serving replica if the index is small enough (one
     * collect over the cached postings + one over the cached signatures —
-    * warm-up cost). Returns whether the replica is available. */
+    * warm-up cost). Returns whether the replica is available. A
+    * signature table of mixed widths (or with a null signature) declines
+    * the replica, so its probes go to the probe-cache tier instead. */
   def warmDriverIndex(sigs: DataFrame, index: DataFrame): Boolean = {
     val already = driverIndexCache.synchronized {
       val it = driverIndexCache.entrySet().iterator()
@@ -268,27 +322,67 @@ object Lsh {
       // can be tiny while the sigs table is not, and only docs present in
       // some bucket can ever be candidates — so the replica semi-joins
       // sigs to the postings ids instead of collecting the whole table
-      val referenced = postRows.map(_.getLong(2)).distinct
-      if (referenced.length > DriverReplicaMaxDocs) false
+      val ids = sortedDistinct(postRows.map(_.getLong(2)))
+      if (ids.length > DriverReplicaMaxDocs) false
       else {
-        val posts = new java.util.HashMap[(Long, Long), Array[Long]]()
-        postRows.groupBy(r => (r.getLong(0), r.getLong(1)))
-          .foreach { case (k, rows) =>
-            // keep bucket members in id order: the distributed path's
-            // aggregate is order-insensitive, but determinism here is free
-            posts.put(k, rows.map(_.getLong(2)).sorted)
-          }
         val spark = sigs.sparkSession
         import spark.implicits._
-        val ids = referenced.toSeq.toDF("rid")
-        val sm = new java.util.HashMap[Long, Array[Long]]()
-        sigs.join(broadcast(ids), sigs("doc_id") === col("rid"), "left_semi")
+        val sigRows = sigs
+          .join(broadcast(ids.toSeq.toDF("rid")), sigs("doc_id") === col("rid"), "left_semi")
           .select("doc_id", "sig").collect()
-          .foreach(r => sm.put(r.getLong(0), r.getSeq[Long](1).toArray))
-        driverIndexCache.synchronized(driverIndexCache.put(index, new DriverIndex(posts, sm)))
-        true
+        val width = sigRows.headOption.filterNot(_.isNullAt(1)).map(_.getSeq[Long](1).length)
+          .getOrElse(0)
+        if (sigRows.exists(r => r.isNullAt(1) || r.getSeq[Long](1).length != width)) false
+        else {
+          val flat = new Array[Long](ids.length * width)
+          val unsigned = new java.util.BitSet(ids.length)
+          unsigned.set(0, ids.length)
+          sigRows.foreach { r =>
+            val p = java.util.Arrays.binarySearch(ids, r.getLong(0))
+            r.getSeq[Long](1).copyToArray(flat, p * width)
+            unsigned.clear(p)
+          }
+          val (table, members) = bucketTable(ids, postRows)
+          val di = new DriverIndex(ids, width, flat, unsigned, table, members)
+          driverIndexCache.synchronized(driverIndexCache.put(index, di))
+          true
+        }
       }
     }
+  }
+
+  /** Sort `xs` in place and return its distinct values, ascending. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var n = 0
+    var i = 0
+    while (i < xs.length) {
+      if (n == 0 || xs(i) != xs(n - 1)) { xs(n) = xs(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(xs, n)
+  }
+
+  /** Group `(key64, key64b, id)` postings into the replica's bucket
+    * table (slots for one bucket per posting), each bucket's member
+    * positions ascending. */
+  private def bucketTable(ids: Array[Long], postRows: Array[org.apache.spark.sql.Row])
+      : (Slots, Array[Array[Int]]) = {
+    val table = new Slots(postRows.length)
+    val slotOfPosting = postRows.map(r => table.slot(r.getLong(0), r.getLong(1)))
+    val count = new Array[Int](table.mask + 1)
+    slotOfPosting.foreach(s => count(s) += 1)
+    val members = count.map(c => if (c == 0) null else new Array[Int](c))
+    java.util.Arrays.fill(count, 0)
+    var i = 0
+    while (i < postRows.length) {
+      val s = slotOfPosting(i)
+      members(s)(count(s)) = java.util.Arrays.binarySearch(ids, postRows(i).getLong(2))
+      count(s) += 1
+      i += 1
+    }
+    members.foreach(m => if (m != null) java.util.Arrays.sort(m))
+    (table, members)
   }
 
   def driverIndexFor(index: DataFrame): Option[DriverIndex] =
@@ -322,61 +416,105 @@ object Lsh {
   /** Zero-job capped probe against a driver replica: the same band-prefix
     * cap fold, candidate dedup, m/128 estimated-Jaccard and
     * (score desc, id asc) top-k as the distributed capped path — executed
-    * in-process. `qpRows` is the query's (band, key64, key64b) triple list
-    * (from the jobless [[queryPostings]] LocalRelation collect).
+    * in-process over the replica's primitive arrays. `qpRows` is the
+    * query's (band, key64, key64b) triple list ([[queryKeysLocal]]).
     * Returns (id, score, 10-slot preview), best first. */
   def queryDriverIndex(di: DriverIndex, qpRows: Array[(Int, Long, Long)],
                        querySig: Array[Long], k: Int,
                        maxCandidates: Int): Seq[(Long, Double, Seq[Long])] = {
-    val candSet = foldCandidates(qpRows, maxCandidates,
-      (key, keyB) => di.postings.get((key, keyB)))
-    scoreTopK(candSet, di.sigById.get, querySig, k)
+    // candidate positions, de-duplicated through a per-probe bitset
+    val seen = new Array[Long]((di.ids.length + 63) >>> 6)
+    val found = new scala.collection.mutable.ArrayBuilder.ofInt
+    foldBands(qpRows, maxCandidates) { (key, keyB) =>
+      val ps = di.bucket(key, keyB)
+      if (ps == null) 0
+      else {
+        var j = 0
+        while (j < ps.length) {
+          val p = ps(j)
+          if ((seen(p >>> 6) & (1L << p)) == 0) {
+            seen(p >>> 6) |= 1L << p
+            found += p
+          }
+          j += 1
+        }
+        ps.length
+      }
+    }
+    val cands = found.result()
+    java.util.Arrays.sort(cands)
+    val w = di.width
+    val top = new TopK(k, cands.length)
+    var j = 0
+    while (j < cands.length) {
+      val p = cands(j)
+      if (!di.unsigned.get(p)) top.offer(score(matchCount(querySig, di.sigs, p * w, w), w), p)
+      j += 1
+    }
+    top.result((p, s) => (di.ids(p), s, di.sigs.slice(p * w, p * w + math.min(10, w)).toSeq))
   }
 
-  /** The shared capped band-prefix fold: walk buckets in band order,
-    * accumulating members until `maxCandidates` accumulate (inclusive of
-    * the crossing bucket — the same takeWhile the distributed plan folds).
-    * `lookup` returns a bucket's member ids or null when the bucket is
-    * empty/absent. */
-  private def foldCandidates(qpRows: Array[(Int, Long, Long)], maxCandidates: Int,
-                             lookup: (Long, Long) => Array[Long]): java.util.TreeSet[java.lang.Long] = {
+  /** The capped band-prefix fold both driver tiers share: visit the
+    * query's buckets in band order until `maxCandidates` members
+    * accumulate (inclusive of the crossing bucket — the same takeWhile
+    * the distributed plan folds; `maxCandidates <= 0` visits every band).
+    * `visit` takes a bucket's (key64, key64b) and returns its member
+    * count, 0 when the bucket is absent. */
+  private def foldBands(qpRows: Array[(Int, Long, Long)], maxCandidates: Int)(
+      visit: (Long, Long) => Int): Unit = {
     val byBand = qpRows.sortBy(_._1)
     var before = 0L
-    val candSet = new java.util.TreeSet[java.lang.Long]()
     var i = 0
     while (i < byBand.length && (maxCandidates <= 0 || before < maxCandidates)) {
-      val (_, key, keyB) = byBand(i)
-      val ids = lookup(key, keyB)
-      if (ids != null) {
-        before += ids.length
-        var j = 0
-        while (j < ids.length) { candSet.add(ids(j)); j += 1 }
-      }
+      before += visit(byBand(i)._2, byBand(i)._3)
       i += 1
     }
-    candSet
   }
 
-  /** The shared in-process scoring + top-k: identical arithmetic to
-    * Kernels.estJaccard (integer match count, ONE double division by 128 —
-    * an exact dyadic rational) and the distributed (score desc, id asc)
-    * order. `sigOf` returns a candidate's signature or null (skipped). */
-  private def scoreTopK(candSet: java.util.TreeSet[java.lang.Long],
-                        sigOf: Long => Array[Long], querySig: Array[Long],
-                        k: Int): Seq[(Long, Double, Seq[Long])] = {
-    val scored = new scala.collection.mutable.ArrayBuffer[(Long, Double)](candSet.size())
-    val it = candSet.iterator()
-    while (it.hasNext) {
-      val id = it.next().longValue()
-      val sig = sigOf(id)
-      if (sig != null) {
-        var eq = 0; var d = 0
-        while (d < sig.length) { if (sig(d) == querySig(d)) eq += 1; d += 1 }
-        scored += ((id, eq.toDouble / sig.length.toDouble))
+  /** Slots where the `width`-long signature at `off` in `sigs` equals
+    * `q` position by position: the integer half of every driver-side
+    * estimated Jaccard. */
+  private[graft] def matchCount(q: Array[Long], sigs: Array[Long], off: Int, width: Int): Int = {
+    var eq = 0
+    var d = 0
+    while (d < width) { if (sigs(off + d) == q(d)) eq += 1; d += 1 }
+    eq
+  }
+
+  /** Estimated Jaccard of a match count, Kernels.estJaccard's arithmetic:
+    * ONE double division by the width (an exact dyadic rational at 128
+    * perms), 0.0 for an empty signature. */
+  private[graft] def score(matches: Int, width: Int): Double =
+    if (width == 0) 0.0 else matches.toDouble / width
+
+  /** The k best (score desc, slot asc) of a scan that offers at most
+    * `offers` slots in ascending order. A later slot displaces a kept one
+    * only on a strictly greater score, so when slot order is id order the
+    * result is exactly the distributed plan's (score desc, id asc) top-k. */
+  private final class TopK(k: Int, offers: Int) {
+    private val cap = math.max(0, math.min(k, offers))
+    private val scores = new Array[Double](cap)
+    private val slots = new Array[Int](cap)
+    private var n = 0
+
+    def offer(score: Double, slot: Int): Unit =
+      if (n < cap || (cap > 0 && score > scores(cap - 1))) {
+        if (n == cap) n -= 1
+        // insert after every kept entry scoring at least as high
+        var lo = 0
+        var hi = n
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (scores(mid) >= score) lo = mid + 1 else hi = mid
+        }
+        System.arraycopy(scores, lo, scores, lo + 1, n - lo)
+        System.arraycopy(slots, lo, slots, lo + 1, n - lo)
+        scores(lo) = score
+        slots(lo) = slot
+        n += 1
       }
-    }
-    scored.sortBy { case (id, s) => (-s, id) }.take(k)
-      .map { case (id, s) => (id, s, sigOf(id).take(10).toSeq) }.toSeq
+
+    def result[A](entry: (Int, Double) => A): Seq[A] = (0 until n).map(i => entry(slots(i), scores(i)))
   }
 
   /** LRU serving cache for capped single probes on indexes ABOVE the full
@@ -392,8 +530,8 @@ object Lsh {
     * bounded by [[ProbeCacheMaxPostings]] resident posting slots and
     * [[ProbeCacheMaxSigs]] signatures (~24 MB + ~135 MB), independent of
     * index size — driver memory stays flat at any scale. Results are
-    * bit-identical to the distributed capped probe (same fold, same
-    * scoring — QueryEngineSpec pins it): an absent bucket is stored as an
+    * bit-identical to the distributed capped probe (the replica's fold,
+    * scoring and top-k — LshKernelSpec pins it): an absent bucket is stored as an
     * explicit empty array, so absent-because-empty never aliases
     * absent-because-not-fetched.
     *
@@ -603,10 +741,14 @@ object Lsh {
       val ids = { val r = resident.get(t); if (r != null) r else fetched.get(t) }
       byTriple.put((t._2, t._3), ids)
     }
-    val cands = foldCandidates(probeRows, maxCandidates, (key, keyB) => {
-      val ids = byTriple.get((key, keyB))
-      if (ids == null || ids.isEmpty) null else ids
-    })
+    val cands = {
+      val found = new scala.collection.mutable.ArrayBuilder.ofLong
+      foldBands(probeRows, maxCandidates) { (key, keyB) =>
+        val ids = byTriple.get((key, keyB))
+        if (ids == null) 0 else { found.addAll(ids); ids.length }
+      }
+      sortedDistinct(found.result())
+    }
     // per-probe signature overlay: scoring reads ONLY this map, so LRU
     // eviction (by this probe or a racing one) can never silently drop a
     // candidate. Resident lookups under the monitor; the miss fetch — a
@@ -614,9 +756,7 @@ object Lsh {
     val probeSigs = new java.util.HashMap[Long, Array[Long]]()
     val missingIds = pc.synchronized {
       val b = Array.newBuilder[Long]
-      val cit = cands.iterator()
-      while (cit.hasNext) {
-        val id = cit.next().longValue()
+      cands.foreach { id =>
         val s = pc.sigsById.get(id)
         if (s != null) probeSigs.put(id, s) else b += id
       }
@@ -635,7 +775,16 @@ object Lsh {
         }
       }
     }
-    scoreTopK(cands, probeSigs.get, querySig, k)
+    // the replica's scoring and top-k over the sorted distinct ids: slot
+    // order is id order here too
+    val top = new TopK(k, cands.length)
+    var i = 0
+    while (i < cands.length) {
+      val sig = probeSigs.get(cands(i))
+      if (sig != null) top.offer(score(matchCount(querySig, sig, 0, sig.length), sig.length), i)
+      i += 1
+    }
+    top.result((i, s) => (cands(i), s, probeSigs.get(cands(i)).take(10).toSeq))
   }
 
   /** Allowed-band whitelist from per-(group, band) bucket sizes: for each

@@ -626,16 +626,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     }
   }
 
-  /** Driver twin of Kernels.estJaccard (the est_jaccard expression):
-    * positional equality count over the signature, one double division. */
-  private def estJaccardLocal(a: Array[Long], b: Array[Long]): Double = {
-    val n = a.length
-    if (n == 0) return 0.0
-    var eq = 0; var i = 0
-    while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-
   /** Driver twin of the Spark-side partition-bucket expressions (pbSig /
     * pbIdx): xxhash64 of a long via the same XXH64 kernel Catalyst
     * codegen calls. */
@@ -875,7 +865,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     def isNear(bid: Long): Boolean = candByBid.get(bid).exists { cands =>
       val bsigs = sigsByBid.getOrElse(bid, Nil)
       cands.exists(cid => sigsOf(cid).exists(cs =>
-        bsigs.exists(bs => estJaccardLocal(bs, cs) >= thr)))
+        bsigs.exists(bs => Lsh.score(Lsh.matchCount(bs, cs, 0, bs.length), bs.length) >= thr)))
     }
     val statusById = scala.collection.mutable.HashMap.empty[Long, String]
     val stRows = rows.map { r =>

@@ -38,13 +38,14 @@ class QueryEngineSpec extends SparkSpec {
     eng.close()
   }
 
-  test("driver-stats capped probe equals the distributed stats-join probe") {
+  test("warmed replica probe equals the un-warmed engine's probe-cache probe") {
     val docs = spark.read.parquet(s"$testDataDir/documents.parquet")
-    // un-warmed engine: capped probes take the stats-JOIN path
+    // un-warmed engine: capped probes go through the LRU probe cache
+    // (LshKernelSpec pins both tiers to the Catalyst plan itself)
     val cold = QueryEngine.build(docs,
       mp = graft.core.MinHashPipeline.Params(kShingle = 3))
-    // warmed engine over the same corpus: capped probes fold the band
-    // prefix from the DRIVER map with zero stats jobs
+    // warmed engine over the same corpus: capped probes run on the
+    // driver replica with zero Spark jobs
     val warm = QueryEngine.build(docs,
       mp = graft.core.MinHashPipeline.Params(kShingle = 3)).warmUp()
     for (qid <- Seq(0L, 7L, 42L)) {

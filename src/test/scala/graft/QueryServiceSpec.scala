@@ -72,6 +72,59 @@ class QueryServiceSpec extends SparkSpec {
     }
   }
 
+  test("POST /query rejects malformed vectors with a 400 envelope") {
+    val corpus = spark.read.parquet(
+      getClass.getResource("/reference_corpus.parquet").getPath)
+    val eng = QueryEngine.build(corpus,
+      mp = graft.core.MinHashPipeline.Params(kShingle = 1, byWord = true)).warmUp()
+    val server = QueryService.serve(eng, port = 0)
+    try {
+      val port = server.getAddress.getPort
+      val qSig = longs("query_sig")
+      def rejected(vector: Seq[String], why: String): Unit = {
+        val (st, body) = post(port, s"""{"vector":[${vector.mkString(",")}],"k":5}""")
+        assert(st == 400 && mapper.readTree(body).get("error").asText().contains(why),
+          s"$st $body")
+      }
+      // a short vector's bands hit real buckets (it used to throw in the
+      // scoring loop and drop the connection); a long one was answered 200
+      rejected(qSig.take(127).map(_.toString), "127 elements")
+      rejected((qSig ++ Seq(1L, 2L)).map(_.toString), "130 elements")
+      // "a" used to coerce to 0 and 1.5 to truncate to 1, both answered 200
+      rejected("\"a\"" +: qSig.tail.map(_.toString), "vector[0]")
+      rejected(qSig.init.map(_.toString) :+ "1.5", "vector[127]")
+      // the well-formed vector still answers
+      assert(post(port, s"""{"vector":[${qSig.mkString(",")}],"k":5}""")._1 == 200)
+    } finally {
+      server.stop(0)
+      eng.close()
+    }
+  }
+
+  test("a failure inside the /query handler answers 500 with the error envelope") {
+    import spark.implicits._
+    // a corrupt saved index: doc 2's signature is two slots wider than the
+    // index's 128, so the replica declines and the probe cache's scoring
+    // fails on it — the client must still get a response
+    val rnd = new scala.util.Random(3)
+    val sig = Seq.fill(128)(rnd.nextLong(1L << 40))
+    val sigs = Seq(1L -> sig, 2L -> (sig ++ Seq(7L, 8L))).toDF("doc_id", "sig")
+    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt-index").toString
+    sigs.write.parquet(s"$dir/signatures")
+    graft.core.Lsh.postings(sigs, "doc_id", "sig").write.parquet(s"$dir/postings")
+    val eng = QueryEngine.load(spark, dir).warmUp()
+    assert(graft.core.Lsh.driverIndexFor(eng.index).isEmpty)
+    val server = QueryService.serve(eng, port = 0)
+    try {
+      val (st, body) = post(server.getAddress.getPort, s"""{"vector":[${sig.mkString(",")}],"k":5}""")
+      assert(st == 500, body)
+      assert(mapper.readTree(body).get("error").asText().startsWith("internal error"), body)
+    } finally {
+      server.stop(0)
+      eng.close()
+    }
+  }
+
   test("concurrent mixed hot/cold load returns bit-identical responses (round 12)") {
     // the BenchHttp scenario at spec scale: an engine ABOVE warm-up's
     // replica path is not forced — use an un-warmed engine so probes
