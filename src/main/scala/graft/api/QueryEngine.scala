@@ -29,17 +29,21 @@ final class QueryEngine private (
     private val releaseBuildScratch: () => Unit = () => ()) {
   import QueryEngine.Candidate
 
-  /** Warm the caches (O22 cluster warm-up: the eager `postings.count`),
-    * including the bucket-stats table capped probes consult — and, for
-    * indexes under `Lsh.DriverStatsMaxEntries` postings, the driver-side
-    * serving replica (bucket members + signatures) that answers
+  /** Warm the caches (O22 cluster warm-up: the eager `postings.count`)
+    * and the driver-side state capped probes fold their band prefix
+    * from. An index within the replica bounds (`Lsh.DriverStatsMaxEntries`
+    * postings, `Lsh.DriverReplicaMaxDocs` referenced docs) gets the
+    * serving replica (bucket table + signatures), which answers
     * single-vector probes with ZERO Spark jobs, the reference's own
-    * in-memory serving shape. */
+    * in-memory serving shape, and whose bucket table also serves capped
+    * batches. Only when the replica declines are the bucket stats
+    * collected: into a driver bucket-size table when the index has at
+    * most `Lsh.DriverStatsMaxEntries` buckets. */
   def warmUp(): QueryEngine = {
     sigs.count(); index.count()
-    Lsh.warmDriverStats(index); Lsh.warmDriverIndex(sigs, index)
-    // the capped index and its bucket stats are materialized now — the
-    // pre-cap scratch has served its three consumers
+    Lsh.warmDriverIndex(sigs, index) || Lsh.warmDriverStats(index)
+    // the capped index is materialized now — the pre-cap scratch has
+    // served its three consumers
     releaseBuildScratch()
     this
   }

@@ -132,59 +132,70 @@ object Lsh {
         .select("id", "band", "key64", "key64b")
     }
 
-  /** Per-bucket posting counts `(band, key64, key64b, n)` for an index —
-    * the index-build-time stats table every capped probe consults to pick
-    * its band prefix WITHOUT materializing a single candidate row (the
-    * Spark analog of the reference's early exit: it stops reading buckets
-    * once max_candidates accumulate — minhash_lsh.py:95-96). Cached per
-    * index DataFrame instance (identity): both long-lived index holders
-    * (QueryEngine, SparkEntry's postings cache) reuse one stats build.
-    * Bounded LRU (8 indices) — evicted and stopped-session entries are
-    * unpersisted, so a long-lived service that periodically rebuilds its
-    * index does not accumulate cached stats tables. */
-  private val sizeCacheMax = 8
-  private val sizeCache =
-    new java.util.LinkedHashMap[DataFrame, DataFrame](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[DataFrame, DataFrame]): Boolean =
-        if (size() > sizeCacheMax) {
-          if (!e.getKey.sparkSession.sparkContext.isStopped)
-            e.getValue.unpersist(blocking = false)
-          true
-        } else false
-    }
-  def bucketSizes(index: DataFrame): DataFrame = sizeCache.synchronized {
-    val it = sizeCache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-    val hit = sizeCache.get(index)
-    if (hit != null) hit
-    else {
-      val built = index.groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n")).cache()
-      sizeCache.put(index, built)
-      built
-    }
+  /** Everything the driver holds for one index, in ONE slot of the
+    * per-index LRU: the cached distributed stats frame ([[bucketSizes]]),
+    * the driver bucket-size table ([[warmDriverStats]], or the replica's
+    * own table when [[warmDriverIndex]] built one), the serving replica
+    * and the probe cache. Fields are set once per warm-up and read
+    * without the LRU's lock. */
+  private final class IndexState {
+    @volatile var stats: DataFrame = _
+    @volatile var sizes: Slots = _
+    @volatile var replica: DriverIndex = _
+    val probeCache = new ProbeCache
   }
 
-  /** DRIVER-resident bucket stats for small-enough indexes: the
-    * (band, key64, key64b) -> n map a capped single probe folds its band
-    * prefix from with ZERO Spark jobs — the exact analog of the
-    * reference's in-process dict lookups + early exit (minhash_lsh.py:
-    * 76-96, where the whole index is driver-local anyway). Collected ONCE
-    * per index at warm-up time ([[warmDriverStats]], called by
-    * `QueryEngine.warmUp`); probes never trigger the collect. Indexes
-    * whose stats exceed [[DriverStatsMaxEntries]] keep the distributed
-    * join path — a driver map stops being scale-safe there (at 100 TB the
-    * stats table itself is distributed). The same bound gates the
-    * postings of the full serving replica ([[warmDriverIndex]]).
+  /** The per-index LRU, keyed on index DataFrame identity (QueryEngine and
+    * SparkEntry's postings cache each hold one instance per index): at
+    * most 8 indexes, so a long-lived service that periodically rebuilds
+    * its index does not accumulate driver state. An evicted record's
+    * stats frame is unpersisted. */
+  private val states =
+    new java.util.LinkedHashMap[DataFrame, IndexState](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[DataFrame, IndexState]): Boolean =
+        size() > 8 && { release(e.getKey, e.getValue); true }
+    }
+
+  private def release(index: DataFrame, st: IndexState): Unit =
+    if (st.stats != null && !index.sparkSession.sparkContext.isStopped)
+      st.stats.unpersist(blocking = false)
+
+  /** `index`'s record — created when absent if `create`, else null —
+    * after dropping the records of stopped contexts. */
+  private def stateOf(index: DataFrame, create: Boolean): IndexState = states.synchronized {
+    states.entrySet().removeIf(_.getKey.sparkSession.sparkContext.isStopped)
+    if (create) states.computeIfAbsent(index, _ => new IndexState) else states.get(index)
+  }
+
+  /** Per-bucket posting counts `(band, key64, key64b, n)` for an index —
+    * the stats table a capped probe consults to pick its band prefix
+    * WITHOUT materializing a single candidate row (the Spark analog of
+    * the reference's early exit: it stops reading buckets once
+    * max_candidates accumulate — minhash_lsh.py:95-96). Built and cached
+    * once per index, in its LRU record. */
+  def bucketSizes(index: DataFrame): DataFrame = states.synchronized {
+    val st = stateOf(index, create = true)
+    if (st.stats == null)
+      st.stats = index.groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n")).cache()
+    st.stats
+  }
+
+  /** Largest index the driver holds bucket sizes for — the bucket-size
+    * table of [[warmDriverStats]] (at most this many buckets) and the
+    * serving replica of [[warmDriverIndex]] (at most this many postings).
+    * Past it the stats stay distributed: a driver table stops being
+    * scale-safe there (at 100 TB the stats table itself is distributed).
     *
-    * Sizing note: the stats map is a boxed-tuple Scala Map at ~200-300
-    * bytes/entry, so a full 2^20-entry map is ~200-300 MB of driver heap.
-    * The replica's bucket table is open-addressed with two to four slots
-    * per posting, each two key longs, a flag and a reference (~21
-    * bytes), plus 4 bytes per posting in the member arrays and a 16-byte
-    * header per bucket, so 2^20 postings cost at most ~65 MB. The 8-slot
-    * LRU bounds the worst case at ~4 GB of stats maps plus replicas,
-    * signatures included — a serving driver should be sized for that,
-    * or this constant lowered. */
+    * Sizing note: both are the open-addressed [[Slots]] table, at most
+    * 2^21 slots here, each two key longs and an Int count (20 bytes), so a
+    * full table is at most ~40 MB. A replica adds a member-array
+    * reference per slot, 4 bytes per posting and a 16-byte header per
+    * bucket (~70 MB in all at 2^20 postings) plus its signatures (see
+    * [[DriverReplicaMaxDocs]], ~129 MiB). A record without a replica may
+    * instead fill its probe cache (~160 MB, [[ProbeCacheMaxSigs]]). One
+    * LRU slot holds all of an index's driver state, so the 8-slot LRU
+    * bounds the worst case at ~1.6 GB — a serving driver should be sized
+    * for that, or this constant lowered. */
   final val DriverStatsMaxEntries: Long = 1L << 20
 
   /** Ceiling on DISTINCT doc ids the full driver replica
@@ -201,38 +212,33 @@ object Lsh {
     * for the jobless band-prefix fold (≈10 MB of signatures at 128
     * longs/query); bigger batches keep the fully distributed cap plan. */
   final val DriverBatchMaxQueries: Int = 10000
-  private val statsMapCache =
-    new java.util.LinkedHashMap[DataFrame, Map[(Int, Long, Long), Long]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, Map[(Int, Long, Long), Long]]): Boolean =
-        size() > sizeCacheMax
-    }
 
-  /** Collect the index's bucket stats into the driver map if it is small
-    * enough (one count + one collect over the CACHED stats table — warm-up
-    * cost, not probe cost). Returns whether the driver map is available. */
-  def warmDriverStats(index: DataFrame): Boolean = {
-    val already = statsMapCache.synchronized {
-      val it = statsMapCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-      statsMapCache.containsKey(index)
-    }
-    if (already) true
-    else {
+  /** Collect the index's bucket sizes into a driver table if it has at
+    * most [[DriverStatsMaxEntries]] buckets (one count + one collect over
+    * the CACHED stats table — warm-up cost, not probe cost). A warmed
+    * replica already holds one, so this is a no-op after
+    * [[warmDriverIndex]]. Returns whether the driver table is available;
+    * capped [[querySignature]], [[queryBatch]] and [[queryProbeCached]]
+    * then fold their band prefix with no stats job. */
+  def warmDriverStats(index: DataFrame): Boolean =
+    driverSizes(index).isDefined || {
       val stats = bucketSizes(index)
-      if (stats.count() > DriverStatsMaxEntries) false
-      else {
-        val m = stats.collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)) -> r.getLong(3))
-          .toMap
-        statsMapCache.synchronized(statsMapCache.put(index, m))
+      stats.count() <= DriverStatsMaxEntries && {
+        stateOf(index, create = true).sizes = sizeTable(stats)
         true
       }
     }
-  }
 
-  private def driverStats(index: DataFrame): Option[Map[(Int, Long, Long), Long]] =
-    statsMapCache.synchronized(Option(statsMapCache.get(index)))
+  private def driverSizes(index: DataFrame): Option[Slots] =
+    Option(stateOf(index, create = false)).flatMap(st => Option(st.sizes))
+
+  /** A bucket-size table from a stats frame's `(key64, key64b, n)` rows. */
+  private def sizeTable(stats: DataFrame): Slots = {
+    val rows = stats.select("key64", "key64b", "n").collect()
+    val t = new Slots(rows.length)
+    rows.foreach(r => t.add(r.getLong(0), r.getLong(1), r.getLong(2).toInt))
+    t
+  }
 
   /** Driver-RESIDENT serving replica of a small index, the reference's
     * per-worker in-memory tables (worker_tasks.py:79-117) rebuilt on the
@@ -250,8 +256,8 @@ object Lsh {
     *
     * Layout: the referenced ids sorted ascending (a doc's POSITION is its
     * rank, so position order is id order), every signature in one flat
-    * array at `position * width`, and an open-addressed (key64, key64b)
-    * table whose buckets hold their members' positions ascending. */
+    * array at `position * width`, and the index's bucket-size table whose
+    * buckets also hold their members' positions ascending. */
   final class DriverIndex private[Lsh] (
       private[Lsh] val ids: Array[Long],
       private[Lsh] val width: Int,
@@ -259,61 +265,50 @@ object Lsh {
       // positions of referenced ids with no signature row (never scored)
       private[Lsh] val unsigned: java.util.BitSet,
       private[Lsh] val table: Slots,
-      // table slot -> the bucket's member positions, ascending
+      // table slot -> the bucket's member positions, ascending (null: free)
       private[Lsh] val members: Array[Array[Int]]) {
-    private[Lsh] def bucket(key: Long, keyB: Long): Array[Int] = {
-      val s = table.find(key, keyB)
-      if (s < 0) null else members(s)
-    }
+    private[Lsh] def bucket(key: Long, keyB: Long): Array[Int] = members(table.slot(key, keyB))
   }
 
-  /** Open-addressed (key64, key64b) slots for up to `n` keys at 25-50%
-    * load, probed linearly from key64's folded low bits (key64 is already
-    * an xxhash, so they spread evenly). */
+  /** The driver bucket-size table: open-addressed (key64, key64b) slots
+    * for up to `n` buckets at 25-50% load, probed linearly from key64's
+    * folded low bits (key64 is already an xxhash, so they spread evenly),
+    * each holding its bucket's posting count. A bucket's identity is the
+    * key pair alone, as in the replica probe: both keys hash the band. */
   private[Lsh] final class Slots(n: Int) {
     val mask: Int = (Integer.highestOneBit(math.max(1, 2 * n - 1)) << 1) - 1
     val keys = new Array[Long](2 * (mask + 1))
-    private val used = new Array[Boolean](mask + 1)
+    /** Postings per slot's bucket; 0 marks a free slot. */
+    val sizes = new Array[Int](mask + 1)
 
-    private def probe(key: Long, keyB: Long): Int = {
+    /** The slot (key, keyB) occupies, or the free slot it would claim. */
+    def slot(key: Long, keyB: Long): Int = {
       var s = (key ^ (key >>> 32)).toInt & mask
-      while (used(s) && (keys(2 * s) != key || keys(2 * s + 1) != keyB)) s = (s + 1) & mask
+      while (sizes(s) > 0 && (keys(2 * s) != key || keys(2 * s + 1) != keyB)) s = (s + 1) & mask
       s
     }
 
-    /** The slot (key, keyB) occupies, or -1. */
-    def find(key: Long, keyB: Long): Int = {
-      val s = probe(key, keyB)
-      if (used(s)) s else -1
-    }
+    /** Bucket (key, keyB)'s size, 0 when absent. */
+    def size(key: Long, keyB: Long): Int = sizes(slot(key, keyB))
 
-    /** The slot of (key, keyB), claimed if absent. */
-    def slot(key: Long, keyB: Long): Int = {
-      val s = probe(key, keyB)
-      if (!used(s)) { used(s) = true; keys(2 * s) = key; keys(2 * s + 1) = keyB }
+    /** Count `n` >= 1 more postings into bucket (key, keyB); returns its slot. */
+    def add(key: Long, keyB: Long, n: Int): Int = {
+      val s = slot(key, keyB)
+      keys(2 * s) = key
+      keys(2 * s + 1) = keyB
+      sizes(s) += n
       s
     }
   }
 
-  private val driverIndexCache =
-    new java.util.LinkedHashMap[DataFrame, DriverIndex](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, DriverIndex]): Boolean =
-        size() > sizeCacheMax
-    }
-
   /** Build the driver serving replica if the index is small enough (one
     * collect over the cached postings + one over the cached signatures —
-    * warm-up cost). Returns whether the replica is available. A
+    * warm-up cost). Returns whether the replica is available; its bucket
+    * table is then also the index's driver bucket-size table. A
     * signature table of mixed widths (or with a null signature) declines
     * the replica, so its probes go to the probe-cache tier instead. */
-  def warmDriverIndex(sigs: DataFrame, index: DataFrame): Boolean = {
-    val already = driverIndexCache.synchronized {
-      val it = driverIndexCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-      driverIndexCache.containsKey(index)
-    }
-    if (already) true
+  def warmDriverIndex(sigs: DataFrame, index: DataFrame): Boolean =
+    if (driverIndexFor(index).isDefined) true
     else if (index.count() > DriverStatsMaxEntries) false
     else {
       val postRows = index.select("key64", "key64b", "id").collect()
@@ -343,13 +338,13 @@ object Lsh {
             unsigned.clear(p)
           }
           val (table, members) = bucketTable(ids, postRows)
-          val di = new DriverIndex(ids, width, flat, unsigned, table, members)
-          driverIndexCache.synchronized(driverIndexCache.put(index, di))
+          val st = stateOf(index, create = true)
+          st.sizes = table
+          st.replica = new DriverIndex(ids, width, flat, unsigned, table, members)
           true
         }
       }
     }
-  }
 
   /** Sort `xs` in place and return its distinct values, ascending. */
   private def sortedDistinct(xs: Array[Long]): Array[Long] = {
@@ -369,16 +364,14 @@ object Lsh {
   private def bucketTable(ids: Array[Long], postRows: Array[org.apache.spark.sql.Row])
       : (Slots, Array[Array[Int]]) = {
     val table = new Slots(postRows.length)
-    val slotOfPosting = postRows.map(r => table.slot(r.getLong(0), r.getLong(1)))
-    val count = new Array[Int](table.mask + 1)
-    slotOfPosting.foreach(s => count(s) += 1)
-    val members = count.map(c => if (c == 0) null else new Array[Int](c))
-    java.util.Arrays.fill(count, 0)
+    val slotOfPosting = postRows.map(r => table.add(r.getLong(0), r.getLong(1), 1))
+    val members = table.sizes.map(c => if (c == 0) null else new Array[Int](c))
+    val filled = new Array[Int](members.length)
     var i = 0
     while (i < postRows.length) {
       val s = slotOfPosting(i)
-      members(s)(count(s)) = java.util.Arrays.binarySearch(ids, postRows(i).getLong(2))
-      count(s) += 1
+      members(s)(filled(s)) = java.util.Arrays.binarySearch(ids, postRows(i).getLong(2))
+      filled(s) += 1
       i += 1
     }
     members.foreach(m => if (m != null) java.util.Arrays.sort(m))
@@ -386,31 +379,22 @@ object Lsh {
   }
 
   def driverIndexFor(index: DataFrame): Option[DriverIndex] =
-    driverIndexCache.synchronized(Option(driverIndexCache.get(index)))
+    Option(stateOf(index, create = false)).flatMap(st => Option(st.replica))
 
-  /** Test visibility: is a WARMED driver artifact (stats map or full
-    * serving replica — the unbounded-per-index ones) still resident for
-    * `index`? Pins the supersede-evict and close() contracts
-    * (InvarianceSpec). Probe-cache entries are deliberately excluded:
-    * any capped probe against an un-warmed index re-creates one, and
-    * they are residency-bounded by construction. */
-  private[graft] def hasDriverState(index: DataFrame): Boolean =
-    statsMapCache.synchronized(statsMapCache.containsKey(index)) ||
-      driverIndexCache.synchronized(driverIndexCache.containsKey(index))
+  /** Test visibility: does `index` still hold a WARMED driver bucket-size
+    * table (from [[warmDriverStats]], or a serving replica's)? Pins the
+    * supersede-evict and close() contracts (InvarianceSpec). A probe
+    * cache or stats frame alone does not count: any capped probe against
+    * an un-warmed index re-creates them, and both are bounded. */
+  private[graft] def hasDriverState(index: DataFrame): Boolean = driverSizes(index).isDefined
 
-  /** Release every driver-side artifact held for `index` (stats map,
-    * serving replica, cached stats table) — called by
-    * `QueryEngine.close()` so a closed engine's tens-of-MB replica does
-    * not stay pinned on the driver until LRU eviction. */
-  def evictDriverState(index: DataFrame): Unit = {
-    statsMapCache.synchronized(statsMapCache.remove(index))
-    driverIndexCache.synchronized(driverIndexCache.remove(index))
-    probeCaches.synchronized(probeCaches.remove(index))
-    sizeCache.synchronized {
-      val cached = sizeCache.remove(index)
-      if (cached != null && !index.sparkSession.sparkContext.isStopped)
-        cached.unpersist(blocking = false)
-    }
+  /** Release `index`'s LRU record — bucket-size table, serving replica,
+    * probe cache and cached stats frame — called by `QueryEngine.close()`
+    * so a closed engine's tens-of-MB replica does not stay pinned on the
+    * driver until LRU eviction. */
+  def evictDriverState(index: DataFrame): Unit = states.synchronized {
+    val st = states.remove(index)
+    if (st != null) release(index, st)
   }
 
   /** Zero-job capped probe against a driver replica: the same band-prefix
@@ -425,8 +409,8 @@ object Lsh {
     // candidate positions, de-duplicated through a per-probe bitset
     val seen = new Array[Long]((di.ids.length + 63) >>> 6)
     val found = new scala.collection.mutable.ArrayBuilder.ofInt
-    foldBands(qpRows, maxCandidates) { (key, keyB) =>
-      val ps = di.bucket(key, keyB)
+    foldBands(qpRows, maxCandidates) { t =>
+      val ps = di.bucket(t._2, t._3)
       if (ps == null) 0
       else {
         var j = 0
@@ -454,21 +438,23 @@ object Lsh {
     top.result((p, s) => (di.ids(p), s, di.sigs.slice(p * w, p * w + math.min(10, w)).toSeq))
   }
 
-  /** The capped band-prefix fold both driver tiers share: visit the
-    * query's buckets in band order until `maxCandidates` members
-    * accumulate (inclusive of the crossing bucket — the same takeWhile
-    * the distributed plan folds; `maxCandidates <= 0` visits every band).
-    * `visit` takes a bucket's (key64, key64b) and returns its member
-    * count, 0 when the bucket is absent. */
+  /** THE driver band-prefix fold — every driver tier's, and the driver
+    * twin of the distributed [[allowedBandPrefix]]: visit the query's
+    * (band, key64, key64b) rows in band order until `maxCandidates`
+    * members accumulate (inclusive of the crossing bucket;
+    * `maxCandidates <= 0` visits every band). `visit` returns the row's
+    * bucket size, 0 when the bucket is absent (or not known to this
+    * caller). Returns the visited rows, band order. */
   private def foldBands(qpRows: Array[(Int, Long, Long)], maxCandidates: Int)(
-      visit: (Long, Long) => Int): Unit = {
+      visit: ((Int, Long, Long)) => Int): Array[(Int, Long, Long)] = {
     val byBand = qpRows.sortBy(_._1)
     var before = 0L
     var i = 0
     while (i < byBand.length && (maxCandidates <= 0 || before < maxCandidates)) {
-      before += visit(byBand(i)._2, byBand(i)._3)
+      before += visit(byBand(i))
       i += 1
     }
+    byBand.take(i)
   }
 
   /** Slots where the `width`-long signature at `off` in `sigs` equals
@@ -553,21 +539,6 @@ object Lsh {
       new java.util.LinkedHashMap[Long, Array[Long]](256, 0.75f, true)
   }
 
-  private val probeCaches =
-    new java.util.LinkedHashMap[DataFrame, ProbeCache](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[DataFrame, ProbeCache]): Boolean =
-        size() > sizeCacheMax
-    }
-
-  private def probeCacheFor(index: DataFrame): ProbeCache = probeCaches.synchronized {
-    val it = probeCaches.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkSession.sparkContext.isStopped) it.remove()
-    var pc = probeCaches.get(index)
-    if (pc == null) { pc = new ProbeCache; probeCaches.put(index, pc) }
-    pc
-  }
-
   /** Capped single probe through the per-index [[ProbeCache]] — the
     * serving path for indexes too big for the full driver replica.
     * Returns (id, score, 10-slot preview), best first; bit-identical to
@@ -579,114 +550,67 @@ object Lsh {
                        k: Int, maxCandidates: Int,
                        fetchFrom: Option[DataFrame] = None): Seq[(Long, Double, Seq[Long])] = {
     require(maxCandidates > 0, "queryProbeCached requires a candidate cap")
-    val pc = probeCacheFor(index)
-    // Bound the FETCH to the cap's band prefix when the driver stats map
-    // is warm (round 11): the fold below only ever consumes the smallest
-    // band prefix whose cumulative bucket sizes reach the cap — typically
-    // one or two bands on a skewed corpus — yet the miss fetch used to
-    // pull all 32 buckets. At 4M docs that untrimmed fetch (up to
-    // 32 x maxBucketSize postings per probe) both paid a wider fetch job
-    // and THRASHED the bounded cache: 20 rotating probes exceeded
-    // ProbeCacheMaxPostings, every repeat became a miss, and "hot" serving
-    // read 87-298 ms vs 4-6 ms at <=1M. The trim computes the same prefix
-    // the fold will take (identical cumulative rule over identical sizes —
-    // the stats are grouped from this exact capped index), so results are
-    // bit-identical while the per-probe footprint shrinks ~16x. When the
-    // driver map is refused (bucket count above DriverStatsMaxEntries),
-    // the sizes come from one tiny lookup against the cached stats table
-    // instead — the trim holds at ANY index size.
-    // PHASE 1 (monitor): snapshot the resident buckets for THIS probe
-    // over the UNTRIMMED band-sorted rows (array refs only — the snapshot
-    // makes the fold immune to a racing probe's eviction) and note what
-    // is missing. Residency comes FIRST so a fully resident hot probe
-    // runs ZERO Spark jobs even when the driver stats map is refused
-    // (>DriverStatsMaxEntries buckets, e.g. 16M docs): the fold below
-    // enforces the exact same cumulative band-prefix cap with the
-    // resident arrays' own lengths (== the stats' n, grouped from this
-    // exact capped index), so skipping the trim on the hot path is
-    // bit-identical. The trim matters only for the FETCH, so it — and the
-    // stats lookup it may need — is computed only when something is
-    // missing. The monitor is never held across a Spark job: a cold miss
-    // costs a ~0.27 s cluster fetch, and holding the lock through it
-    // serialized every concurrent probe against the same index behind one
-    // cold key.
-    val sorted = qpRows.sortBy(_._1)
-    val resident = new java.util.HashMap[(Int, Long, Long), Array[Long]]()
+    val pc = stateOf(index, create = true).probeCache
+    // PHASE 1 (monitor): snapshot THIS probe's resident buckets (array
+    // refs only — the snapshot makes the fold immune to a racing probe's
+    // eviction). Residency comes FIRST so a fully resident hot probe runs
+    // ZERO Spark jobs even without a driver bucket-size table
+    // (>DriverStatsMaxEntries buckets, e.g. 16M docs): the fold enforces
+    // the same band-prefix cap with the resident arrays' own lengths. The
+    // monitor is never held across a Spark job: a cold miss costs a
+    // ~0.27 s cluster fetch, and holding the lock through it serialized
+    // every concurrent probe against the same index behind one cold key.
+    val snap = new java.util.HashMap[(Int, Long, Long), Array[Long]]()
     pc.synchronized {
-      sorted.foreach { t =>
+      qpRows.foreach { t =>
         val ids = pc.buckets.get(t) // get also marks LRU recency
-        if (ids != null) resident.put(t, ids)
+        if (ids != null) snap.put(t, ids)
       }
     }
-    // EFFECTIVE misses: only rows the fold can actually reach. Walking
-    // the band order with the fold's own stopping rule, a missing row
-    // AFTER the resident prefix already reaches the cap can never be
-    // consulted — so a hot repeat whose trim-prefix buckets are resident
-    // is recognized as fully covered WITHOUT knowing the other buckets'
-    // sizes (a previous cold probe only ever fetched the prefix, so the
-    // naive "is every band row resident" test made every hot repeat look
-    // like a miss and pay the sizes-lookup job — 98 ms hot probes at 16M
-    // lean serving instead of in-process).
-    val missingAll = {
-      val b = Array.newBuilder[(Int, Long, Long)]
-      var before = 0L
-      var i = 0
-      while (i < sorted.length && before < maxCandidates) {
-        val ids = resident.get(sorted(i))
-        if (ids == null) b += sorted(i) else before += ids.length
-        i += 1
-      }
-      b.result()
+    // EFFECTIVE misses: only rows the fold can reach. Run with the
+    // resident sizes (a miss counting 0), the fold passes every row it
+    // would consult with the true sizes, so a hot repeat whose prefix
+    // buckets are resident is covered WITHOUT knowing the other buckets'
+    // sizes (testing "is every band row resident" made every hot repeat
+    // a miss that paid the sizes lookup — 98 ms hot probes at 16M lean
+    // serving instead of in-process).
+    val missingAll = Array.newBuilder[(Int, Long, Long)]
+    foldBands(qpRows, maxCandidates) { t =>
+      val ids = snap.get(t)
+      if (ids == null) { missingAll += t; 0 } else ids.length
     }
-    // Trim the rows the FETCH will consider to the cap's band prefix
-    // (round 11): the fold only ever consumes the smallest band prefix
-    // whose cumulative bucket sizes reach the cap — typically one or two
-    // bands on a skewed corpus — yet the miss fetch used to pull all 32
-    // buckets. At 4M docs that untrimmed fetch (up to 32 x maxBucketSize
-    // postings per probe) both paid a wider fetch job and THRASHED the
-    // bounded cache: 20 rotating probes exceeded ProbeCacheMaxPostings,
-    // every repeat became a miss, and "hot" serving read 87-298 ms vs
-    // 4-6 ms at <=1M. The trim computes the same prefix the fold will
-    // take (identical cumulative rule over identical sizes), so results
-    // are bit-identical while the per-probe footprint shrinks ~16x. When
-    // the driver map is refused the sizes come from one small lookup
-    // against the cached stats table instead (key64-pruned; paid only by
-    // probes that actually miss) — the trim holds at ANY index size.
-    val probeRows: Array[(Int, Long, Long)] =
-      if (missingAll.isEmpty) sorted
-      else {
-        val sizesOf: ((Int, Long, Long)) => Long = driverStats(index) match {
-          case Some(m) => m.getOrElse(_, 0L)
-          case None =>
-            // stats refused AND this probe misses: recover its <=32 sizes
-            // with one small job. With a bucketed serving table wired
-            // (the lean/disk tier) the counts come from a BUCKET-PRUNED
-            // scan of that table — no whole-index stats DF ever needs to
-            // exist or be cached, which is what keeps the lean-serving
-            // heap flat at 16M+ docs; otherwise from the cached stats
-            // table (one-time groupBy over the cached index).
-            val m = (fetchFrom match {
-              case Some(src) =>
-                src.filter(col("key64").isin(qpRows.map(_._2).distinct.toSeq: _*))
-                  .groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n"))
-              case None =>
-                bucketSizes(index)
-                  .filter(col("key64").isin(qpRows.map(_._2).distinct.toSeq: _*))
-            }).select("band", "key64", "key64b", "n").collect()
-              .map(r => ((r.getInt(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
-              .toMap
-            m.getOrElse(_, 0L)
-        }
-        var before = 0L
-        sorted.takeWhile { t =>
-          val ok = before < maxCandidates
-          before += sizesOf(t)
-          ok
-        }
-      }
+    // Trim the FETCH to the cap's band prefix (round 11): the fold only
+    // ever consumes the smallest band prefix whose cumulative bucket sizes
+    // reach the cap — typically one or two bands on a skewed corpus — yet
+    // the miss fetch used to pull all 32 buckets. At 4M docs that
+    // untrimmed fetch (up to 32 x maxBucketSize postings per probe) both
+    // paid a wider fetch job and THRASHED the bounded cache: 20 rotating
+    // probes exceeded ProbeCacheMaxPostings, every repeat became a miss,
+    // and "hot" serving read 87-298 ms vs 4-6 ms at <=1M. The trim is the
+    // same fold over the same sizes (the stats are grouped from this exact
+    // capped index), so results are bit-identical while the per-probe
+    // footprint shrinks ~16x. The sizes come from the driver bucket-size
+    // table when warm; otherwise from one small key64-pruned lookup, paid
+    // only by probes that miss — the trim holds at ANY index size. With a
+    // bucketed serving table wired (the lean/disk tier) that lookup is a
+    // BUCKET-PRUNED scan of it, so no whole-index stats frame ever needs
+    // to exist or be cached (the lean-serving heap stays flat at 16M+
+    // docs); otherwise it reads the cached stats table.
     val missing = {
-      val keep = probeRows.toSet
-      missingAll.filter(keep.contains)
+      val all = missingAll.result()
+      if (all.isEmpty) all
+      else {
+        val sizes = driverSizes(index).getOrElse {
+          val keys = qpRows.map(_._2).distinct.toSeq
+          sizeTable(fetchFrom match {
+            case Some(src) => src.filter(col("key64").isin(keys: _*))
+              .groupBy("band", "key64", "key64b").agg(count(lit(1)).as("n"))
+            case None => bucketSizes(index).filter(col("key64").isin(keys: _*))
+          })
+        }
+        val reach = foldBands(qpRows, maxCandidates)(t => sizes.size(t._2, t._3)).toSet
+        all.filter(reach)
+      }
     }
     // PHASE 2 (no lock): ONE fetch job for every missing bucket: key64-IN
     // literals reach the scan (bucket-pruned on a saved bucketed table);
@@ -699,7 +623,6 @@ object Lsh {
     // index: the IN literals then engage bucket pruning + sorted
     // row-group skipping, so a cold probe's I/O is bounded by its own
     // buckets rather than a whole-index scan — the 100 TB cold tier.
-    val fetched = new java.util.HashMap[(Int, Long, Long), Array[Long]]()
     if (missing.nonEmpty) {
       val missingSet = missing.toSet
       val rows = fetchFrom.getOrElse(index)
@@ -711,7 +634,7 @@ object Lsh {
       // an absent bucket is stored as an explicit empty array, so
       // absent-because-empty never aliases absent-because-not-fetched
       missing.foreach { t =>
-        fetched.put(t, rows.get(t).map(_.map(_._2).sorted).getOrElse(Array.empty[Long]))
+        snap.put(t, rows.get(t).map(_.map(_._2).sorted).getOrElse(Array.empty[Long]))
       }
       // PHASE 3 (monitor): publish the fetch (skip triples a racing probe
       // already published — same data, and skipping keeps the residency
@@ -720,7 +643,7 @@ object Lsh {
       pc.synchronized {
         missing.foreach { t =>
           if (!pc.buckets.containsKey(t)) {
-            val ids = fetched.get(t)
+            val ids = snap.get(t)
             pc.buckets.put(t, ids)
             pc.residentPostings += ids.length
           }
@@ -732,19 +655,12 @@ object Lsh {
         }
       }
     }
-    // fold over THIS probe's snapshot (resident ++ fetched — never the
-    // shared map, which a racing probe may be evicting): a <=32-entry
-    // lookup map bridges the (key64, key64b) fold signature to the
-    // full-triple keys
-    val byTriple = new java.util.HashMap[(Long, Long), Array[Long]]()
-    probeRows.foreach { t =>
-      val ids = { val r = resident.get(t); if (r != null) r else fetched.get(t) }
-      byTriple.put((t._2, t._3), ids)
-    }
+    // fold over THIS probe's snapshot, never the shared map (which a
+    // racing probe may be evicting): every row the fold reaches is in it
     val cands = {
       val found = new scala.collection.mutable.ArrayBuilder.ofLong
-      foldBands(probeRows, maxCandidates) { (key, keyB) =>
-        val ids = byTriple.get((key, keyB))
+      foldBands(qpRows, maxCandidates) { t =>
+        val ids = snap.get(t)
         if (ids == null) 0 else { found.addAll(ids); ids.length }
       }
       sortedDistinct(found.result())
@@ -860,13 +776,20 @@ object Lsh {
     * engines scan a truncated band prefix — ours reproducibly.
     * `maxCandidates <= 0` disables the cap.
     *
-    * NOTE: a capped call runs one tiny Spark job EAGERLY (the <=32-row
-    * bucket-stats lookup that picks the band prefix) — the probe analog of
-    * the reference's per-bucket dict lookups + early exit
-    * (minhash_lsh.py:76-96), and the same eager shape as
-    * `querySignatureBucketed`'s key collect. Everything else stays lazy. */
+    * NOTE: unless the index's driver bucket-size table is warm
+    * ([[warmDriverStats]], [[warmDriverIndex]]), a capped call runs one
+    * tiny Spark job EAGERLY (the <=32-row bucket-stats lookup that picks
+    * the band prefix) — the probe analog of the reference's per-bucket
+    * dict lookups + early exit (minhash_lsh.py:76-96). Everything else
+    * stays lazy. */
   def querySignature(sigs: DataFrame, index: DataFrame, querySig: Array[Long], k: Int,
-                     p: Params = Params(), maxCandidates: Int = 0): DataFrame = {
+                     p: Params = Params(), maxCandidates: Int = 0): DataFrame =
+    querySignatureImpl(sigs, index, querySig, k, p, maxCandidates, index)
+
+  /** `statsOf`: as in [[queryBatchImpl]]. */
+  private def querySignatureImpl(sigs: DataFrame, index: DataFrame, querySig: Array[Long],
+                                 k: Int, p: Params, maxCandidates: Int,
+                                 statsOf: DataFrame): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
     if (maxCandidates <= 0) {
@@ -900,42 +823,25 @@ object Lsh {
         .limit(k)
     } else {
       // CAPPED probe, latency-tuned: the query hits exactly one bucket per
-      // band, so its per-band hit counts are the <=32 stats rows matching
-      // its keys. When the index warmed its DRIVER stats map, those counts
-      // are pure map lookups over the jobless LocalRelation collect of the
-      // query's keys — the probe runs ZERO stats jobs, exactly the
-      // reference's in-process dict lookups + early exit. Larger indexes
-      // fall back to one tiny join against the CACHED stats table (the
-      // probe side is a jobless LocalRelation broadcast; constant plan
-      // shape, no codegen churn). Either way the allowed band prefix is
-      // folded ON THE DRIVER — 32 additions — and the probe plan needs
-      // just two jobs: build the candidate broadcast, and the scoring
-      // scan whose top-k aggregate carries the vector preview as a
-      // payload (no re-join, no final sort).
-      val qp = queryPostings(spark, querySig, p)
-      val sized = driverStats(index) match {
-        case Some(m) =>
-          qp.select("band", "key64", "key64b").collect()
-            .flatMap { r =>
-              m.get((r.getInt(0), r.getLong(1), r.getLong(2))).map(r.getInt(0) -> _)
-            }.sortBy(_._1)
-        case None =>
-          bucketSizes(index).join(broadcast(qp), joinKeys)
-            .select("band", "n").collect()
-            .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      }
-      var before = 0L
-      val allowedBands = sized.takeWhile { case (_, n) =>
-        val ok = before < maxCandidates; before += n; ok
-      }.map(_._1).toSet
-      val rows = (0 until p.bands).filter(allowedBands).map { b =>
-        (b, querySig.slice(b * p.rows, (b + 1) * p.rows).toSeq)
-      }
-      val qpAllowed = withBucketKeys(rows.toDF("band", "band_key"))
+      // band, so its per-band hit counts are the <=32 bucket sizes under
+      // its keys (driver-evaluated — [[queryKeysLocal]]). With the index's
+      // driver bucket-size table warm they are table lookups and the probe
+      // runs ZERO stats jobs, exactly the reference's in-process dict
+      // lookups + early exit; otherwise one tiny join of the CACHED stats
+      // table against the keys' LocalRelation (constant plan shape, no
+      // codegen churn) fetches them. Either way [[foldBands]] picks the
+      // allowed band prefix ON THE DRIVER, and the probe plan needs just
+      // two jobs: build the candidate broadcast, and the scoring scan
+      // whose top-k aggregate carries the vector preview as a payload (no
+      // re-join, no final sort).
+      val keys = queryKeysLocal(querySig, p)
+      val sizes = driverSizes(statsOf).getOrElse(sizeTable(
+        bucketSizes(statsOf).join(broadcast(keys.toSeq.toDF(joinKeys: _*)), joinKeys)))
+      val allowed = foldBands(keys, maxCandidates)(t => sizes.size(t._2, t._3))
       // band-duplicated candidate rows are cap-bounded and the
       // id-deduplicating top-k aggregate absorbs them (per-id scores are
       // identical — same signature pair), so no distinct() exchange.
-      val cand = index.join(broadcast(qpAllowed), joinKeys).select("id")
+      val cand = index.join(broadcast(allowed.toSeq.toDF(joinKeys: _*)), joinKeys).select("id")
       import graft.functions.TopKByScore.top_k_by_score_distinct_preview
       val qdf = Seq(Tuple1(querySig.toSeq)).toDF("qsig")
       sigs.join(broadcast(cand), sigs("doc_id") === cand("id"))
@@ -963,13 +869,12 @@ object Lsh {
   def querySignatureBucketed(sigs: DataFrame, bucketedIndex: DataFrame,
                              querySig: Array[Long], k: Int,
                              p: Params = Params(), maxCandidates: Int = 0): DataFrame = {
-    val spark = sigs.sparkSession
-    val qp = queryPostings(spark, querySig, p)
-    // 32 keys from a 32-row local relation — a driver-local collect, not
-    // a cluster job; they must be LITERALS for bucket pruning to engage
-    val keys = qp.select("key64").collect().map(_.getLong(0)).toSeq
+    // the 32 driver-evaluated keys must be LITERALS for bucket pruning
+    val keys = queryKeysLocal(querySig, p).map(_._2).toSeq
     val pruned = bucketedIndex.filter(col("key64").isin(keys: _*))
-    querySignature(sigs, pruned, querySig, k, p, maxCandidates)
+    // a capped probe folds the caller's full table's sizes (see
+    // queryBatchBucketed)
+    querySignatureImpl(sigs, pruned, querySig, k, p, maxCandidates, bucketedIndex)
   }
 
   /** Batch probe: top-k per query signature, all queries through ONE
@@ -989,15 +894,17 @@ object Lsh {
     * bucket skew, so AQE picks the join strategy. */
   def queryBatch(sigs: DataFrame, index: DataFrame, queries: DataFrame, k: Int,
                  p: Params = Params(), maxCandidates: Int = 0): DataFrame =
-    queryBatchImpl(sigs, index, queries, k, p, maxCandidates, None)
+    queryBatchImpl(sigs, index, queries, k, p, maxCandidates, index)
 
-  /** `statsOverride`: bucket stats for a one-off index view (the bucketed
-    * pruned scan) — bypasses [[bucketSizes]]' identity-keyed cache, which
-    * a fresh DataFrame per call would churn (each miss builds and caches
-    * a stats table and evicts a live index's). */
+  /** `statsOf`: the table handle whose bucket sizes the cap folds — the
+    * index itself, or for a one-off view of it (the bucketed pruned scan)
+    * the caller's full table, whose counts restricted by the probe join
+    * are the view's: a fresh DataFrame per call would churn the
+    * identity-keyed per-index LRU, each call building and caching a stats
+    * table and evicting a live index's record. */
   private def queryBatchImpl(sigs: DataFrame, index: DataFrame, queries: DataFrame,
                              k: Int, p: Params, maxCandidates: Int,
-                             statsOverride: Option[DataFrame]): DataFrame = {
+                             statsOf: DataFrame): DataFrame = {
     import graft.functions.TopKByScore.top_k_by_score_distinct
     val qPost = withBucketKeys(queries.select(col("query_id"),
       posexplode(bandSlices(col("sig"), p)).as(Seq("band", "band_key"))))
@@ -1007,56 +914,43 @@ object Lsh {
       else {
         // Per-query cap WITHOUT materializing candidates: each query hits
         // one bucket per band, so its per-band hit count is that bucket's
-        // size. When the index warmed its DRIVER stats map and the batch
-        // is driver-collectable, the whole query side goes local: collect
-        // the batch once, compute each query's band keys by driver-
-        // evaluating the same Catalyst XxHash64 expressions
+        // size. When the index has a DRIVER bucket-size table and the
+        // batch is driver-collectable, the whole query side goes local:
+        // collect the batch once, compute each query's band keys by
+        // driver-evaluating the same Catalyst XxHash64 expressions
         // ([[queryKeysLocal]] — bit-identical to the index build), fold
-        // its allowed band prefix against the stats map (the same
-        // takeWhile as the distributed fold: missing buckets contribute
-        // nothing either way), and inject the allowed postings as a
-        // broadcast LocalRelation — the distributed stats-join and
-        // per-query fold aggregation stages vanish from the plan.
-        // Otherwise: join the 32-rows-per-query postings against the
-        // CACHED bucket-stats table (never the full index), fold each
-        // query's sorted sizes into its allowed band prefix in-plan, and
-        // probe the index for allowed (query, band)s only. Both shapes
-        // never generate over-cap candidate rows — the reference's
-        // early-exit cost shape.
-        val localQPost = driverStats(index).flatMap { m =>
-          val collected = queries.select(col("query_id"), col("sig"))
-            .limit(DriverBatchMaxQueries + 1).collect()
+        // its allowed band prefix with [[foldBands]], and inject the
+        // allowed postings of present buckets as a broadcast LocalRelation
+        // — the distributed stats-join and per-query fold aggregation
+        // stages vanish from the plan. Otherwise: join the
+        // 32-rows-per-query postings against the CACHED bucket-stats table
+        // (never the full index), fold each query's sorted sizes into its
+        // allowed band prefix in-plan ([[allowedBandPrefix]]), and probe
+        // the index for allowed (query, band)s only. Both shapes never
+        // generate over-cap candidate rows — the reference's early-exit
+        // cost shape.
+        val localQPost = driverSizes(statsOf).flatMap { sizes =>
+          val batch = queries.select(col("query_id"), col("sig"))
+          val collected = batch.limit(DriverBatchMaxQueries + 1).collect()
           if (collected.length > DriverBatchMaxQueries) None
           else Some {
             val rows = collected.flatMap { r =>
-              val keys = queryKeysLocal(r.getSeq[Long](1).toArray, p)
-              var before = 0L
-              val out = scala.collection.mutable.ArrayBuffer
-                .empty[org.apache.spark.sql.Row]
-              var i = 0
-              while (i < keys.length && before < maxCandidates) {
-                val (b, k64, k64b) = keys(i)
-                m.get((b, k64, k64b)).foreach { n =>
-                  out += org.apache.spark.sql.Row(r.get(0), b, k64, k64b)
-                  before += n
+              foldBands(queryKeysLocal(r.getSeq[Long](1).toArray, p), maxCandidates)(
+                t => sizes.size(t._2, t._3))
+                .collect { case (b, k64, k64b) if sizes.size(k64, k64b) > 0 =>
+                  org.apache.spark.sql.Row(r.get(0), b, k64, k64b)
                 }
-                i += 1
-              }
-              out
             }
             import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-            val schema = StructType(Seq(
-              queries.schema.find(_.name == "query_id")
-                .getOrElse(StructField("query_id", LongType)).copy(name = "query_id"),
-              StructField("band", IntegerType, nullable = false),
-              StructField("key64", LongType, nullable = false),
-              StructField("key64b", LongType, nullable = false)))
+            val schema = StructType(batch.schema.head.copy(name = "query_id") +:
+              Seq("band" -> IntegerType, "key64" -> LongType, "key64b" -> LongType)
+                .map { case (n, t) => StructField(n, t, nullable = false) })
             import scala.jdk.CollectionConverters._
             queries.sparkSession.createDataFrame(rows.toSeq.asJava, schema)
           }
         }
         val qPostAllowed = localQPost.getOrElse {
-          val sized = statsOverride.getOrElse(bucketSizes(index))
+          val sized = bucketSizes(statsOf)
             .join(broadcast(qPost), joinKeys)
             .select("query_id", "band", "n")
           val allowed = allowedBandPrefix(sized, Seq("query_id"), maxCandidates)
@@ -1117,13 +1011,10 @@ object Lsh {
       s"queryBatchBucketed: batch exceeds $maxKeys distinct bucket keys; " +
         "use queryBatch over the cached index for scan-class batches")
     val pruned = bucketedIndex.filter(col("key64").isin(keys: _*))
-    // stats keyed off the CALLER'S table handle (identity-cached): a
-    // serving loop holding one handle pays the full-table stats build
-    // once, then every probe folds its cap at cached-stats cost. The
-    // per-call pruned view cannot be identity-cached, and its counts
-    // restricted by the probe join are identical to the full table's.
-    queryBatchImpl(sigs, pruned, queries, k, p, maxCandidates,
-      Some(bucketSizes(bucketedIndex)))
+    // stats keyed off the CALLER'S table handle: a serving loop holding
+    // one handle pays the full-table stats build once, then every probe
+    // folds its cap at cached-stats cost
+    queryBatchImpl(sigs, pruned, queries, k, p, maxCandidates, bucketedIndex)
   }
 
   /** All-pairs near-duplicate candidates from the index: ids sharing at

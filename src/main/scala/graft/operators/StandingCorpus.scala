@@ -129,14 +129,26 @@ object StandingCorpus {
     p
   }
 
-  /** The partition-bucket expressions — MUST match between build and
-    * probe (both sides evaluate them in Spark, never on the driver). */
-  private def pbHash(h: org.apache.spark.sql.Column, p: Int) =
+  /** The partition bucket of each standing table over `p` partitions —
+    * hashes on the md5 hex `_h`, sigs on `doc_id`, the index on `key64` —
+    * in its Column form (the table writes and the Spark-side probes)
+    * beside its driver form (the bucket sets a driver-side probe prunes
+    * on). Build and probe MUST agree, so each is defined here once;
+    * StandingCorpusSpec pins each driver form equal to its Column form. */
+  private[graft] def pbHash(h: org.apache.spark.sql.Column, p: Int) =
     pmod(conv(substring(h, 1, 15), 16, 10).cast("long"), lit(p.toLong)).cast("int")
-  private def pbSig(id: org.apache.spark.sql.Column, p: Int) =
+  /** 15 hex chars < 2^60, so the unsigned conv() parse is an exact
+    * parseLong. */
+  private[graft] def pbHashLocal(h: String, p: Int): Int =
+    Math.floorMod(java.lang.Long.parseLong(h.substring(0, 15), 16), p.toLong).toInt
+  private[graft] def pbSig(id: org.apache.spark.sql.Column, p: Int) =
     pmod(xxhash64(id), lit(p.toLong)).cast("int")
-  private def pbIdx(key64: org.apache.spark.sql.Column, p: Int) =
+  /** xxhash64 of a long through the XXH64 kernel Catalyst's codegen calls. */
+  private[graft] def pbSigLocal(id: Long, p: Int): Int = Math.floorMod(
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L), p.toLong).toInt
+  private[graft] def pbIdx(key64: org.apache.spark.sql.Column, p: Int) =
     pmod(key64, lit(p.toLong)).cast("int")
+  private[graft] def pbIdxLocal(key64: Long, p: Int): Int = Math.floorMod(key64, p.toLong).toInt
 
   /** Sign (id, text) rows with the md5 shingle family. */
   def sign(docs: DataFrame, meta: Meta, idCol: String = "doc_id",
@@ -289,6 +301,18 @@ object StandingCorpus {
       .partitionBy("_pb").parquet(path)
   }
 
+  /** The one writer of each standing table, into version dir `v` with
+    * `m`'s partition counts. */
+  private def writeHashes(hashes: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(hashes, pbHash(col("_h"), m.pHash), m.pHash, s"$v/hashes", col("_h"),
+      m.nDocs, HashRowsPerPart)
+  private def writeSigs(sigs: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(sigs, pbSig(col("doc_id"), m.pSig), m.pSig, s"$v/sigs", col("doc_id"),
+      m.nDocs, SigRowsPerPart)
+  private def writeIndex(index: DataFrame, m: Meta, v: String): Unit =
+    writePartitioned(index, pbIdx(col("key64"), m.pIdx), m.pIdx, s"$v/index", col("key64"),
+      m.nDocs * m.bands, IdxRowsPerPart)
+
   /** Build the standing artifacts from a deduplicated corpus. `sigs` may
     * be precomputed (id, sig) — pass null to sign `docs` here. One
     * O(corpus) pass, paid once; every increment afterwards reads only
@@ -306,17 +330,7 @@ object StandingCorpus {
     val s = Option(sigs).getOrElse(sign(docs, meta, idCol, textCol))
       .select(col(idCol).cast("long").as("doc_id"), col("sig"))
     val v = s"$dir/v1"
-    def writeHashes(): Unit =
-      writePartitioned(docs.select(md5(col(textCol)).as("_h")),
-        pbHash(col("_h"), meta.pHash), meta.pHash, s"$v/hashes", col("_h"),
-        nDocs, HashRowsPerPart)
-    def writeSigs(sf: DataFrame): Unit =
-      writePartitioned(sf, pbSig(col("doc_id"), meta.pSig), meta.pSig, s"$v/sigs",
-        col("doc_id"), nDocs, SigRowsPerPart)
-    def writeIndex(postings: DataFrame): Unit =
-      writePartitioned(postings,
-        pbIdx(col("key64"), meta.pIdx), meta.pIdx, s"$v/index", col("key64"),
-        nDocs * lsh.bands, IdxRowsPerPart)
+    def writeDocHashes(): Unit = writeHashes(docs.select(md5(col(textCol)).as("_h")), meta, v)
     // The three table writes are mutually independent once the signature
     // frame is materialized, so below the size gate ALL THREE overlap
     // (guide: submit independent jobs from driver threads so one job's
@@ -339,20 +353,20 @@ object StandingCorpus {
         val seeded = if (replicaFits(nDocs, lsh.bands)) new LocalView(holdsBase = true) else null
         try concurrently(
           "graft-standing-build-hashes" -> (() => {
-            writeHashes()
+            writeDocHashes()
             if (seeded != null) seeded.loadHashes(docs.select(md5(col(textCol))).collect())
           }),
           "graft-standing-build-sigs" -> (() => {
-            writeSigs(sMat)
+            writeSigs(sMat, meta, v)
             if (seeded != null) seeded.loadSigs(sMat.select("doc_id", "sig").collect())
           }),
           "graft-standing-build-index" -> (() =>
-            if (seeded == null) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh))
+            if (seeded == null) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh), meta, v)
             else {
               val post = Lsh.postings(sMat, "doc_id", "sig", lsh)
                 .select("id", "band", "key64", "key64b").localCheckpoint(true)
               try {
-                writeIndex(post)
+                writeIndex(post, meta, v)
                 seeded.loadPostings(post.collect())
               } finally QueryEngine.releaseFrame(post)
             }))
@@ -361,12 +375,12 @@ object StandingCorpus {
         finally QueryEngine.releaseFrame(sMat)
         seeded
       } else {
-        writeHashes()
-        writeSigs(s)
+        writeDocHashes()
+        writeSigs(s, meta, v)
         // sign from the WRITTEN sig table so the (expensive) signature
         // projection is not recomputed for the postings pass
         writeIndex(Lsh.postings(spark.read.parquet(s"$v/sigs").drop("_pb"),
-          "doc_id", "sig", lsh))
+          "doc_id", "sig", lsh), meta, v)
         null
       }
     writeMeta(dir, meta)
@@ -626,15 +640,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     }
   }
 
-  /** Driver twin of the Spark-side partition-bucket expressions (pbSig /
-    * pbIdx): xxhash64 of a long via the same XXH64 kernel Catalyst
-    * codegen calls. */
-  private def pbSigLocal(id: Long): Int = {
-    val p = meta.pSig.toLong
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L)
-    (((h % p) + p) % p).toInt
-  }
-
   /** Collect and sign a trickle-sized batch on the driver. The collect
     * reads (id, text bytes) only, so over a LocalRelation batch the
     * optimizer folds it into the relation and no job runs; signing is
@@ -722,8 +727,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     if (triples.isEmpty) Some(Map.empty)
     else {
       val ks = triples.map(_._2).distinct.toSeq
-      val p = meta.pIdx.toLong
-      val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
+      val pbs = ks.map(pbIdxLocal(_, meta.pIdx)).distinct
       val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
       val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
       val pruned =
@@ -770,8 +774,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       if (lv.holdsBase || hs.isEmpty) null
       else {
         val task = new java.util.concurrent.FutureTask[Set[String]](() => {
-          val pbs = hs.map(h =>
-            (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
+          val pbs = hs.map(pbHashLocal(_, meta.pHash)).distinct
           val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
           val pruned0 = baseHashes.filter(col("_pb").isin(pbs: _*))
           val pruned =
@@ -829,7 +832,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       else {
         val standIds = candByBid.valuesIterator.flatten.toArray.distinct
         if (standIds.length > CandSigBound) { awaitExact(); return None }
-        val pbs = standIds.map(pbSigLocal).distinct.toSeq
+        val pbs = standIds.map(pbSigLocal(_, meta.pSig)).distinct.toSeq
         val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
         val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
         val pruned =
@@ -979,10 +982,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private[graft] def prunedHashes(batchHashes: DataFrame): DataFrame = {
     val hs = batchHashes.select("_h").distinct().collect().iterator
       .filterNot(_.isNullAt(0)).map(_.getString(0)).toSeq
-    // driver-side twin of pbHash: 15 hex chars < 2^60, so the unsigned
-    // conv() parse is an exact Long.parseLong and pmod degenerates to %
-    val pbs = hs.map(h =>
-      (java.lang.Long.parseLong(h.substring(0, 15), 16) % meta.pHash).toInt).distinct
+    val pbs = hs.map(pbHashLocal(_, meta.pHash)).distinct
     val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
     val pruned = baseHashes.filter(col("_pb").isin(pbs: _*))
     val keyed =
@@ -996,8 +996,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private[graft] def prunedIndex(batchKeys: DataFrame): DataFrame = {
     val ks = batchKeys.select("key64").distinct().collect().iterator
       .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
-    val p = meta.pIdx.toLong
-    val pbs = ks.map(k => (((k % p) + p) % p).toInt).distinct
+    val pbs = ks.map(pbIdxLocal(_, meta.pIdx)).distinct
     val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
     val pruned = baseIndex.filter(col("_pb").isin(pbs: _*))
     val keyed =
@@ -1008,21 +1007,21 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   }
 
   /** Pruned standing signatures for a candidate-id frame. The partition
-    * bucket is xxhash64(id) — evaluated in Spark on both sides (never
-    * re-implemented driver-side) — so the collect carries (bucket, id)
-    * pairs and the id set doubles as the pushed key filter when the sig
-    * table is past its partition ceiling. */
+    * bucket ([[StandingCorpus.pbSig]]) is evaluated in Spark over the
+    * candidate frame, so the collect carries (bucket, id) pairs and the
+    * id set doubles as the pushed key filter when the sig table is past
+    * its partition ceiling. */
   private[graft] def prunedSigs(candIds: DataFrame): DataFrame = {
     val idc = candIds.columns.head
     val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
     val rows = candIds
-      .select(pbSigCol(idc).as("_pb"), col(idc).cast("long").as("_id"))
+      .select(pbSig(col(idc), meta.pSig).as("_pb"), col(idc).cast("long").as("_id"))
       .distinct().limit(MaxPushedKeys + 1).collect()
       .filterNot(_.isNullAt(0))
     val overflow = rows.length > MaxPushedKeys
     val pbs =
       if (!overflow) rows.iterator.map(_.getInt(0)).toSeq.distinct
-      else candIds.select(pbSigCol(idc).as("_pb")).distinct().collect()
+      else candIds.select(pbSig(col(idc), meta.pSig).as("_pb")).distinct().collect()
         .iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
     val pruned = baseSigs.filter(col("_pb").isin(pbs: _*))
     val keyed =
@@ -1031,9 +1030,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       else pruned
     unionAll(keyed.select("doc_id", "sig"), deltaSigs.toSeq)
   }
-
-  private def pbSigCol(idColName: String) =
-    pmod(xxhash64(col(idColName)), lit(meta.pSig.toLong)).cast("int")
 
   /** Classify one batch of (idCol, textCol) docs against the standing
     * corpus: 'exact' / 'near' / 'new' per id, bit-identical to
@@ -1249,6 +1245,13 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   // volatile: compactionReady is read by serving threads outside the
   // corpus lock
   @volatile private var pendingCompaction: Option[PendingCompaction] = None
+  @volatile private var compactionFailure: Option[Throwable] = None
+
+  /** The error of the last background compaction that failed, kept until
+    * a later compaction publishes a version (the next successful swap or
+    * a [[compact]]). The failed build's deltas stay live, and the next
+    * scheduled compaction retries. */
+  def lastCompactionFailure: Option[Throwable] = compactionFailure
 
   /** Write the three standing tables for `grown` under its version dir.
     * Pure write — no mutable state touched (safe off-thread). Each
@@ -1267,19 +1270,11 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     // from under the builder
     val nv = s"$dir/.build-v${grown.version}"
     deleteRecursively(new java.io.File(nv))
-    writePartitioned(hashes,
-      pmod(conv(substring(col("_h"), 1, 15), 16, 10).cast("long"),
-        lit(grown.pHash.toLong)).cast("int"), grown.pHash, s"$nv/hashes",
-      col("_h"), grown.nDocs, HashRowsPerPart)
+    writeHashes(hashes, grown, nv)
     System.gc()
-    writePartitioned(sigs,
-      pmod(xxhash64(col("doc_id")), lit(grown.pSig.toLong)).cast("int"),
-      grown.pSig, s"$nv/sigs", col("doc_id"), grown.nDocs, SigRowsPerPart)
+    writeSigs(sigs, grown, nv)
     System.gc()
-    writePartitioned(index,
-      pmod(col("key64"), lit(grown.pIdx.toLong)).cast("int"),
-      grown.pIdx, s"$nv/index", col("key64"),
-      grown.nDocs * grown.bands, IdxRowsPerPart)
+    writeIndex(index, grown, nv)
     System.gc()
     val finalDir = new java.io.File(s"$dir/v${grown.version}")
     if (!new java.io.File(nv).renameTo(finalDir))
@@ -1342,17 +1337,20 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * adopt its version (meta keeps the CURRENT nDocs — only the layout
     * fields come from the snapshot), drop the folded deltas, persist the
     * meta, and remove the old version dir. On builder failure the deltas
-    * stay live and the next scheduled compaction retries. */
+    * stay live, the error is kept as [[lastCompactionFailure]], and the
+    * next scheduled compaction retries. */
   private def maybeSwapCompacted(): Unit = pendingCompaction match {
     case Some(p) if p.done.get() =>
       pendingCompaction = None
       val err = p.failed.get()
       if (err != null) {
+        compactionFailure = Some(err)
         System.err.println(s"[standing-corpus] background compaction failed " +
           s"(deltas retained, will retry): $err")
         deleteRecursively(new java.io.File(s"$dir/.build-v${p.grown.version}"))
         deleteRecursively(new java.io.File(s"$dir/v${p.grown.version}"))
       } else {
+        compactionFailure = None
         val old = vdir
         meta = meta.copy(version = p.grown.version, pHash = p.grown.pHash,
           pSig = p.grown.pSig, pIdx = p.grown.pIdx)
@@ -1417,6 +1415,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val grown = grownMeta
     writeVersion(grown, fullHashes, fullSigs, fullIndex)
     writeMeta(dir, grown)
+    compactionFailure = None
     val old = vdir
     // as at a swap: a view holding the base and every delta already holds
     // the compacted base

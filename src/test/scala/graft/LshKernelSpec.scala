@@ -8,9 +8,9 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** The driver-local probe kernel — the flat-array replica
-  * (Lsh.queryDriverIndex) and the probe cache (Lsh.queryProbeCached) —
-  * against the Catalyst plan (Lsh.querySignature), and the replica's
-  * zero-job contract. */
+  * (Lsh.queryDriverIndex), the probe cache (Lsh.queryProbeCached) and the
+  * driver-folded capped plans (Lsh.querySignature, Lsh.queryBatch) —
+  * against the cold Catalyst plan, and the replica's zero-job contract. */
 class LshKernelSpec extends SparkSpec {
   import LshKernelSpec.Corpus
   import spark.implicits._
@@ -39,25 +39,64 @@ class LshKernelSpec extends SparkSpec {
     Lsh.querySignature(sigs, index, q, k, p, maxCandidates = cap).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Long](2).toSeq)).toSeq
 
+  /** Capped or uncapped `Lsh.queryBatch` at top-`k`, as each query's
+    * (id, score) list, best first. */
+  private def batch(sigs: DataFrame, index: DataFrame, qs: Seq[Array[Long]], k: Int,
+                    p: Lsh.Params, cap: Int): Seq[Seq[(Long, Double)]] = {
+    val queries = qs.zipWithIndex.map { case (q, i) => (i.toLong, q.toSeq) }.toDF("query_id", "sig")
+    val got = Lsh.queryBatch(sigs, index, queries, k, p, maxCandidates = cap).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    qs.indices.map(i => got.filter(_._1 == i).sortBy(_._2).map(r => (r._3, r._4)).toSeq)
+  }
+
   test("replica and probe-cache kernels equal the Catalyst plan over random corpora") {
     var probes = 0
+    val (ks, caps) = (Seq(1, 5, 100), Seq(0, 1, 3, 2000))
     samples(corpusGen, 8, seed = 17L).foreach { c =>
       val all = c.rows.map { case (id, s) => (id, s.toSeq) }.toDF("doc_id", "sig")
       val index = Lsh.postings(all, "doc_id", "sig", c.p).cache()
       // the index references c.unsigned, but its signature row is gone
       val sigs = all.filter(col("doc_id") =!= c.unsigned).cache()
+      val queries = Seq(c.rows.head._2, c.fresh)
+      val combos = for (q <- queries.indices; k <- ks; cap <- caps) yield (q, k, cap)
+      def ctx(q: Int, k: Int, cap: Int) = s"params=${c.p} n=${c.rows.length} q=$q k=$k cap=$cap"
+      // the reference: the plan over the COLD index, whose capped probes
+      // fold sizes fetched by a stats join — never a driver table below
+      val want = combos.map { case (q, k, cap) =>
+        (q, k, cap) -> catalyst(sigs, index, queries(q), k, c.p, cap)
+      }.toMap
+      // every tier below runs the one driver fold; the cold batch's
+      // in-plan fold (allowedBandPrefix) anchors the reference to the
+      // distributed one
+      def assertBatches(tier: String): Unit = caps.foreach { cap =>
+        batch(sigs, index, queries, ks.max, c.p, cap).zipWithIndex.foreach { case (got, q) =>
+          assert(got == want((q, ks.max, cap)).map(h => (h._1, h._2)), s"$tier batch ${ctx(q, ks.max, cap)}")
+        }
+      }
+      def assertProbeCache(tier: String): Unit = combos.foreach { case (q, k, cap) =>
+        if (cap > 0) assert(Lsh.queryProbeCached(sigs, index, Lsh.queryKeysLocal(queries(q), c.p),
+          queries(q), k, cap) == want((q, k, cap)), s"$tier probe cache ${ctx(q, k, cap)}")
+      }
+      assertBatches("cold")
+      assertProbeCache("cold")
       assert(Lsh.warmDriverIndex(sigs, index))
       val di = Lsh.driverIndexFor(index).get
-      val queries = Seq(c.rows.head._2, c.fresh)
-      for (q <- queries; k <- Seq(1, 5, 100); cap <- Seq(0, 1, 3, 2000)) {
-        val want = catalyst(sigs, index, q, k, c.p, cap)
-        val keys = Lsh.queryKeysLocal(q, c.p)
-        val ctx = s"params=${c.p} n=${c.rows.length} k=$k cap=$cap"
-        assert(Lsh.queryDriverIndex(di, keys, q, k, cap) == want, s"replica $ctx")
-        if (cap > 0)
-          assert(Lsh.queryProbeCached(sigs, index, keys, q, k, cap) == want, s"probe cache $ctx")
+      combos.foreach { case (q, k, cap) =>
+        val keys = Lsh.queryKeysLocal(queries(q), c.p)
+        assert(Lsh.queryDriverIndex(di, keys, queries(q), k, cap) == want((q, k, cap)),
+          s"replica ${ctx(q, k, cap)}")
         probes += 1
       }
+      assertBatches("replica")
+      // the bucket-size table alone, as for an index past the replica bounds
+      Lsh.evictDriverState(index)
+      assert(Lsh.warmDriverStats(index) && Lsh.driverIndexFor(index).isEmpty)
+      combos.foreach { case (q, k, cap) =>
+        assert(catalyst(sigs, index, queries(q), k, c.p, cap) == want((q, k, cap)),
+          s"stats-only plan ${ctx(q, k, cap)}")
+      }
+      assertBatches("stats-only")
+      assertProbeCache("stats-only")
       Lsh.evictDriverState(index)
       index.unpersist(); sigs.unpersist()
     }

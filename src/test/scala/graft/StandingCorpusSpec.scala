@@ -324,6 +324,73 @@ class StandingCorpusSpec extends SparkSpec {
       === Seq((912L, "exact")))
   }
 
+  test("a failed background compaction is kept as state; ingest and the published version stay") {
+    val dir = tmpDir()
+    val sc = StandingCorpus.build(mkDocs(0L until 100L), null, dir)
+    sc.compactEveryBatches = 1
+    sc.compactInBackground = true
+    // a regular file where the compacted version is published: the
+    // build's final rename fails
+    assert(new java.io.File(s"$dir/v2").createNewFile())
+    val (tA, tB) = (words("cf").mkString(" "), words("cg").mkString(" "))
+    assert(statuses(sc.classifyAbsorb(Seq((900L, tA)).toDF("doc_id", "text")))
+      === Seq((900L, "new")))
+    sc.awaitCompaction()
+    assert(sc.lastCompactionFailure.exists(_.getMessage.contains("could not publish")),
+      s"the failure is recorded: ${sc.lastCompactionFailure}")
+    assert(sc.currentVersion === 1)
+    assert(!new java.io.File(s"$dir/.build-v2").exists(), "the failed build's scratch is released")
+    assert(statuses(sc.classify(Seq((910L, tA)).toDF("doc_id", "text"))) === Seq((910L, "exact")),
+      "the absorbed doc stays live in the retained deltas")
+    assert(StandingCorpus.open(spark, dir).currentVersion === 1)
+    // the next compaction publishes and clears the failure
+    assert(statuses(sc.classifyAbsorb(Seq((901L, tB)).toDF("doc_id", "text")))
+      === Seq((901L, "new")))
+    sc.awaitCompaction()
+    assert(sc.lastCompactionFailure.isEmpty && sc.currentVersion === 2)
+    val st = statuses(sc.classify(Seq((911L, tA), (912L, tB)).toDF("doc_id", "text"))).toMap
+    assert(st(911L) === "exact" && st(912L) === "exact")
+  }
+
+  test("each standing table's driver partition bucket equals its Column form") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val longs = Gen.frequency(
+      1 -> Gen.oneOf(Long.MinValue, Long.MinValue + 1, -1L, 0L, 1L, Long.MaxValue),
+      1 -> Gen.choose(-1000L, 1000L),
+      3 -> Gen.long)
+    val hex = Gen.frequency(
+      1 -> Gen.oneOf("0" * 32, "f" * 32, "7" + "f" * 31, "8" + "0" * 31),
+      3 -> Gen.listOfN(32, Gen.oneOf("0123456789abcdef".toSeq)).map(_.mkString))
+    val rowGen = for {
+      text <- Gen.alphaNumStr
+      h <- hex
+      id <- longs
+      key <- longs
+    } yield Row(text, h, id, key)
+    val rows = (0 until 500).flatMap(i => rowGen.apply(Gen.Parameters.default, Seed(20261019L + i)))
+    assert(rows.length === 500)
+    // an RDD-backed frame: the Column forms run as a codegen job
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), StructType(Seq(
+      StructField("text", StringType), StructField("hex", StringType),
+      StructField("id", LongType), StructField("key", LongType))))
+      .withColumn("md5", md5(col("text")))
+    for (p <- Seq(1, 3, 16, 97, 4096, 65536)) {
+      df.select(col("md5"), col("hex"), col("id"), col("key"),
+        StandingCorpus.pbHash(col("md5"), p), StandingCorpus.pbHash(col("hex"), p),
+        StandingCorpus.pbSig(col("id"), p), StandingCorpus.pbIdx(col("key"), p))
+        .collect().foreach { r =>
+          val what = s"p=$p row=$r"
+          assert(StandingCorpus.pbHashLocal(r.getString(0), p) === r.getInt(4), s"md5 $what")
+          assert(StandingCorpus.pbHashLocal(r.getString(1), p) === r.getInt(5), s"hex $what")
+          assert(StandingCorpus.pbSigLocal(r.getLong(2), p) === r.getInt(6), s"id $what")
+          assert(StandingCorpus.pbIdxLocal(r.getLong(3), p) === r.getInt(7), s"key64 $what")
+        }
+    }
+  }
+
   test("uncapped params (maxBucketSize <= 0): absorbed docs are still found by later batches") {
     val dir = tmpDir()
     // maxBucketSize <= 0 is Lsh.capBuckets' UNCAPPED contract — absorb
