@@ -52,20 +52,27 @@ object SparkEntry {
     * hash-aggregates). */
   private def tPar(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
-    // for a directory-shaped parquet dataset File.length() returns the
-    // directory inode size (~4 KB), which would silently disable the
-    // size gate forever — sum the part files instead
-    val f = new java.io.File(s"$dir/$name.parquet")
-    val len =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(_.isFile).map(_.length()).sum
-      else f.length()
+    val len = datasetBytes(new java.io.File(s"$dir/$name.parquet"))
     val par = s.sparkContext.defaultParallelism
     val naturalSplits = len / (128L << 20) + 1
     if (len > 256L * 1024 && naturalSplits < par) df.repartition(par)
     else df
   }
+
+  /** Bytes of the dataset at `f`: a file's length, or for a directory
+    * dataset the data files (names not starting with `.` or `_`, as Spark
+    * lists them) at any depth — a hive-partitioned parquet dir keeps its
+    * part files in `key=value` subdirs. (A directory's own length is its
+    * inode size, ~4 KB, which would disable [[tPar]]'s gate forever.) */
+  private[graft] def datasetBytes(f: java.io.File): Long =
+    if (!f.isDirectory) f.length()
+    else {
+      val files = java.nio.file.Files.walk(f.toPath)
+      try files.filter(p => java.nio.file.Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith(".") && !p.getFileName.toString.startsWith("_"))
+        .mapToLong(java.nio.file.Files.size(_)).sum()
+      finally files.close()
+    }
 
   /** Checked-in reference-parity fixtures (generated by EXECUTING the
     * reference on its own 20k synthetic corpus — see ReferenceParitySpec).

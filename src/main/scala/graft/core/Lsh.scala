@@ -132,6 +132,15 @@ object Lsh {
         .select("id", "band", "key64", "key64b")
     }
 
+  /** [[postings]]' driver form before the cap, over signed (id,
+    * signature) rows: their (id, band, key64, key64b) quads, keys from
+    * [[queryKeysLocal]], ids ascending — the admission order under which
+    * [[DriverIndex.append]]'s cap is keep-smallest-ids. */
+  def postingsLocal(rows: Seq[(Long, Array[Long])], p: Params): Array[Long] =
+    rows.sortBy(_._1).iterator.flatMap { case (id, sig) =>
+      queryKeysLocal(sig, p).iterator.flatMap(t => Iterator(id, t._1.toLong, t._2, t._3))
+    }.toArray
+
   /** Everything the driver holds for one index, in ONE slot of the
     * per-index LRU: the cached distributed stats frame ([[bucketSizes]]),
     * the driver bucket-size table ([[warmDriverStats]], or the replica's
@@ -140,7 +149,7 @@ object Lsh {
     * without the LRU's lock. */
   private final class IndexState {
     @volatile var stats: DataFrame = _
-    @volatile var sizes: Slots = _
+    @volatile var sizes: DriverIndex = _
     @volatile var replica: DriverIndex = _
     val probeCache = new ProbeCache
   }
@@ -186,16 +195,17 @@ object Lsh {
     * Past it the stats stay distributed: a driver table stops being
     * scale-safe there (at 100 TB the stats table itself is distributed).
     *
-    * Sizing note: both are the open-addressed [[Slots]] table, at most
-    * 2^21 slots here, each two key longs and an Int count (20 bytes), so a
-    * full table is at most ~40 MB. A replica adds a member-array
-    * reference per slot, 4 bytes per posting and a 16-byte header per
-    * bucket (~70 MB in all at 2^20 postings) plus its signatures (see
-    * [[DriverReplicaMaxDocs]], ~129 MiB). A record without a replica may
-    * instead fill its probe cache (~160 MB, [[ProbeCacheMaxSigs]]). One
-    * LRU slot holds all of an index's driver state, so the 8-slot LRU
-    * bounds the worst case at ~1.6 GB — a serving driver should be sized
-    * for that, or this constant lowered. */
+    * Sizing note: both are a [[DriverIndex]] bucket table: per bucket a
+    * (key64, key64b) pair (16 bytes, up to 24 with growth slack), a slot
+    * Int at 25-50% load (8-16 bytes) and an Int size (4), so at most
+    * 2^20 buckets take ~40 MB. A replica adds per bucket a member-array
+    * reference, an Int member count and a 16-byte array header, and 4
+    * bytes per posting (~75 MB in all at 2^20 postings), plus its
+    * signatures (see [[DriverReplicaMaxDocs]], ~129 MiB). A record
+    * without a replica may instead fill its probe cache (~160 MB,
+    * [[ProbeCacheMaxSigs]]). One LRU slot holds all of an index's driver
+    * state, so the 8-slot LRU bounds the worst case at ~1.6 GB — a
+    * serving driver should be sized for that, or this constant lowered. */
   final val DriverStatsMaxEntries: Long = 1L << 20
 
   /** Ceiling on DISTINCT doc ids the full driver replica
@@ -204,8 +214,9 @@ object Lsh {
     * caps to few postings while its sigs table stays huge), so the
     * replica also requires the REFERENCED id set — the only docs a probe
     * can ever surface — to stay under this bound. The flat layout spends
-    * 8 bytes per signature slot plus 8 bytes per id, so a full replica of
-    * 128-slot signatures is ~129 MiB in two primitive arrays. */
+    * 8 bytes per signature slot, plus per doc its id pair and slot in the
+    * doc table (~32-40 bytes) and two row links (8), so a full replica of
+    * 128-slot signatures is ~133 MiB. */
   final val DriverReplicaMaxDocs: Int = 1 << 17
 
   /** Largest batch the capped [[queryBatch]] will collect to the driver
@@ -229,77 +240,273 @@ object Lsh {
       }
     }
 
-  private def driverSizes(index: DataFrame): Option[Slots] =
+  private def driverSizes(index: DataFrame): Option[DriverIndex] =
     Option(stateOf(index, create = false)).flatMap(st => Option(st.sizes))
 
-  /** A bucket-size table from a stats frame's `(key64, key64b, n)` rows. */
-  private def sizeTable(stats: DataFrame): Slots = {
-    val rows = stats.select("key64", "key64b", "n").collect()
-    val t = new Slots(rows.length)
-    rows.foreach(r => t.add(r.getLong(0), r.getLong(1), r.getLong(2).toInt))
+  /** A bucket-size table (a driver index with sizes only) from a stats
+    * frame's `(key64, key64b, n)` rows. */
+  private def sizeTable(stats: DataFrame): DriverIndex = {
+    val t = new DriverIndex
+    stats.select("key64", "key64b", "n").collect()
+      .foreach(r => t.post(r.getLong(0), r.getLong(1), -1, r.getLong(2).toInt))
     t
   }
 
-  /** Driver-RESIDENT serving replica of a small index, the reference's
-    * per-worker in-memory tables (worker_tasks.py:79-117) rebuilt on the
-    * driver over primitive arrays. A warmed capped probe over it runs
-    * ZERO Spark jobs — candidate lookup, scoring and top-k are
-    * in-process, the reference's own serving architecture — so a served
-    * single-vector probe drops from the multi-job scheduler floor
-    * (~250 ms) to about a millisecond. Strictly a fast path: results are
-    * bit-identical to [[querySignature]] (same band-prefix cap fold, same
-    * m/128 estimated-Jaccard arithmetic, same score-desc/id-asc order),
-    * pinned by LshKernelSpec. Indexes above [[DriverStatsMaxEntries]]
-    * postings never build one — at 100 TB the index is disk/cluster
-    * resident and probes stay distributed (or go through the bucketed
-    * parquet path).
+  /** THE driver-resident LSH index, the reference's per-worker in-memory
+    * tables (worker_tasks.py:79-117) rebuilt on the driver over primitive
+    * arrays. It serves two callers:
+    *  - the `/query` serving replica ([[warmDriverIndex]]): a warmed
+    *    capped probe over it runs ZERO Spark jobs — candidate lookup,
+    *    scoring and top-k are in-process — so a served single-vector probe
+    *    drops from the multi-job scheduler floor (~250 ms) to about a
+    *    millisecond. Results are bit-identical to [[querySignature]]
+    *    (same band-prefix cap fold, same m/128 estimated-Jaccard
+    *    arithmetic, same score-desc/id-asc order), pinned by
+    *    LshKernelSpec. Indexes above [[DriverStatsMaxEntries]] postings
+    *    never build one;
+    *  - the standing corpus's driver view (StandingCorpus): base and
+    *    absorbed deltas, grown by trickle absorbs.
     *
-    * Layout: the referenced ids sorted ascending (a doc's POSITION is its
-    * rank, so position order is id order), every signature in one flat
-    * array at `position * width`, and the index's bucket-size table whose
-    * buckets also hold their members' positions ascending. */
-  final class DriverIndex private[Lsh] (
-      private[Lsh] val ids: Array[Long],
-      private[Lsh] val width: Int,
-      private[Lsh] val sigs: Array[Long],
-      // positions of referenced ids with no signature row (never scored)
-      private[Lsh] val unsigned: java.util.BitSet,
-      private[Lsh] val table: Slots,
-      // table slot -> the bucket's member positions, ascending (null: free)
-      private[Lsh] val members: Array[Array[Int]]) {
-    private[Lsh] def bucket(key: Long, keyB: Long): Array[Int] = members(table.slot(key, keyB))
+    * Layout: docs are numbered by POSITION in a (id, 0) [[Slots]] table;
+    * each position chains its signature rows (newest first; a doc with
+    * several rows scores by its best one, as the plans' per-id top-k
+    * does; a null signature is never stored, so it never scores) into one
+    * flat array at `row * width`. Buckets are numbered in a (key64,
+    * key64b) table; each holds its occupancy (postings with a null id
+    * included: they count toward the cap but are never candidates) and
+    * its member positions in arrival order. A third table holds md5s as
+    * two longs. [[append]] is the one way in; one append numbers its new
+    * ids ascending, so an index loaded by one append (the `/query`
+    * replica) has position order = id order — TopK's tie rule. */
+  final class DriverIndex {
+    private[Lsh] val buckets = new Slots
+    private[Lsh] var sizes = new Array[Int](16)
+    private[Lsh] var members = new Array[Array[Int]](16)
+    private[Lsh] var filled = new Array[Int](16)
+    private[Lsh] val docs = new Slots
+    // position -> its newest row + 1; row -> the doc's next older row + 1 (0: none)
+    private[Lsh] var first = new Array[Int](16)
+    private[Lsh] var next = new Array[Int](16)
+    private[Lsh] var sigs = Array.emptyLongArray
+    private[Lsh] var width = 0
+    private[Lsh] var rows = 0
+    private val md5s = new Slots
+
+    /** Bucket (key, keyB)'s occupancy, 0 when absent. */
+    def size(key: Long, keyB: Long): Int = {
+      val b = buckets.find(key, keyB)
+      if (b < 0) 0 else sizes(b)
+    }
+
+    /** Each member id of bucket (key, keyB), arrival order. */
+    private[graft] def foreachMember(key: Long, keyB: Long)(f: Long => Unit): Unit = {
+      val b = buckets.find(key, keyB)
+      var j = 0
+      while (b >= 0 && j < filled(b)) { f(docs.a(members(b)(j))); j += 1 }
+    }
+
+    /** The most slots any signature row of position `p` shares with `q`
+      * (-1 when p has none), and the row that does. */
+    private[Lsh] def bestMatch(p: Int, q: Array[Long]): Int = {
+      var best = -1
+      var r = first(p) - 1
+      while (r >= 0) { best = best max matchCount(q, sigs, r * width, width); r = next(r) - 1 }
+      best
+    }
+    private[Lsh] def bestRow(p: Int, q: Array[Long]): Int = {
+      val m = bestMatch(p, q)
+      var r = first(p) - 1
+      while (matchCount(q, sigs, r * width, width) != m) r = next(r) - 1
+      r
+    }
+
+    /** Does some signature row of doc `id` estimate at least `t` against `q`? */
+    private[graft] def near(id: Long, q: Array[Long], t: Double): Boolean = {
+      val p = docs.find(id, 0L)
+      p >= 0 && { val m = bestMatch(p, q); m >= 0 && score(m, width) >= t }
+    }
+
+    private[graft] def holdsMd5(h: String): Boolean = md5s.find(md5Half(h, 0), md5Half(h, 1)) >= 0
+
+    /** Count `n` postings into bucket (key, keyB), member `p` unless p < 0. */
+    private[Lsh] def post(key: Long, keyB: Long, p: Int, n: Int): Unit = {
+      val b = buckets.add(key, keyB)
+      sizes = grow(sizes, b + 1)
+      members = grow(members, b + 1)
+      filled = grow(filled, b + 1)
+      sizes(b) += n
+      if (p >= 0) {
+        val m = members(b)
+        if (m == null) members(b) = new Array[Int](1)
+        else if (filled(b) == m.length) members(b) = java.util.Arrays.copyOf(m, 2 * m.length)
+        members(b)(filled(b)) = p
+        filled(b) += 1
+      }
+    }
+
+    /** THE append — the base loads ([[warmDriverIndex]], the standing
+      * corpus's build seeding and open) and the trickle absorb share it,
+      * and it is the driver form of [[admitUnderCap]]: `in`'s postings are
+      * admitted in order while their bucket's occupancy here plus in
+      * `outside` (null: none) stays under `cap` (`cap <= 0`: all). For
+      * postings arriving id-ascending per bucket ([[postingsLocal]]) that
+      * is the in-batch keep-smallest cap and admit-under-cap at once;
+      * loads pass 0. Postings with a null id count but are never members.
+      * Returns the admitted quads. */
+    def append(in: Rows, cap: Int, outside: DriverIndex): Array[Long] = {
+      sortedDistinct(Array.tabulate(in.posts.length / 4)(i => in.posts(4 * i)) ++ in.sigIds)
+        .foreach { i => first = grow(first, docs.add(i, 0L) + 1) }
+      val admitted = new scala.collection.mutable.ArrayBuilder.ofLong
+      var i = 0
+      while (i < in.posts.length) {
+        val (k, kb) = (in.posts(i + 2), in.posts(i + 3))
+        if (cap <= 0 || size(k, kb) + (if (outside == null) 0 else outside.size(k, kb)) < cap) {
+          post(k, kb, docs.find(in.posts(i), 0L), 1)
+          if (cap > 0) admitted.addAll(in.posts, i, 4)
+        }
+        i += 4
+      }
+      i = 0
+      while (i < in.nullPosts.length) { post(in.nullPosts(i), in.nullPosts(i + 1), -1, 1); i += 2 }
+      // rows stored in position order: on the `/query` build a doc's row is its position
+      val signed = in.sigs.indices.filter(in.sigs(_) != null)
+        .sortBy(i => docs.find(in.sigIds(i), 0L))
+      if (signed.nonEmpty) {
+        if (rows == 0) width = in.sigs(signed.head).length
+        sigs = grow(sigs, (rows + signed.length) * width)
+        next = grow(next, rows + signed.length)
+      }
+      signed.foreach { i =>
+        System.arraycopy(in.sigs(i), 0, sigs, rows * width, width)
+        val p = docs.find(in.sigIds(i), 0L)
+        next(rows) = first(p)
+        rows += 1
+        first(p) = rows
+      }
+      i = 0
+      while (i < in.md5s.length) { md5s.add(in.md5s(i), in.md5s(i + 1)); i += 2 }
+      if (cap <= 0) in.posts else admitted.result()
+    }
   }
 
-  /** The driver bucket-size table: open-addressed (key64, key64b) slots
-    * for up to `n` buckets at 25-50% load, probed linearly from key64's
-    * folded low bits (key64 is already an xxhash, so they spread evenly),
-    * each holding its bucket's posting count. A bucket's identity is the
-    * key pair alone, as in the replica probe: both keys hash the band. */
-  private[Lsh] final class Slots(n: Int) {
-    val mask: Int = (Integer.highestOneBit(math.max(1, 2 * n - 1)) << 1) - 1
-    val keys = new Array[Long](2 * (mask + 1))
-    /** Postings per slot's bucket; 0 marks a free slot. */
-    val sizes = new Array[Int](mask + 1)
+  /** Rows for [[DriverIndex.append]], columnar: postings as (id, band,
+    * key64, key64b) quads in admission order, the (key64, key64b) of
+    * postings with a null id, signature rows (id, signature or null) and
+    * md5s as (hi, lo) pairs. */
+  final case class Rows(posts: Array[Long] = Array.emptyLongArray,
+                        nullPosts: Array[Long] = Array.emptyLongArray,
+                        sigIds: Array[Long] = Array.emptyLongArray,
+                        sigs: Array[Array[Long]] = Array.empty,
+                        md5s: Array[Long] = Array.emptyLongArray)
 
-    /** The slot (key, keyB) occupies, or the free slot it would claim. */
-    def slot(key: Long, keyB: Long): Int = {
-      var s = (key ^ (key >>> 32)).toInt & mask
-      while (sizes(s) > 0 && (keys(2 * s) != key || keys(2 * s + 1) != keyB)) s = (s + 1) & mask
+  /** `rs` as one [[Rows]], in order. */
+  private[graft] def concat(rs: Seq[Rows]): Rows = Rows(Array.concat(rs.map(_.posts): _*),
+    Array.concat(rs.map(_.nullPosts): _*), Array.concat(rs.map(_.sigIds): _*),
+    Array.concat(rs.map(_.sigs): _*), Array.concat(rs.map(_.md5s): _*))
+
+  /** `a`, or a copy of it grown to at least `n` elements (by half again
+    * when that is more, so appends stay amortized O(1)). */
+  private def grow[A](a: Array[A], n: Int): Array[A] =
+    if (n <= a.length) a else Array.copyOf(a, math.max(n, a.length + a.length / 2))
+
+  /** Half `i` (0: the first 16 hex digits) of an md5 hex as a long. */
+  private[graft] def md5Half(hex: String, i: Int): Long =
+    java.lang.Long.parseUnsignedLong(hex.substring(16 * i, 16 * i + 16), 16)
+
+  /** md5 hexes (null ones skipped) as (hi, lo) pairs. */
+  private[graft] def md5Pairs(hexes: Iterator[String]): Array[Long] =
+    hexes.filter(_ != null).flatMap(h => Iterator(md5Half(h, 0), md5Half(h, 1))).toArray
+
+  /** Open-addressed table numbering (a, b) long pairs 0, 1, 2, ... in
+    * first-seen order: a driver index's bucket table (key64, key64b), its
+    * doc table (id, 0) and its md5 set. Slots hold a pair's number + 1
+    * (0 marks a free slot) at 25-50% load, probed linearly from `a`'s
+    * Fibonacci-mixed bits; the table doubles in place past half full,
+    * and numbers — and the pairs, stored by number — never move. */
+  private[Lsh] final class Slots {
+    private var mask = 15
+    private var slots = new Array[Int](16)
+    private var pairs = new Array[Long](16)
+    private var count = 0
+
+    private def home(a: Long): Int = {
+      val h = a * 0x9E3779B97F4A7C15L
+      (h ^ (h >>> 32)).toInt & mask
+    }
+
+    private def slot(a: Long, b: Long): Int = {
+      var s = home(a)
+      while (slots(s) != 0 && (pairs(2 * slots(s) - 2) != a || pairs(2 * slots(s) - 1) != b))
+        s = (s + 1) & mask
       s
     }
 
-    /** Bucket (key, keyB)'s size, 0 when absent. */
-    def size(key: Long, keyB: Long): Int = sizes(slot(key, keyB))
+    /** (a, b)'s number, -1 when absent. */
+    def find(a: Long, b: Long): Int = slots(slot(a, b)) - 1
 
-    /** Count `n` >= 1 more postings into bucket (key, keyB); returns its slot. */
-    def add(key: Long, keyB: Long, n: Int): Int = {
-      val s = slot(key, keyB)
-      keys(2 * s) = key
-      keys(2 * s + 1) = keyB
-      sizes(s) += n
-      s
+    /** (a, b)'s number, numbering it next when absent. */
+    def add(a: Long, b: Long): Int = {
+      val s = slot(a, b)
+      if (slots(s) > 0) slots(s) - 1
+      else {
+        pairs = grow(pairs, 2 * count + 2)
+        pairs(2 * count) = a
+        pairs(2 * count + 1) = b
+        count += 1
+        slots(s) = count
+        if (2 * count > mask) {
+          mask = 2 * mask + 1
+          slots = new Array[Int](mask + 1)
+          var i = 0
+          while (i < count) {
+            var t = home(pairs(2 * i))
+            while (slots(t) != 0) t = (t + 1) & mask
+            slots(t) = i + 1
+            i += 1
+          }
+        }
+        count - 1
+      }
     }
+
+    def a(i: Int): Long = pairs(2 * i)
+    def size: Int = count
   }
+
+  /** `df`'s rows folded per partition by `pack` on the executors and
+    * collected: a driver load that builds no Row per row. */
+  private def collectPacked[A: scala.reflect.ClassTag](df: DataFrame)(
+      pack: Iterator[org.apache.spark.sql.catalyst.InternalRow] => A): Array[A] =
+    df.queryExecution.toRdd.mapPartitions(it => Iterator(pack(it))).collect()
+
+  /** A postings frame's (id, band, key64, key64b) rows as [[Rows]]; a
+    * row with a null band or key joins nothing and is dropped. */
+  private[graft] def loadPostings(df: DataFrame): Rows =
+    concat(collectPacked(df.select("id", "band", "key64", "key64b")) { it =>
+      val q, n = new scala.collection.mutable.ArrayBuilder.ofLong
+      it.foreach { r =>
+        if (!r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3)) {
+          if (r.isNullAt(0)) n.addOne(r.getLong(2)).addOne(r.getLong(3))
+          else q.addOne(r.getLong(0)).addOne(r.getInt(1)).addOne(r.getLong(2)).addOne(r.getLong(3))
+        }
+      }
+      Rows(posts = q.result(), nullPosts = n.result())
+    })
+
+  /** A signature frame's (doc_id, sig) rows as [[Rows]]; a null id joins
+    * nothing and is dropped, a null signature is kept as null. */
+  private[graft] def loadSigs(df: DataFrame): Rows =
+    concat(collectPacked(df.select("doc_id", "sig")) { it =>
+      val kept = it.filterNot(_.isNullAt(0))
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).toLongArray())).toArray
+      Rows(sigIds = kept.map(_._1), sigs = kept.map(_._2))
+    })
+
+  /** A frame's md5 hex column `_h` as [[Rows]]. */
+  private[graft] def loadMd5s(df: DataFrame): Rows =
+    concat(collectPacked(df.select("_h")) { it =>
+      Rows(md5s = md5Pairs(it.map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).toString)))
+    })
 
   /** Build the driver serving replica if the index is small enough (one
     * collect over the cached postings + one over the cached signatures —
@@ -311,36 +518,27 @@ object Lsh {
     if (driverIndexFor(index).isDefined) true
     else if (index.count() > DriverStatsMaxEntries) false
     else {
-      val postRows = index.select("key64", "key64b", "id").collect()
+      val posts = loadPostings(index)
       // gate the signature collect on the REFERENCED id count, not the
       // postings count: a capped index over a heavily-duplicated corpus
       // can be tiny while the sigs table is not, and only docs present in
       // some bucket can ever be candidates — so the replica semi-joins
       // sigs to the postings ids instead of collecting the whole table
-      val ids = sortedDistinct(postRows.map(_.getLong(2)))
+      val ids = sortedDistinct(Array.tabulate(posts.posts.length / 4)(i => posts.posts(4 * i)))
       if (ids.length > DriverReplicaMaxDocs) false
       else {
         val spark = sigs.sparkSession
         import spark.implicits._
-        val sigRows = sigs
-          .join(broadcast(ids.toSeq.toDF("rid")), sigs("doc_id") === col("rid"), "left_semi")
-          .select("doc_id", "sig").collect()
-        val width = sigRows.headOption.filterNot(_.isNullAt(1)).map(_.getSeq[Long](1).length)
-          .getOrElse(0)
-        if (sigRows.exists(r => r.isNullAt(1) || r.getSeq[Long](1).length != width)) false
+        val signed = loadSigs(sigs
+          .join(broadcast(ids.toSeq.toDF("rid")), sigs("doc_id") === col("rid"), "left_semi"))
+        val width = signed.sigs.headOption.fold(0)(s => if (s == null) -1 else s.length)
+        if (signed.sigs.exists(s => s == null || s.length != width)) false
         else {
-          val flat = new Array[Long](ids.length * width)
-          val unsigned = new java.util.BitSet(ids.length)
-          unsigned.set(0, ids.length)
-          sigRows.foreach { r =>
-            val p = java.util.Arrays.binarySearch(ids, r.getLong(0))
-            r.getSeq[Long](1).copyToArray(flat, p * width)
-            unsigned.clear(p)
-          }
-          val (table, members) = bucketTable(ids, postRows)
+          val di = new DriverIndex
+          di.append(concat(Seq(posts, signed)), 0, null)
           val st = stateOf(index, create = true)
-          st.sizes = table
-          st.replica = new DriverIndex(ids, width, flat, unsigned, table, members)
+          st.sizes = di
+          st.replica = di
           true
         }
       }
@@ -356,26 +554,6 @@ object Lsh {
       i += 1
     }
     java.util.Arrays.copyOf(xs, n)
-  }
-
-  /** Group `(key64, key64b, id)` postings into the replica's bucket
-    * table (slots for one bucket per posting), each bucket's member
-    * positions ascending. */
-  private def bucketTable(ids: Array[Long], postRows: Array[org.apache.spark.sql.Row])
-      : (Slots, Array[Array[Int]]) = {
-    val table = new Slots(postRows.length)
-    val slotOfPosting = postRows.map(r => table.add(r.getLong(0), r.getLong(1), 1))
-    val members = table.sizes.map(c => if (c == 0) null else new Array[Int](c))
-    val filled = new Array[Int](members.length)
-    var i = 0
-    while (i < postRows.length) {
-      val s = slotOfPosting(i)
-      members(s)(filled(s)) = java.util.Arrays.binarySearch(ids, postRows(i).getLong(2))
-      filled(s) += 1
-      i += 1
-    }
-    members.foreach(m => if (m != null) java.util.Arrays.sort(m))
-    (table, members)
   }
 
   def driverIndexFor(index: DataFrame): Option[DriverIndex] =
@@ -407,14 +585,15 @@ object Lsh {
                        querySig: Array[Long], k: Int,
                        maxCandidates: Int): Seq[(Long, Double, Seq[Long])] = {
     // candidate positions, de-duplicated through a per-probe bitset
-    val seen = new Array[Long]((di.ids.length + 63) >>> 6)
+    val seen = new Array[Long]((di.docs.size + 63) >>> 6)
     val found = new scala.collection.mutable.ArrayBuilder.ofInt
     foldBands(qpRows, maxCandidates) { t =>
-      val ps = di.bucket(t._2, t._3)
-      if (ps == null) 0
+      val b = di.buckets.find(t._2, t._3)
+      if (b < 0) 0
       else {
+        val ps = di.members(b)
         var j = 0
-        while (j < ps.length) {
+        while (j < di.filled(b)) {
           val p = ps(j)
           if ((seen(p >>> 6) & (1L << p)) == 0) {
             seen(p >>> 6) |= 1L << p
@@ -422,20 +601,24 @@ object Lsh {
           }
           j += 1
         }
-        ps.length
+        di.sizes(b)
       }
     }
+    // ascending positions are ascending ids: TopK's tie order
     val cands = found.result()
     java.util.Arrays.sort(cands)
     val w = di.width
     val top = new TopK(k, cands.length)
     var j = 0
     while (j < cands.length) {
-      val p = cands(j)
-      if (!di.unsigned.get(p)) top.offer(score(matchCount(querySig, di.sigs, p * w, w), w), p)
+      val m = di.bestMatch(cands(j), querySig)
+      if (m >= 0) top.offer(score(m, w), cands(j))
       j += 1
     }
-    top.result((p, s) => (di.ids(p), s, di.sigs.slice(p * w, p * w + math.min(10, w)).toSeq))
+    top.result { (p, s) =>
+      val r = di.bestRow(p, querySig)
+      (di.docs.a(p), s, di.sigs.slice(r * w, r * w + math.min(10, w)).toSeq)
+    }
   }
 
   /** THE driver band-prefix fold — every driver tier's, and the driver
@@ -535,8 +718,9 @@ object Lsh {
     private[Lsh] val buckets =
       new java.util.LinkedHashMap[(Int, Long, Long), Array[Long]](128, 0.75f, true)
     private[Lsh] var residentPostings: Long = 0L
+    // id -> its signature rows (a doc scores by its best row)
     private[Lsh] val sigsById =
-      new java.util.LinkedHashMap[Long, Array[Long]](256, 0.75f, true)
+      new java.util.LinkedHashMap[Long, Array[Array[Long]]](256, 0.75f, true)
   }
 
   /** Capped single probe through the per-index [[ProbeCache]] — the
@@ -669,7 +853,7 @@ object Lsh {
     // eviction (by this probe or a racing one) can never silently drop a
     // candidate. Resident lookups under the monitor; the miss fetch — a
     // cluster job — again outside it.
-    val probeSigs = new java.util.HashMap[Long, Array[Long]]()
+    val probeSigs = new java.util.HashMap[Long, Array[Array[Long]]]()
     val missingIds = pc.synchronized {
       val b = Array.newBuilder[Long]
       cands.foreach { id =>
@@ -680,8 +864,8 @@ object Lsh {
     }
     if (missingIds.nonEmpty) {
       val got = sigs.filter(col("doc_id").isin(missingIds.toSeq: _*))
-        .select("doc_id", "sig").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
+        .select("doc_id", "sig").collect().filterNot(_.isNullAt(1))
+        .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getSeq[Long](1).toArray) }
       got.foreach { case (id, sig) => probeSigs.put(id, sig) }
       pc.synchronized {
         got.foreach { case (id, sig) => pc.sigsById.put(id, sig) }
@@ -691,16 +875,17 @@ object Lsh {
         }
       }
     }
-    // the replica's scoring and top-k over the sorted distinct ids: slot
-    // order is id order here too
+    // the replica's scoring (each id by its best row) and top-k over the
+    // sorted distinct ids: slot order is id order here too
+    def est(sig: Array[Long]) = score(matchCount(querySig, sig, 0, sig.length), sig.length)
     val top = new TopK(k, cands.length)
     var i = 0
     while (i < cands.length) {
-      val sig = probeSigs.get(cands(i))
-      if (sig != null) top.offer(score(matchCount(querySig, sig, 0, sig.length), sig.length), i)
+      val rows = probeSigs.get(cands(i))
+      if (rows != null) top.offer(rows.map(est).max, i)
       i += 1
     }
-    top.result((i, s) => (cands(i), s, probeSigs.get(cands(i)).take(10).toSeq))
+    top.result((i, s) => (cands(i), s, probeSigs.get(cands(i)).maxBy(est).take(10).toSeq))
   }
 
   /** Allowed-band whitelist from per-(group, band) bucket sizes: for each
@@ -792,33 +977,32 @@ object Lsh {
                                  statsOf: DataFrame): DataFrame = {
     val spark = sigs.sparkSession
     import spark.implicits._
+    import graft.functions.TopKByScore.top_k_by_score_distinct_preview
+    // the query vector travels as DATA (broadcast 1-row frame), not as a
+    // 128-literal expression: every probe then reuses the same compiled
+    // plan — codegen recompilation per query was the dominant latency
+    // cost. The top-k aggregate keeps each id's best row (a doc with
+    // several signature rows scores by its best) and carries that row's
+    // vector preview as a payload (no re-join); its eval() emits entries
+    // sorted (score desc, id asc) and posexplode preserves array order.
+    val qdf = Seq(Tuple1(querySig.toSeq)).toDF("qsig")
+    def topK(cand: DataFrame): DataFrame =
+      sigs.join(broadcast(cand), sigs("doc_id") === cand("id"))
+        .crossJoin(broadcast(qdf))
+        .agg(top_k_by_score_distinct_preview(
+          graft.functions.GraftFunctions.est_jaccard(col("sig"), col("qsig")),
+          col("doc_id"), slice(col("sig"), 1, 10), k).as("topk"))
+        .select(posexplode(col("topk")).as(Seq("pos", "hit")))
+        .select(col("hit.id").as("id"), col("hit.score").as("score"),
+          col("hit.preview").as("vector_preview"))
     if (maxCandidates <= 0) {
       // UNCAPPED probe: keep the distinct() dedup — on a skewed corpus the
       // band-duplication factor multiplies scored rows up to 32x (the
       // round-1 measured 16M-vs-950k blowup), which the cap otherwise
-      // bounds.
+      // bounds. The trailing sort + limit over the <= k rows plans as one
+      // TakeOrderedAndProject (partial + merge), the global top-k form.
       val qp = queryPostings(spark, querySig, p)
-      val cand = index.join(broadcast(qp), joinKeys).select("id").distinct()
-      // the query vector travels as DATA (broadcast 1-row frame), not as a
-      // 128-literal expression: every probe then reuses the same compiled
-      // plan — codegen recompilation per query was the dominant latency cost
-      import graft.functions.TopKByScore.top_k_by_score_distinct
-      val qdf = Seq(Tuple1(querySig.toSeq)).toDF("qsig")
-      val top = sigs.join(broadcast(cand), sigs("doc_id") === cand("id"))
-        .crossJoin(broadcast(qdf))
-        .select(
-          col("id"),
-          graft.functions.GraftFunctions.est_jaccard(col("sig"), col("qsig")).as("score"))
-        .agg(top_k_by_score_distinct(col("score"), col("id"), k).as("topk"))
-        .select(posexplode(col("topk")).as(Seq("pos", "hit")))
-        .select(col("hit.id").as("id"), col("hit.score").as("score"))
-      // re-attach the vector preview: the k-row top side broadcasts, the
-      // cached sigs are scanned once with a codegen hash probe. The agg
-      // already yields <= k rows; the trailing limit makes the final sort a
-      // TakeOrderedAndProject (no range exchange) instead of a global Sort.
-      sigs.select(col("doc_id"), slice(col("sig"), 1, 10).as("vector_preview"))
-        .join(broadcast(top), col("doc_id") === top("id"))
-        .select(col("id"), col("score"), col("vector_preview"))
+      topK(index.join(broadcast(qp), joinKeys).select("id").distinct())
         .orderBy(desc("score"), asc("id"))
         .limit(k)
     } else {
@@ -831,29 +1015,15 @@ object Lsh {
       // table against the keys' LocalRelation (constant plan shape, no
       // codegen churn) fetches them. Either way [[foldBands]] picks the
       // allowed band prefix ON THE DRIVER, and the probe plan needs just
-      // two jobs: build the candidate broadcast, and the scoring scan
-      // whose top-k aggregate carries the vector preview as a payload (no
-      // re-join, no final sort).
+      // two jobs: build the candidate broadcast, and the scoring scan.
       val keys = queryKeysLocal(querySig, p)
       val sizes = driverSizes(statsOf).getOrElse(sizeTable(
         bucketSizes(statsOf).join(broadcast(keys.toSeq.toDF(joinKeys: _*)), joinKeys)))
       val allowed = foldBands(keys, maxCandidates)(t => sizes.size(t._2, t._3))
       // band-duplicated candidate rows are cap-bounded and the
-      // id-deduplicating top-k aggregate absorbs them (per-id scores are
-      // identical — same signature pair), so no distinct() exchange.
-      val cand = index.join(broadcast(allowed.toSeq.toDF(joinKeys: _*)), joinKeys).select("id")
-      import graft.functions.TopKByScore.top_k_by_score_distinct_preview
-      val qdf = Seq(Tuple1(querySig.toSeq)).toDF("qsig")
-      sigs.join(broadcast(cand), sigs("doc_id") === cand("id"))
-        .crossJoin(broadcast(qdf))
-        .agg(top_k_by_score_distinct_preview(
-          graft.functions.GraftFunctions.est_jaccard(col("sig"), col("qsig")),
-          col("doc_id"), slice(col("sig"), 1, 10), k).as("topk"))
-        .select(posexplode(col("topk")).as(Seq("pos", "hit")))
-        // the aggregate's eval() emits entries already sorted (score desc,
-        // id asc); posexplode preserves array order, so no trailing sort
-        .select(col("hit.id").as("id"), col("hit.score").as("score"),
-          col("hit.preview").as("vector_preview"))
+      // id-deduplicating top-k aggregate absorbs them, so no distinct()
+      // exchange.
+      topK(index.join(broadcast(allowed.toSeq.toDF(joinKeys: _*)), joinKeys).select("id"))
     }
   }
 

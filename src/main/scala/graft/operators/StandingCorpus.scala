@@ -57,19 +57,23 @@ import org.apache.spark.sql.functions._
   * ([[Lsh.warmDriverIndex]]: at most `Lsh.DriverReplicaMaxDocs` (2^17)
   * base docs and `Lsh.DriverStatsMaxEntries` (2^20) postings, bounded by
   * nDocs x bands), the base tables also live on the driver, in the same
-  * lookup view that holds the absorbed deltas — the reference's
-  * in-memory tables (worker_tasks.py:79-117). A trickle batch is then
-  * signed on the driver and answered from that one view of base ∪
-  * deltas: classify, classifyShared, absorb and classifyAbsorb over a
-  * driver-local (LocalRelation) batch run ZERO Spark jobs. The gate is
-  * evaluated on the base at build, open, compaction swap and compact;
-  * delta growth between those points is bounded by
-  * compactEveryBatches x trickleMaxDocs. Driver-heap cost at the gate:
-  * ~134 MB of 128-long signatures at 2^17 docs, plus the postings map at
-  * ~130-200 bytes per posting (boxed bucket triple + member array), i.e.
-  * up to ~200 MB at 2^20 postings, plus ~100 bytes per md5 hex. Above the
-  * gates the base stays on disk and the trickle fold reads it through the
-  * partition-pruned reads described above.
+  * [[Lsh.DriverIndex]] that holds the absorbed deltas (and serves the
+  * `/query` replica) — the reference's in-memory tables
+  * (worker_tasks.py:79-117). A trickle batch is then signed on the
+  * driver and answered from that one index of base ∪ deltas: classify,
+  * classifyShared, absorb and classifyAbsorb over a driver-local
+  * (LocalRelation) batch run ZERO Spark jobs. The gate is evaluated on
+  * the base at build, open, compaction swap and compact; delta growth
+  * between those points is bounded by compactEveryBatches x
+  * trickleMaxDocs. Driver-heap cost of the flat layout: per doc its
+  * 128-long signature (1 KiB) plus ~40 bytes of doc table and row
+  * links; per posting a 4-byte member position, plus ~50-70 bytes per
+  * bucket (key pair, slot, size, member count, member-array header),
+  * so ~55-75 bytes per posting when most buckets hold one doc; per md5
+  * 24-32 bytes (two longs and a slot). At the gate that is ~134 MB of
+  * signatures at 2^17 docs plus at most ~75 MB of buckets at 2^20
+  * postings. Above the gates the base stays on disk and the trickle fold
+  * reads it through the partition-pruned reads described above.
   *
   * Not thread-safe; call from a single ingest loop (Structured Streaming
   * serializes micro-batches per query).
@@ -206,77 +210,6 @@ object StandingCorpus {
     }
   }
 
-  /** Standing base rows the trickle fold saw in one bucket: its non-null
-    * member ids (what a join can surface as candidates) and its row
-    * count (the occupancy the cap counts — a null id takes a slot but
-    * joins nothing). */
-  private final case class BaseBucket(ids: Array[Long], n: Int)
-
-  /** Driver mirror of one absorbed delta generation — the same rows its
-    * three LocalRelation frames carry, as plain arrays so trickle probes
-    * consult deltas without a job. */
-  private final case class LocalDelta(hashes: Array[String],
-                                      sigs: Array[(Long, Array[Long])],
-                                      postings: Array[(Long, Int, Long, Long)])
-
-  /** Driver lookup view the trickle fold answers from: hash membership,
-    * signatures by id and postings by bucket triple over the absorbed
-    * deltas and, when `holdsBase` (the standing replica), the base
-    * tables too — each row exactly once. Base rows load as the pruned
-    * joins treat them: a null md5 or sig id is dropped (no join matches
-    * it), a null sig is kept (sigsOf filters it), a null posting id
-    * counts toward its bucket's occupancy only. The three `load*`
-    * methods touch disjoint maps, so the three tables can load on three
-    * threads; deltas are added under the owner's exclusive lock. */
-  private final class LocalView(val holdsBase: Boolean) {
-    val hashSet = scala.collection.mutable.HashSet.empty[String]
-    val sigsById = scala.collection.mutable.HashMap.empty[Long, List[Array[Long]]]
-    val postingsByTriple = scala.collection.mutable.HashMap
-      .empty[(Int, Long, Long), Array[Long]]
-    val nullIdPostings = scala.collection.mutable.HashMap.empty[(Int, Long, Long), Int]
-
-    def bucketCount(t: (Int, Long, Long)): Long =
-      postingsByTriple.get(t).fold(0L)(_.length.toLong) + nullIdPostings.getOrElse(t, 0)
-
-    /** Rows of (_h). */
-    def loadHashes(rows: Array[Row]): Unit =
-      rows.foreach(r => if (!r.isNullAt(0)) hashSet += r.getString(0))
-    /** Rows of (doc_id, sig). */
-    def loadSigs(rows: Array[Row]): Unit =
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) {
-          val id = r.getLong(0)
-          val sig = if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray
-          sigsById.update(id, sig :: sigsById.getOrElse(id, Nil))
-        }
-      }
-    /** Rows of (id, band, key64, key64b). */
-    def loadPostings(rows: Array[Row]): Unit = {
-      val acc = scala.collection.mutable.HashMap
-        .empty[(Int, Long, Long), scala.collection.mutable.ArrayBuilder.ofLong]
-      rows.foreach { r =>
-        if (!r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3)) {
-          val t = (r.getInt(1), r.getLong(2), r.getLong(3))
-          if (r.isNullAt(0)) nullIdPostings.update(t, nullIdPostings.getOrElse(t, 0) + 1)
-          else acc.getOrElseUpdate(t, new scala.collection.mutable.ArrayBuilder.ofLong) +=
-            r.getLong(0)
-        }
-      }
-      acc.foreach { case (t, b) => postingsByTriple.update(t, b.result()) }
-    }
-
-    def add(d: LocalDelta): Unit = {
-      d.hashes.foreach(h => if (h != null) hashSet += h)
-      d.sigs.foreach { case (id, sig) =>
-        sigsById.update(id, sig :: sigsById.getOrElse(id, Nil))
-      }
-      d.postings.groupBy(p => (p._2, p._3, p._4)).foreach { case (t, ps) =>
-        postingsByTriple.update(t,
-          postingsByTriple.getOrElse(t, Array.emptyLongArray) ++ ps.map(_._1))
-      }
-    }
-  }
-
   private def writePartitioned(df: DataFrame, pbCol: org.apache.spark.sql.Column,
                                nParts: Int, path: String,
                                sortKey: org.apache.spark.sql.Column,
@@ -346,34 +279,36 @@ object StandingCorpus {
     val view =
       if (nDocs <= ParallelBuildMaxDocs) {
         val sMat = s.localCheckpoint(true)
-        // under the replica gate each writer thread also seeds its table
-        // of the driver view from the frame it writes — the checkpointed
-        // signatures and postings, the docs' md5 projection — never by
-        // reading the written parquet back
-        val seeded = if (replicaFits(nDocs, lsh.bands)) new LocalView(holdsBase = true) else null
+        // under the replica gate each writer thread also collects its
+        // table's rows of the driver view from the frame it writes — the
+        // checkpointed signatures and postings, the docs' md5 projection —
+        // never by reading the written parquet back
+        val seeded = replicaFits(nDocs, lsh.bands)
+        var (hs, ss, ps) = (Lsh.Rows(), Lsh.Rows(), Lsh.Rows())
         try concurrently(
           "graft-standing-build-hashes" -> (() => {
             writeDocHashes()
-            if (seeded != null) seeded.loadHashes(docs.select(md5(col(textCol))).collect())
+            if (seeded) hs = Lsh.loadMd5s(docs.select(md5(col(textCol)).as("_h")))
           }),
           "graft-standing-build-sigs" -> (() => {
             writeSigs(sMat, meta, v)
-            if (seeded != null) seeded.loadSigs(sMat.select("doc_id", "sig").collect())
+            if (seeded) ss = Lsh.loadSigs(sMat)
           }),
           "graft-standing-build-index" -> (() =>
-            if (seeded == null) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh), meta, v)
+            if (!seeded) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh), meta, v)
             else {
               val post = Lsh.postings(sMat, "doc_id", "sig", lsh)
                 .select("id", "band", "key64", "key64b").localCheckpoint(true)
               try {
                 writeIndex(post, meta, v)
-                seeded.loadPostings(post.collect())
+                ps = Lsh.loadPostings(post)
               } finally QueryEngine.releaseFrame(post)
             }))
         // releaseFrame, not unpersist: Dataset.unpersist leaves a local
         // checkpoint's RDD persisted
         finally QueryEngine.releaseFrame(sMat)
-        seeded
+        val ix = new Lsh.DriverIndex
+        if (seeded) { ix.append(Lsh.concat(Seq(hs, ss, ps)), 0, null); ix } else null
       } else {
         writeDocHashes()
         writeSigs(s, meta, v)
@@ -451,7 +386,7 @@ object StandingCorpus {
 
 final class StandingCorpus private (val spark: SparkSession, val dir: String,
                                     private var meta: StandingCorpus.Meta,
-                                    builtView: StandingCorpus.LocalView) {
+                                    builtView: Lsh.DriverIndex) {
   import StandingCorpus._
 
   /** Batches above this size classify via the bulk scan path (one
@@ -490,10 +425,12 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * uniform hashes — the range spans the whole domain and prunes no row
     * groups. Raising the threshold keeps the In an OR-of-eq set so
     * row-group min/max pruning actually fires at real batch sizes
-    * (round-14 advice). Scoped to the probe action and restored after —
-    * the session-wide default stays put for every other query (e.g. the
-    * bucketed-probe IN lists, where a 32k-term parquet predicate would
-    * tax planning for nothing). */
+    * (round-14 advice). Raised for the probe action and restored after,
+    * but the conf is session-wide: while a window is open, any other
+    * query planned on the session (e.g. a bucketed probe's IN list,
+    * where a 32k-term parquet predicate taxes planning for nothing) also
+    * sees the raised threshold. A plan-local mechanism would close that
+    * (ROADMAP 7(a)). */
   // REFERENCE-COUNTED push-conf window: concurrent classifies (the
   // read-locked serving path) each open a window, and a naive
   // set/restore would race — one probe's restore could drop the raised
@@ -570,7 +507,10 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * null text) and signature. */
   private final case class BatchRow(id: java.lang.Long, h: String, sig: Array[Long])
 
-  private val localDeltas = scala.collection.mutable.ArrayBuffer.empty[LocalDelta]
+  /** The driver rows of each absorbed delta generation — what its three
+    * LocalRelation frames carry, as [[Lsh.DriverIndex.append]] takes them
+    * — so a rebuilt view re-appends them without a job. */
+  private val localDeltas = scala.collection.mutable.ArrayBuffer.empty[Lsh.Rows]
   private var deltasAllLocal = true
 
   /** Docs in the on-disk base — the replica gate's input. */
@@ -589,26 +529,35 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     if (want != view.holdsBase) resetView(want)
   }
 
-  /** The driver view the trickle fold reads (base ∪ local deltas under
-    * the replica gate, local deltas alone otherwise). Replaced or grown
-    * only under the owner's exclusive lock; volatile so concurrent
-    * read-locked classifies see the current one. */
-  @volatile private var view: LocalView = _
+  /** The driver view the trickle fold reads: a [[Lsh.DriverIndex]] of
+    * the local deltas and, when `holdsBase` (the standing replica), the
+    * base tables too — each row once. Base rows load as the pruned joins
+    * treat them: a null md5 or sig id is dropped (no join matches it), a
+    * null sig never scores, a null posting id counts toward its bucket's
+    * occupancy only. */
+  private final case class View(ix: Lsh.DriverIndex, holdsBase: Boolean)
 
-  /** Rebuild the view from the local deltas, over a fresh concurrent read
-    * of the base tables when `withBase`. */
+  /** Replaced or grown only under the owner's exclusive lock; volatile so
+    * concurrent read-locked classifies see the current one. */
+  @volatile private var view: View = _
+
+  /** Rebuild the view from the local deltas, over a fresh read of the
+    * base tables when `withBase`: three concurrent collects, one append. */
   private def resetView(withBase: Boolean): Unit = {
-    val v = new LocalView(withBase)
-    if (withBase) concurrently(
-      "graft-standing-load-hashes" -> (() => v.loadHashes(baseHashes.select("_h").collect())),
-      "graft-standing-load-sigs" -> (() => v.loadSigs(baseSigs.select("doc_id", "sig").collect())),
-      "graft-standing-load-index" -> (() =>
-        v.loadPostings(baseIndex.select("id", "band", "key64", "key64b").collect())))
-    localDeltas.foreach(v.add)
-    view = v
+    val ix = new Lsh.DriverIndex
+    if (withBase) {
+      var (hs, ss, ps) = (Lsh.Rows(), Lsh.Rows(), Lsh.Rows())
+      concurrently(
+        "graft-standing-load-hashes" -> (() => hs = Lsh.loadMd5s(baseHashes)),
+        "graft-standing-load-sigs" -> (() => ss = Lsh.loadSigs(baseSigs)),
+        "graft-standing-load-index" -> (() => ps = Lsh.loadPostings(baseIndex)))
+      ix.append(Lsh.concat(Seq(hs, ss, ps)), 0, null)
+    }
+    localDeltas.foreach(ix.append(_, 0, null))
+    view = View(ix, withBase)
   }
 
-  if (builtView != null) view = builtView else resetView(wantReplica)
+  if (builtView != null) view = View(builtView, holdsBase = true) else resetView(wantReplica)
 
   /** Bounds on what a pruned-read fold will hold: standing postings
     * matched to one batch's buckets, and distinct standing candidate ids
@@ -616,29 +565,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * to the distributed plan (which never collects candidates). */
   private val PostingsCollectBound = 1 << 19
   private val CandSigBound = MaxPushedKeys
-
-  /** In-batch-capped postings by bucket triple: exactly
-    * Lsh.postings(sigs) = explode + capBuckets keep-smallest-ids, folded
-    * driver-side from locally-evaluated band keys (Lsh.queryKeysLocal —
-    * the same Catalyst XxHash64 the index build runs, bit-identical).
-    * Ids are kept in ascending order per triple; duplicates (a repeated
-    * batch row) occupy cap slots exactly as row_number does. */
-  private def cappedLocalPostings(rows: Iterator[(Long, Array[Long])])
-      : scala.collection.mutable.LinkedHashMap[(Int, Long, Long), Array[Long]] = {
-    val byTriple = scala.collection.mutable.LinkedHashMap
-      .empty[(Int, Long, Long), scala.collection.mutable.ArrayBuffer[Long]]
-    rows.foreach { case (id, sig) =>
-      Lsh.queryKeysLocal(sig, meta.lsh).foreach { t =>
-        byTriple.getOrElseUpdate(t,
-          scala.collection.mutable.ArrayBuffer.empty[Long]) += id
-      }
-    }
-    val cap = meta.maxBucketSize
-    byTriple.map { case (t, ids) =>
-      val sorted = ids.toArray.sorted
-      t -> (if (cap > 0 && sorted.length > cap) sorted.take(cap) else sorted)
-    }
-  }
 
   /** Collect and sign a trickle-sized batch on the driver. The collect
     * reads (id, text bytes) only, so over a LocalRelation batch the
@@ -711,41 +637,39 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
 
   /** Everything the driver fold learned about one classified batch —
     * handed from classify to absorb so classifyAbsorb never re-probes.
-    * `baseBuckets` is the pruned base read of the batch's buckets (empty
-    * when the view holds the base). */
+    * `base` is the pruned base read of the batch's buckets (null when
+    * the view holds the base). */
   private final class DriverClassified(
       val rows: Array[BatchRow],
       val statuses: DataFrame,
       val statusById: Map[Long, String],
-      val baseBuckets: Map[(Int, Long, Long), BaseBucket])
+      val base: Lsh.DriverIndex)
 
-  /** Base postings in `triples`' buckets: one partition-pruned index read
-    * joined to a broadcast LocalRelation of the triples. None past
+  /** Base postings in the buckets of `quads` ((id, band, key64, key64b),
+    * [[Lsh.postingsLocal]]): one partition-pruned index read joined to a
+    * broadcast LocalRelation of the buckets, as a driver index. None past
     * PostingsCollectBound. */
-  private def prunedBaseBuckets(triples: Array[(Int, Long, Long)])
-      : Option[Map[(Int, Long, Long), BaseBucket]] =
-    if (triples.isEmpty) Some(Map.empty)
-    else {
-      val ks = triples.map(_._2).distinct.toSeq
+  private def prunedBase(quads: Array[Long]): Option[Lsh.DriverIndex] = {
+    val base = new Lsh.DriverIndex
+    val triples = quads.indices.by(4)
+      .map(i => Row(quads(i + 1).toInt, quads(i + 2), quads(i + 3))).distinct
+    if (triples.nonEmpty) {
+      val ks = triples.map(_.getLong(1)).distinct
       val pbs = ks.map(pbIdxLocal(_, meta.pIdx)).distinct
       val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
       val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
       val pruned =
         if (fat && ks.size <= MaxPushedKeys) pruned0.filter(col("key64").isin(ks: _*))
         else pruned0
-      val localT = localDf(
-        triples.map(t => Row(t._1, t._2, t._3)).toSeq, tripleSchema)
-      val matched = withPushConf(fat) {
-        pruned.join(broadcast(localT), Seq("band", "key64", "key64b"))
-          .select("band", "key64", "key64b", "id")
-          .limit(PostingsCollectBound + 1).collect()
+      val got = withPushConf(fat) {
+        Lsh.loadPostings(pruned.join(broadcast(localDf(triples, tripleSchema)),
+          Seq("band", "key64", "key64b")).limit(PostingsCollectBound + 1))
       }
-      if (matched.length > PostingsCollectBound) None
-      else Some(matched.groupBy(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-        .map { case (t, rs) =>
-          t -> BaseBucket(rs.filterNot(_.isNullAt(3)).map(_.getLong(3)), rs.length)
-        })
+      if (got.posts.length + 2 * got.nullPosts.length > 4 * PostingsCollectBound) return None
+      base.append(got, 0, null)
     }
+    Some(base)
+  }
 
   /** The three-tier trickle classify folded on the driver. With the base
     * in the view every tier is a lookup; otherwise each tier first reads
@@ -763,7 +687,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     withPushConf(!lv.holdsBase && anyPushGateOpen)(classifyWith(rows, lv))
   }
 
-  private def classifyWith(rows: Array[BatchRow], lv: LocalView): Option[DriverClassified] = {
+  private def classifyWith(rows: Array[BatchRow], lv: View): Option[DriverClassified] = {
     // exact tier: which of the batch's md5s exist in the base. On the
     // pruned path it is independent of the candidate -> signature chain,
     // so it runs on its own driver thread and the two pruned reads overlap
@@ -798,78 +722,47 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       if (standingHF == null) Set.empty
       else try standingHF.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    // candidate tier: base and view postings in the batch's buckets
-    val batchPostings = cappedLocalPostings(rows.iterator.collect {
-      case r if r.sig != null => (r.id.longValue(), r.sig)
-    })
-    val baseBuckets =
-      if (lv.holdsBase) Map.empty[(Int, Long, Long), BaseBucket]
-      else prunedBaseBuckets(batchPostings.keys.toArray) match {
-        case Some(m) => m
-        case None => awaitExact(); return None
-      }
-    // per-id candidate sets
+    // candidate tier: the batch's own postings under the in-batch cap
+    // (Lsh.postings' keep-smallest-ids), then base and view members of
+    // their buckets
+    val batchPosts = new Lsh.DriverIndex().append(Lsh.Rows(posts = Lsh.postingsLocal(
+      rows.collect { case r if r.sig != null => (r.id.longValue(), r.sig) }, meta.lsh)),
+      meta.maxBucketSize, null)
+    val base =
+      if (lv.holdsBase) null
+      else prunedBase(batchPosts).getOrElse { awaitExact(); return None }
+    val held = Seq(lv.ix, base).filter(_ != null)
     val candByBid = scala.collection.mutable.HashMap
       .empty[Long, scala.collection.mutable.HashSet[Long]]
-    batchPostings.foreach { case (t, bids) =>
-      val base = baseBuckets.get(t).fold(Array.emptyLongArray)(_.ids)
-      val local = lv.postingsByTriple.get(t)
-      if (base.nonEmpty || local.exists(_.nonEmpty)) {
-        bids.foreach { bid =>
-          val set = candByBid.getOrElseUpdate(bid,
-            scala.collection.mutable.HashSet.empty[Long])
-          set ++= base
-          local.foreach(set ++= _)
-        }
-      }
+    batchPosts.indices.by(4).foreach { i =>
+      val cands = candByBid.getOrElseUpdate(batchPosts(i), scala.collection.mutable.HashSet.empty)
+      held.foreach(_.foreachMember(batchPosts(i + 2), batchPosts(i + 3))(cands += _))
     }
     // signature tier: on the pruned path, fetch every distinct candidate
-    // id's base sigs (view sigs merge in locally — an id can legitimately
-    // exist in both, e.g. a batch id coinciding with a standing id); bound
-    // the distinct-id fetch
-    val baseSig: Map[Long, Seq[Array[Long]]] =
-      if (lv.holdsBase || candByBid.isEmpty) Map.empty
-      else {
-        val standIds = candByBid.valuesIterator.flatten.toArray.distinct
-        if (standIds.length > CandSigBound) { awaitExact(); return None }
-        val pbs = standIds.map(pbSigLocal(_, meta.pSig)).distinct.toSeq
-        val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
-        val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
-        val pruned =
-          if (fat) pruned0.filter(col("doc_id").isin(standIds.toSeq: _*))
-          else pruned0
-        val localI = localDf(standIds.map(Row(_)).toSeq, idSchema)
-        withPushConf(fat) {
-          pruned.join(broadcast(localI), Seq("doc_id"))
-            .select("doc_id", "sig").collect()
-            .groupBy(_.getLong(0))
-            .map { case (id, rs) =>
-              id -> rs.toSeq.map(r =>
-                if (r.isNullAt(1)) null else r.getSeq[Long](1).toArray)
-            }
-        }
-      }
-    def sigsOf(id: Long): Iterator[Array[Long]] =
-      (baseSig.getOrElse(id, Nil).iterator ++
-        lv.sigsById.getOrElse(id, Nil).iterator).filter(_ != null)
-    // verdict fold: exact > near > new, per distinct id
-    val sigsByBid = scala.collection.mutable.HashMap
-      .empty[Long, List[Array[Long]]]
-    rows.foreach { r =>
-      if (r.sig != null)
-        sigsByBid.update(r.id.longValue(),
-          r.sig :: sigsByBid.getOrElse(r.id.longValue(), Nil))
+    // id's base sigs into the base read (an id can be in base and view,
+    // e.g. a batch id coinciding with a standing id); bound the fetch
+    if (base != null && candByBid.nonEmpty) {
+      val standIds = candByBid.valuesIterator.flatten.toArray.distinct
+      if (standIds.length > CandSigBound) { awaitExact(); return None }
+      val pbs = standIds.map(pbSigLocal(_, meta.pSig)).distinct.toSeq
+      val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
+      val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
+      val pruned =
+        if (fat) pruned0.filter(col("doc_id").isin(standIds.toSeq: _*))
+        else pruned0
+      val localI = localDf(standIds.map(Row(_)).toSeq, idSchema)
+      withPushConf(fat)(
+        base.append(Lsh.loadSigs(pruned.join(broadcast(localI), Seq("doc_id"))), 0, null))
     }
+    // verdict fold: exact > near > new, per distinct id
+    val sigsByBid = rows.filter(_.sig != null).groupMap(_.id.longValue())(_.sig)
     val baseH = awaitExact()
     val exactIds = rows.iterator
-      .filter(r => r.h != null && (baseH.contains(r.h) || lv.hashSet.contains(r.h)))
+      .filter(r => r.h != null && (baseH.contains(r.h) || lv.ix.holdsMd5(r.h)))
       .map(_.id.longValue()).toSet
     val thr = meta.threshold
-    def isNear(bid: Long): Boolean = candByBid.get(bid).exists { cands =>
-      val bsigs = sigsByBid.getOrElse(bid, Nil)
-      cands.exists(cid => sigsOf(cid).exists(cs =>
-        bsigs.exists(bs => Lsh.score(Lsh.matchCount(bs, cs, 0, bs.length), bs.length) >= thr)))
-    }
+    def isNear(bid: Long): Boolean = candByBid.get(bid).exists(_.exists(cid =>
+      sigsByBid(bid).exists(bs => held.exists(_.near(cid, bs, thr)))))
     val statusById = scala.collection.mutable.HashMap.empty[Long, String]
     val stRows = rows.map { r =>
       val bid = r.id.longValue()
@@ -880,61 +773,37 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       Row(bid, st)
     }
     Some(new DriverClassified(rows, localDf(stRows.toSeq, statusSchema),
-      statusById.toMap, baseBuckets))
+      statusById.toMap, base))
   }
 
   /** Driver-side absorb of a batch's `new` rows: in-batch cap + admit-
-    * under-cap folded locally (same discipline as Lsh.postings +
-    * Lsh.admitUnderCap over the same standing counts), deltas appended
-    * as LocalRelations and to the view — no Spark job when the view holds
-    * the base. `classified` is classify's pruned base read of the batch's
-    * buckets; without it (and without the base in the view) the counts
-    * come from the same pruned read over the new postings' buckets.
-    * Returns false, having changed nothing, when that read is over its
-    * bound (the caller falls back to the distributed absorb). */
+    * under-cap in one [[Lsh.DriverIndex.append]] into the view (the
+    * driver form of Lsh.postings + Lsh.admitUnderCap over the same
+    * standing counts), deltas appended as LocalRelations — no Spark job
+    * when the view holds the base. `classified` is classify's pruned base
+    * read of the batch's buckets; without it (and without the base in the
+    * view) the counts come from the same pruned read over the new
+    * postings' buckets. Returns false, having changed nothing, when that
+    * read is over its bound (the caller falls back to the distributed
+    * absorb). */
   private def driverAbsorb(newRows: Array[BatchRow],
-                           classified: Option[Map[(Int, Long, Long), BaseBucket]]): Boolean = {
+                           classified: Option[Lsh.DriverIndex]): Boolean = {
     val lv = view
     if (newRows.nonEmpty) {
-      val newCapped = cappedLocalPostings(newRows.iterator.collect {
-        case r if r.sig != null => (r.id.longValue(), r.sig)
-      })
-      val cap = meta.maxBucketSize
+      val quads = Lsh.postingsLocal(newRows.map(r => (r.id.longValue(), r.sig)), meta.lsh)
       // each bucket's occupancy counted ONCE: from the view alone when it
       // holds the base, else the pruned base read plus the delta-only view
       val base =
-        if (cap <= 0 || lv.holdsBase) Map.empty[(Int, Long, Long), BaseBucket]
-        else classified.orElse(prunedBaseBuckets(newCapped.keys.toArray)) match {
-          case Some(m) => m
-          case None => return false
-        }
-      val admitted = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Long)]
-      newCapped.foreach { case (t, ids) =>
-        val keep =
-          if (cap <= 0) ids
-          else {
-            val standCnt = base.get(t).fold(0L)(_.n.toLong) + lv.bucketCount(t)
-            // ids are already cap-smallest-sorted; rank rn admits while
-            // standCnt + rn <= cap (Lsh.admitUnderCap's filter)
-            val room = math.max(0L, cap.toLong - standCnt)
-            ids.take(math.min(room, ids.length.toLong).toInt)
-          }
-        keep.foreach(id => admitted += ((id, t._1, t._2, t._3)))
-      }
-      val d = LocalDelta(
-        newRows.map(_.h),
-        newRows.map(r => (r.id.longValue(), r.sig)),
-        admitted.toArray)
-      deltaHashes += localDf(d.hashes.map(Row(_)).toSeq, hashSchema)
-      deltaSigs += localDf(
-        d.sigs.map { case (id, sig) =>
-          Row(id, if (sig == null) null else sig.toSeq)
-        }.toSeq, sigSchema)
-      deltaIndex += localDf(
-        d.postings.map { case (id, b, k, kb) => Row(id, b, k, kb) }.toSeq,
-        idxSchema)
+        if (meta.maxBucketSize <= 0 || lv.holdsBase) null
+        else classified.orElse(prunedBase(quads)).getOrElse(return false)
+      val rows = Lsh.Rows(posts = quads, sigIds = newRows.map(_.id.longValue()),
+        sigs = newRows.map(_.sig), md5s = Lsh.md5Pairs(newRows.iterator.map(_.h)))
+      val d = rows.copy(posts = lv.ix.append(rows, meta.maxBucketSize, base))
+      deltaHashes += localDf(newRows.map(r => Row(r.h)).toSeq, hashSchema)
+      deltaSigs += localDf(newRows.map(r => Row(r.id, r.sig.toSeq)).toSeq, sigSchema)
+      deltaIndex += localDf(d.posts.indices.by(4).map(i =>
+        Row(d.posts(i), d.posts(i + 1).toInt, d.posts(i + 2), d.posts(i + 3))), idxSchema)
       localDeltas += d
-      lv.add(d)
       meta = meta.copy(nDocs = meta.nDocs + newRows.length)
     }
     deltaBatches += 1
@@ -1222,7 +1091,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     fast match {
       case Some(c) =>
         driverAbsorb(c.rows.filter(r => c.statusById(r.id.longValue()) == "new"),
-          Some(c.baseBuckets))
+          Option(c.base))
         renameId(c.statuses, idCol)
       case None =>
         val (b, batchSigs, st) = classifyKeepingSigs(batchDocs, idCol, textCol)

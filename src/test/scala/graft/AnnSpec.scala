@@ -89,7 +89,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("results table writes and reads back as JSON lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val dir = tempDir("graft-json")
     val queries = embs.filter(col("vec_id") < 3)
     val res = Ann.bruteForceTopK(embs, queries, k = 3, cosine_sim)
     res.write.mode("overwrite").json(dir)
@@ -99,7 +99,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("results table writes and reads back as CSV (O28 sink)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv")
     val queries = embs.filter(col("vec_id") < 5)
     val res = Ann.bruteForceTopK(embs, queries, k = 3, cosine_sim)
     res.write.mode("overwrite").option("header", "true").csv(dir)

@@ -27,7 +27,7 @@ class BenchReportSpec extends SparkSpec {
     assert(rows("LSH")._1 == 0.5)
     assert(rows("LSH")._3 == 1.0) // top-1 correct both queries -> MRR 1.0
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-report").toString
+    val dir = tempDir("graft-report")
     BenchReport.writeCsv(df, dir)
     val back = spark.read.option("header", "true").csv(dir)
     assert(back.count() == 2)
@@ -102,7 +102,7 @@ class BenchReportSpec extends SparkSpec {
   // artifact merge order was nondeterministic across machines. These pin
   // the fixes without touching the repo's real artifacts (fixture dir).
   test("ratiosVsPrev: only trusted (multi-sample) keys can raise the >=3x flag") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ratios").toString
+    val dir = tempDir("graft-ratios")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/BENCH_r11.json"),
       """{"queries":{"x_build_sec":10.0,"x_probe_sec":0.004,"catalog_total_sec":50.0}}""")
     val cur = Map("x_build_sec" -> 40.0, "x_probe_sec" -> 0.02, "catalog_total_sec" -> 51.0)
@@ -119,7 +119,7 @@ class BenchReportSpec extends SparkSpec {
   }
 
   test("ratiosVsPrev: same-round artifacts merge in stable name order, driver last") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ratios2").toString
+    val dir = tempDir("graft-ratios2")
     def put(name: String, json: String): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/$name"), json)
     // two detail twins disagree on a shared key; the driver artifact
@@ -178,7 +178,7 @@ class BenchReportSpec extends SparkSpec {
   }
 
   test("selfcheck: verify emitter check trips on a missing oracle and a missing parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-selfcheck").toString
+    val dir = tempDir("graft-selfcheck")
     new java.io.File(s"$dir/g1").mkdirs()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/g1/_SUCCESS"), "")
     val oracle = """{"g1": "SELECT 1"}"""

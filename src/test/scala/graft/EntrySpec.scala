@@ -14,6 +14,18 @@ class EntrySpec extends SparkSpec {
     assert(first.getSeq[Long](2).length == 10, "vector_preview is 10 slots")
   }
 
+  test("datasetBytes sums a hive-partitioned parquet dir's nested part files") {
+    import org.apache.spark.sql.functions._
+    val dir = new java.io.File(tempDir("graft-entry-bytes"), "t.parquet")
+    spark.range(0, 60000).select(col("id"), (col("id") % 4).as("p"), sha2(col("id").cast("string"), 256).as("h"))
+      .write.partitionBy("p").parquet(dir.toString)
+    val parts = dir.listFiles().filter(_.isDirectory).flatMap(_.listFiles())
+      .filter(_.getName.startsWith("part-")).map(_.length()).sum
+    assert(dir.listFiles().filter(_.isFile).map(_.length()).sum < 1024, "no data at the top level")
+    assert(parts > 256L * 1024, s"the fixture must pass tPar's 256 KiB gate: $parts")
+    assert(SparkEntry.datasetBytes(dir) === parts)
+  }
+
   test("every oracleSql key has a queries entry") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql without queries: $missing")

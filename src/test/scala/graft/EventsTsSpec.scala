@@ -33,7 +33,7 @@ class EventsTsSpec extends SparkSpec {
   }
 
   test("hourly aggregation and epoch-us projection agree across ts layouts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_events_ts")
+    val dir = java.nio.file.Paths.get(tempDir("graft_events_ts"))
     val longPath = writeFixture(dir, asLong = true)
     val ntzPath = writeFixture(dir, asLong = false)
     def normalized(path: String) = {

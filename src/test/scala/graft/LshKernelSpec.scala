@@ -31,7 +31,12 @@ class LshKernelSpec extends SparkSpec {
     val sigs = (0 until n).foldLeft(Vector.empty[Array[Long]]) { (made, i) =>
       made :+ (if (i > 0 && rnd.nextInt(4) == 0) made(rnd.nextInt(i)) else sig())
     }
-    Corpus(p, ids.zip(sigs), ids(rnd.nextInt(n)), sig())
+    val unsigned = rnd.nextInt(n)
+    val twin = (unsigned + 1 + rnd.nextInt(n - 1)) % n
+    // the twin's second row keeps its first 10 slots, so the vector
+    // preview is the same whichever of its rows scores best
+    val second = sigs(twin).take(10) ++ sig().drop(10)
+    Corpus(p, ids.zip(sigs) :+ (ids(twin) -> second), ids(unsigned), sig())
   }
 
   private def catalyst(sigs: DataFrame, index: DataFrame, q: Array[Long], k: Int,
@@ -103,6 +108,64 @@ class LshKernelSpec extends SparkSpec {
     assert(probes == 8 * 2 * 12)
   }
 
+  test("random appends grow the driver index as a boxed model does") {
+    val w = 8
+    val rnd = new scala.util.Random(20261020L)
+    def hex() = Seq.fill(32)("0123456789abcdef"(rnd.nextInt(16))).mkString
+    def sig() = Array.fill(w)(rnd.nextLong(3))
+    for (round <- 0 until 40) {
+      val ix = new Lsh.DriverIndex
+      val outside = new Lsh.DriverIndex
+      // the model: occupancy and members per (key64, key64b), rows per id, md5s
+      val occ = scala.collection.mutable.Map.empty[(Long, Long), Int].withDefaultValue(0)
+      val outOcc = scala.collection.mutable.Map.empty[(Long, Long), Int].withDefaultValue(0)
+      val mem = scala.collection.mutable.Map.empty[(Long, Long), Vector[Long]].withDefaultValue(Vector.empty)
+      val rows = scala.collection.mutable.Map.empty[Long, List[Array[Long]]].withDefaultValue(Nil)
+      val md5s = scala.collection.mutable.Set.empty[String]
+      val cap = Seq(0, 1, 3)(round % 3)
+      def key() = { val k = rnd.nextInt(6).toLong; (k * 0x5851F42D4C957F2DL, -k) }
+      val held = Seq.fill(12)(hex())
+      for (_ <- 0 until 1 + rnd.nextInt(5)) {
+        // out-of-order and repeated ids, null-id postings, null signatures
+        val posts = Seq.fill(rnd.nextInt(20)) { val (k, kb) = key(); (rnd.nextInt(10) - 3L, k, kb) }
+        val nulls = Seq.fill(rnd.nextInt(3))(key())
+        val signed = Seq.fill(rnd.nextInt(6))((rnd.nextInt(12) - 3L, if (rnd.nextInt(4) == 0) null else sig()))
+        val hs = Seq.fill(rnd.nextInt(4))(held(rnd.nextInt(held.size)))
+        val outsidePosts = Seq.fill(rnd.nextInt(4))(key())
+        outside.append(Lsh.Rows(nullPosts = outsidePosts.flatMap(t => Seq(t._1, t._2)).toArray), 0, null)
+        outsidePosts.foreach(outOcc(_) += 1)
+        val admitted = ix.append(Lsh.Rows(
+          posts = posts.flatMap { case (id, k, kb) => Seq(id, 0L, k, kb) }.toArray,
+          nullPosts = nulls.flatMap(t => Seq(t._1, t._2)).toArray,
+          sigIds = signed.map(_._1).toArray, sigs = signed.map(_._2).toArray,
+          md5s = Lsh.md5Pairs(hs.iterator)), cap, outside)
+        val want = posts.filter { case (id, k, kb) =>
+          val in = cap <= 0 || occ((k, kb)) + outOcc((k, kb)) < cap
+          if (in) { occ((k, kb)) += 1; mem((k, kb)) :+= id }
+          in
+        }
+        assert(admitted.toSeq == want.flatMap { case (id, k, kb) => Seq(id, 0L, k, kb) }, s"admitted, cap=$cap")
+        nulls.foreach(occ(_) += 1)
+        signed.foreach { case (id, s) => if (s != null) rows(id) ::= s }
+        md5s ++= hs
+      }
+      for (k <- 0L until 6L; t = (k * 0x5851F42D4C957F2DL, -k)) {
+        assert(ix.size(t._1, t._2) == occ(t), s"occupancy of $t, cap=$cap")
+        val got = Vector.newBuilder[Long]
+        ix.foreachMember(t._1, t._2)(got += _)
+        assert(got.result() == mem(t), s"members of $t, cap=$cap")
+      }
+      for (id <- -3L until 9L; q <- rows(id) :+ sig()) {
+        // near at the best row's score and not one slot above it: the id
+        // scores by its best row, and an id without rows never scores
+        val best = rows(id).map(s => s.indices.count(i => s(i) == q(i))).maxOption
+        assert(best.forall(m => ix.near(id, q, m.toDouble / w)), s"id $id, cap=$cap")
+        assert(!ix.near(id, q, best.fold(0.0)(m => (m + 1).toDouble / w)), s"id $id, cap=$cap")
+      }
+      held.foreach(h => assert(ix.holdsMd5(h) == md5s(h), s"md5 $h"))
+    }
+  }
+
   private def countJobs(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -160,11 +223,12 @@ class LshKernelSpec extends SparkSpec {
 }
 
 object LshKernelSpec {
-  /** A small corpus: distinct ids (negative ones included) in shuffled
-    * order, signatures over a tiny alphabet so band buckets collide, some
+  /** A small corpus: ids (negative ones included) in shuffled order,
+    * signatures over a tiny alphabet so band buckets collide, some
     * signatures planted copies of others so equal scores force the
-    * id-asc tiebreak, and one referenced id whose signature row is
-    * dropped from the signature table. */
+    * id-asc tiebreak, one referenced id whose signature row is dropped
+    * from the signature table, and one id with a second, different
+    * signature row (last in `rows`), which scores by its best row. */
   final case class Corpus(p: Lsh.Params, rows: Seq[(Long, Array[Long])],
                           unsigned: Long, fresh: Array[Long])
 }

@@ -60,7 +60,7 @@ class NpySpec extends SparkSpec {
   }
 
   test("saveDoubleShards roundtrips through the reader; single-file path reads too") {
-    val dir = java.nio.file.Files.createTempDirectory("npy_f8_rt").toString
+    val dir = tempDir("npy_f8_rt")
     val df = (0L until 9L).map(i => (i, (0 until 4).map(c => i * 0.5 - c * 0.25).toArray))
       .toDF("dim", "edges")
     Npy.saveDoubleShards(df, "dim", "edges", dir, shards = 2)
@@ -77,7 +77,7 @@ class NpySpec extends SparkSpec {
   }
 
   test("saveLongShards roundtrips through the reader and writes numpy v1 headers") {
-    val dir = java.nio.file.Files.createTempDirectory("npy_rt").toString
+    val dir = tempDir("npy_rt")
     val df = (0L until 23L).map(i => (i, (0 until 5).map(c => i * 31 + c).toArray))
       .toDF("doc_id", "sig")
     Npy.saveLongShards(df, "doc_id", "sig", dir, shards = 3)

@@ -1,13 +1,13 @@
 package graft
 
 import graft.sources.Pickle
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The reference's pickle artifacts (docs.pkl / ids.pkl /
   * minhash_meta.pkl — synth_data.py:113-117,148-157): reader pinned
   * against CPython-written fixtures (default protocol 4 AND protocol 2),
-  * writer against a read-back roundtrip. No SparkSession needed. */
-class PickleSpec extends AnyFunSuite {
+  * writer against a read-back roundtrip. No SparkSession needed (the
+  * spec extends SparkSpec for its temp dirs; the session is lazy). */
+class PickleSpec extends SparkSpec {
 
   private def res(name: String): String =
     getClass.getResource(s"/pickle_fixture/$name").getPath
@@ -38,7 +38,7 @@ class PickleSpec extends AnyFunSuite {
   }
 
   test("writeStringMap / writeStringSetList roundtrip through the reader") {
-    val dir = java.nio.file.Files.createTempDirectory("pkl_rt2").toString
+    val dir = tempDir("pkl_rt2")
     val meta = Map[String, Any]("num_perm" -> 128L, "by_word" -> true,
       "seed" -> 42L, "name" -> "mh", "big" -> 3000000000L,
       "neg" -> -7L, "thresh" -> 0.8)
@@ -50,7 +50,7 @@ class PickleSpec extends AnyFunSuite {
   }
 
   test("writeStringList roundtrips through the reader") {
-    val dir = java.nio.file.Files.createTempDirectory("pkl_rt").toString
+    val dir = tempDir("pkl_rt")
     val items = Seq("a", "", "nested 'quotes' and \n newlines", "é" * 100)
     Pickle.writeStringList(s"$dir/out.pkl", items)
     assert(Pickle.readStringList(s"$dir/out.pkl") == items)
@@ -59,7 +59,7 @@ class PickleSpec extends AnyFunSuite {
   test("arbitrary object pickles are rejected, not constructed") {
     // a GLOBAL/REDUCE opcode must throw — the reader is a format
     // boundary, not a deserializer (no gadget surface)
-    val dir = java.nio.file.Files.createTempDirectory("pkl_bad").toString
+    val dir = tempDir("pkl_bad")
     // hand-built: PROTO 2, GLOBAL 'os\nsystem\n' ... STOP
     val bad = Array[Byte](0x80.toByte, 2, 'c', 'o', 's', '\n',
       's', 'y', 's', 't', 'e', 'm', '\n', '.')

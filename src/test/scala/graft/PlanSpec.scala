@@ -92,7 +92,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partition pruning: partitioned parquet scans only the matching partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     spark.read.parquet(s"$testDataDir/documents.parquet")
       .write.mode("overwrite").partitionBy("lang").parquet(dir)
     val q = spark.read.parquet(dir).filter(col("lang") === "en")

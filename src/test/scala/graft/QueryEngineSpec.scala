@@ -166,7 +166,7 @@ class QueryEngineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$testDataDir/documents.parquet")
     val built = QueryEngine.build(docs,
       mp = graft.core.MinHashPipeline.Params(kShingle = 3))
-    val dir = java.nio.file.Files.createTempDirectory("graft-lean").toString
+    val dir = tempDir("graft-lean")
     built.saveServing(dir, "qeng_spec_lean", buckets = 8)
     // expected answers from the distributed plan BEFORE closing
     val expect = Seq(0L, 7L, 42L, 413L).map { qid =>
@@ -253,7 +253,7 @@ class QueryEngineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$testDataDir/documents.parquet")
     val eng = QueryEngine.build(docs,
       mp = graft.core.MinHashPipeline.Params(kShingle = 1))
-    val dir = Files.createTempDirectory("graft-idx-params").toString
+    val dir = tempDir("graft-idx-params")
     eng.save(dir)
     // corrupt the params record in place: present-but-unreadable => throw.
     // NOTE for log readers: this overwrite deliberately invalidates the
@@ -282,7 +282,7 @@ class QueryEngineSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$testDataDir/documents.parquet")
     val eng = QueryEngine.build(docs,
       mp = graft.core.MinHashPipeline.Params(kShingle = 3))
-    val dir = Files.createTempDirectory("graft-idx").toString
+    val dir = tempDir("graft-idx")
     eng.save(dir, shards = 3)
     val eng2 = QueryEngine.load(spark, dir)
     // build params round-trip with the index (queryText/addDocuments on a

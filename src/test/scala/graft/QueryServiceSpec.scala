@@ -109,7 +109,7 @@ class QueryServiceSpec extends SparkSpec {
     val rnd = new scala.util.Random(3)
     val sig = Seq.fill(128)(rnd.nextLong(1L << 40))
     val sigs = Seq(1L -> sig, 2L -> (sig ++ Seq(7L, 8L))).toDF("doc_id", "sig")
-    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt-index").toString
+    val dir = tempDir("graft-corrupt-index")
     sigs.write.parquet(s"$dir/signatures")
     graft.core.Lsh.postings(sigs, "doc_id", "sig").write.parquet(s"$dir/postings")
     val eng = QueryEngine.load(spark, dir).warmUp()
@@ -182,7 +182,7 @@ class QueryServiceSpec extends SparkSpec {
       val fam = i - (i % 5)
       (i, (0 until 25).map(w => s"w${(fam * 31 + w) % 97}").mkString(" "))
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-http").toString
+    val dir = tempDir("graft-dedup-http")
     val standing = graft.operators.StandingCorpus.build(docs, null, dir)
     val lshEng = QueryEngine.build(
       spark.read.parquet(s"$testDataDir/documents.parquet"))

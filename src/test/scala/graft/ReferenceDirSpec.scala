@@ -96,7 +96,7 @@ class ReferenceDirSpec extends SparkSpec {
 
   test("save → load round-trips engine-built frames") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("refdir_rt").toString
+    val out = tempDir("refdir_rt")
     val docs = Seq((0L, "alpha beta gamma delta"), (1L, "x y"), (2L, ""))
       .toDF("doc_id", "text")
     val shingled = MinHashPipeline.withSignature(docs, "text",

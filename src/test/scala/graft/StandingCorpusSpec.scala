@@ -14,7 +14,7 @@ class StandingCorpusSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-standing-spec").toString
+    tempDir("graft-standing-spec")
 
   /** Synthetic corpus: 30-word docs; ids in [0, n). Doc i shares a text
     * family with i - (i % 5) so near-dups exist (one word differs). */
@@ -456,12 +456,15 @@ class StandingCorpusSpec extends SparkSpec {
   test("standing replica: verdicts and admitted postings equal the pruned-read fold") {
     // capped (over-cap standing buckets, in-batch cap, admit-under-cap
     // against base and delta counts) and uncapped params, with absorbs
-    // on both sides of a background-compaction swap
+    // on both sides of a background-compaction swap; the replica seeded
+    // by build and the one open() loads from disk alike
     for (lsh <- Seq(Lsh.Params(maxBucketSize = 3), Lsh.Params(maxBucketSize = 0))) {
       val on = buildCapped(lsh)
+      val reopened = StandingCorpus.open(spark, buildCapped(lsh).dir)
       val off = buildCapped(lsh)
       off.driverReplicaOff = true
-      Seq(on, off).foreach { sc =>
+      val all = Seq(on, reopened, off)
+      all.foreach { sc =>
         sc.compactEveryBatches = 2
         sc.compactInBackground = true
       }
@@ -469,12 +472,14 @@ class StandingCorpusSpec extends SparkSpec {
       batches.zipWithIndex.foreach { case (b, i) =>
         // batch 3 absorbs while (or right after) batch 2's background
         // compaction builds; batches 4-5 run on the swapped-in version
-        if (i == 3) Seq(on, off).foreach(_.awaitCompaction())
-        assert(statuses(on.classifyAbsorb(b)) === statuses(off.classifyAbsorb(b)),
-          s"batch ${i + 1}, $lsh")
+        if (i == 3) all.foreach(_.awaitCompaction())
+        val st = statuses(on.classifyAbsorb(b))
+        assert(st === statuses(reopened.classifyAbsorb(b)), s"reopened, batch ${i + 1}, $lsh")
+        assert(st === statuses(off.classifyAbsorb(b)), s"batch ${i + 1}, $lsh")
       }
-      Seq(on, off).foreach(_.awaitCompaction())
-      assert(on.currentVersion >= 2 && off.currentVersion >= 2)
+      all.foreach(_.awaitCompaction())
+      assert(all.forall(_.currentVersion >= 2))
+      assertSamePostings(on, reopened, s"admitted postings, reopened, $lsh")
       assertSamePostings(on, off, s"admitted postings, $lsh")
       // the swap kept the replica: a later batch still runs no job
       val again = batches.head

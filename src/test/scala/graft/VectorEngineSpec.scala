@@ -127,7 +127,7 @@ class VectorEngineSpec extends SparkSpec {
   }
 
   test("save/load round-trip answers identically without retraining") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec").toString
+    val dir = tempDir("graft-vec")
     eng.save(dir)
     val back = VectorEngine.load(spark, dir)
     val queries = embs.filter(col("vec_id") < 3)
@@ -234,7 +234,7 @@ class VectorEngineSpec extends SparkSpec {
     assert(!removed.topK(queries, k = 5, mode = "residual_ivfpq", nprobe = 8)
       .select("id").collect().map(_.getLong(0)).contains(1L))
     // save/load serves identically
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec-resid").toString
+    val dir = tempDir("graft-vec-resid")
     reng.save(dir)
     val back = VectorEngine.load(spark, dir)
     assert(hits(back) == hits(reng))
@@ -253,7 +253,7 @@ class VectorEngineSpec extends SparkSpec {
     // the fused code table bucketed by centroid_id as an EXTERNAL table
     // plus the KB-sized trained models; a fresh catalog re-registers it
     // from the files alone. Every answer must equal the full engine's.
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec-lean").toString
+    val dir = tempDir("graft-vec-lean")
     eng.saveServing(s"$dir/srv", "veng_spec_lean", buckets = 8)
     val queries = embs.filter(col("vec_id") < 10)
     val want = eng.topK(queries, k = 5, mode = "ivfpq", nprobe = 3)
