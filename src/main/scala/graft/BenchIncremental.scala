@@ -179,7 +179,8 @@ object BenchIncremental {
           .localCheckpoint(true)
         val t0 = System.nanoTime()
         counts("n_bulk_rows") = Dedup.incrementalStatusIndexed(
-          standing.fullHashes, standing.fullSigs, standing.fullIndex,
+          standing.full(StandingCorpus.Hashes), standing.full(StandingCorpus.Sigs),
+          standing.full(StandingCorpus.Index),
           batch, batchSigs, threshold = 0.5, lsh = standing.currentMeta.lsh)
           .groupBy("status").count().collect().map(_.getLong(1)).sum
         (System.nanoTime() - t0) / 1e9

@@ -311,7 +311,8 @@ object SparkEntry {
 
   /** Disk-resident standing-corpus dedup artifacts for the d18 trickle
     * gate — built once per (session, data dir) into a temp dir, exactly
-    * as a serving increment would open a persisted corpus. */
+    * as a serving increment would open a persisted corpus. The dir is
+    * deleted when its session's context stops (or at JVM exit). */
   private val standingCache =
     scala.collection.mutable.Map.empty[(SparkSession, String), graft.operators.StandingCorpus]
   private def standingCorpus(s: SparkSession, dir: String,
@@ -319,8 +320,13 @@ object SparkEntry {
     standingCache.synchronized {
       standingCache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
       standingCache.getOrElseUpdate((s, dir), {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-d18-standing").toString
-        graft.operators.StandingCorpus.build(corpusDocs, corpusSigs, tmp, threshold = 0.5)
+        val tmp = graft.operators.StandingCorpus.tempDir("graft-d18-standing")
+        import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+        s.sparkContext.addSparkListener(new SparkListener {
+          override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+            org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        })
+        graft.operators.StandingCorpus.build(corpusDocs, corpusSigs, tmp.toString, threshold = 0.5)
       })
     }
 

@@ -16,14 +16,22 @@ import org.apache.spark.sql.functions._
   * trickle ingest — a few hundred docs per micro-batch against a
   * 16M+ doc corpus — must not pay a corpus-sized scan per batch. Here
   * the three standing tables are laid out as hash-partitioned parquet
-  * (`_pb = hash(key) mod P`, P sized so partitions stay ~fixed-row) and
-  * every probe first computes the batch's own `_pb` set (a tiny Spark
-  * job over the batch), then reads ONLY those partitions:
+  * (`_pb = hash(key) mod P`, P sized so partitions stay ~fixed-row),
+  * each described once as a [[StandingCorpus.Table]]:
   *
   *  - `hashes/`   (_h)                   partitioned by md5-prefix mod P
   *  - `sigs/`     (doc_id, sig)          partitioned by xxhash64(doc_id) mod P
   *  - `index/`    (id, band, key64, key64b) partitioned by key64 mod P
   *
+  * Every probe of a table goes through ONE pruned read of it (`pruned`):
+  * the probe's own keys give the `_pb` set and only those partitions are
+  * read; past the table's partition ceiling the keys are also pushed to
+  * parquet as an In filter (see [[StandingCorpus.HashRowsPerPart]]). The
+  * base tables are read through a child session of the owner's, made
+  * once per corpus with `spark.sql.parquet.pushdown.inFilterThreshold`
+  * raised: a parquet scan takes that threshold from its own relation's
+  * session, so the raised value follows the standing scans into any
+  * query that reads them and reaches no other query of the owner.
   * Per-batch I/O is therefore bounded by (batch keys) x (rows per
   * partition) — independent of the standing corpus size once P exceeds
   * the batch's key count — instead of a full scan that grows linearly
@@ -73,7 +81,7 @@ import org.apache.spark.sql.functions._
   * 24-32 bytes (two longs and a slot). At the gate that is ~134 MB of
   * signatures at 2^17 docs plus at most ~75 MB of buckets at 2^20
   * postings. Above the gates the base stays on disk and the trickle fold
-  * reads it through the partition-pruned reads described above.
+  * reads it through the pruned reads described above.
   *
   * Not thread-safe; call from a single ingest loop (Structured Streaming
   * serializes micro-batches per query).
@@ -124,21 +132,52 @@ object StandingCorpus {
 
   /** Probe-key sets larger than this are not pushed as In filters
     * (partition pruning still applies) — bounds both the driver collect
-    * and the per-row-group predicate evaluation cost. */
-  private val MaxPushedKeys = 32768
+    * and the per-row-group predicate evaluation cost. It is also the
+    * parquet In threshold of the session the base tables are read in. */
+  private[graft] val MaxPushedKeys = 32768
 
-  private[operators] def partsFor(rows: Long, perPart: Long): Int = {
-    var p = MinParts
-    while (p < MaxParts && p.toLong * perPart < rows) p *= 2
-    p
+  /** One standing table, as its writer and every pruned read of it see
+    * it: its dir `name`, its columns, its probe `key` column, its
+    * partition bucket `_pb` over `p` partitions in Column form (the
+    * writer; a Spark-side partition set) beside its driver form (the
+    * partition set of driver-held keys), its rows-per-partition target,
+    * and its partition count and row count under a [[Meta]]. */
+  private[graft] final class Table[K](
+      val name: String, val key: String, val cols: Seq[String],
+      val pb: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column,
+      val pbLocal: (K, Int) => Int, perPart: Long, val parts: Meta => Int, rows: Meta => Long) {
+    private def over(p: Int, m: Meta): Boolean = p.toLong * perPart < rows(m)
+    /** The fewest partitions (a power of two in [MinParts, MaxParts])
+      * that keep `m`'s rows within the row target. */
+    def partsFor(m: Meta): Int = {
+      var p = MinParts
+      while (p < MaxParts && over(p, m)) p *= 2
+      p
+    }
+    /** Past the partition ceiling: MaxParts reached and the partitions
+      * over their row target, so rows are written in small row groups
+      * and probes push their keys. */
+    def fat(m: Meta): Boolean = over(parts(m), m)
   }
+
+  private[graft] val Hashes = new Table[String]("hashes", "_h", Seq("_h"),
+    pbHash, pbHashLocal, HashRowsPerPart, _.pHash, _.nDocs)
+  private[graft] val Sigs = new Table[Long]("sigs", "doc_id", Seq("doc_id", "sig"),
+    pbSig, pbSigLocal, SigRowsPerPart, _.pSig, _.nDocs)
+  private[graft] val Index = new Table[Long]("index", "key64", Seq("id", "band", "key64", "key64b"),
+    pbIdx, pbIdxLocal, IdxRowsPerPart, _.pIdx, m => m.nDocs * m.bands)
+  private val Tables: Seq[Table[_]] = Seq(Hashes, Sigs, Index)
+
+  /** `m` with each table's partition count sized to its rows. */
+  private def sized(m: Meta): Meta =
+    m.copy(pHash = Hashes.partsFor(m), pSig = Sigs.partsFor(m), pIdx = Index.partsFor(m))
 
   /** The partition bucket of each standing table over `p` partitions —
     * hashes on the md5 hex `_h`, sigs on `doc_id`, the index on `key64` —
-    * in its Column form (the table writes and the Spark-side probes)
-    * beside its driver form (the bucket sets a driver-side probe prunes
-    * on). Build and probe MUST agree, so each is defined here once;
-    * StandingCorpusSpec pins each driver form equal to its Column form. */
+    * in its Column form beside its driver form. Build and probe MUST
+    * agree, so each is defined here once and bound to its [[Table]];
+    * StandingCorpusSpec pins each driver form equal to its Column form
+    * and each written table's `_pb` column equal to its table's. */
   private[graft] def pbHash(h: org.apache.spark.sql.Column, p: Int) =
     pmod(conv(substring(h, 1, 15), 16, 10).cast("long"), lit(p.toLong)).cast("int")
   /** 15 hex chars < 2^60, so the unsigned conv() parse is an exact
@@ -210,10 +249,9 @@ object StandingCorpus {
     }
   }
 
-  private def writePartitioned(df: DataFrame, pbCol: org.apache.spark.sql.Column,
-                               nParts: Int, path: String,
-                               sortKey: org.apache.spark.sql.Column,
-                               rows: Long, perPart: Long): Unit = {
+  /** The one writer of standing table `t`, into version dir `v` with
+    * `m`'s partition count. */
+  private def write(t: Table[_], df: DataFrame, m: Meta, v: String): Unit = {
     // repartition ON the bucket column so every partition dir is written
     // by exactly one task -> one file per dir; task count bounded below
     // nParts so tiny-partition task overhead stays sane. Rows are sorted
@@ -224,27 +262,14 @@ object StandingCorpus {
     // (fat files): below it every file is probe-read whole anyway, and
     // the extra group boundaries measurably tax the bulk scans
     // (~20% on the 1M-doc bulk contrast).
-    val fat = nParts.toLong * perPart < rows
-    val withPb = df.withColumn("_pb", pbCol)
-    val tasks = math.max(32, math.min(nParts, 2048))
-    val sorted = withPb.repartition(tasks, col("_pb"))
-      .sortWithinPartitions(col("_pb"), sortKey)
+    val nParts = t.parts(m)
+    val sorted = df.withColumn("_pb", t.pb(col(t.key), nParts))
+      .repartition(math.max(32, math.min(nParts, 2048)), col("_pb"))
+      .sortWithinPartitions(col("_pb"), col(t.key))
       .write.mode("overwrite")
-    (if (fat) sorted.option("parquet.block.size", RowGroupBytes) else sorted)
-      .partitionBy("_pb").parquet(path)
+    (if (t.fat(m)) sorted.option("parquet.block.size", RowGroupBytes) else sorted)
+      .partitionBy("_pb").parquet(s"$v/${t.name}")
   }
-
-  /** The one writer of each standing table, into version dir `v` with
-    * `m`'s partition counts. */
-  private def writeHashes(hashes: DataFrame, m: Meta, v: String): Unit =
-    writePartitioned(hashes, pbHash(col("_h"), m.pHash), m.pHash, s"$v/hashes", col("_h"),
-      m.nDocs, HashRowsPerPart)
-  private def writeSigs(sigs: DataFrame, m: Meta, v: String): Unit =
-    writePartitioned(sigs, pbSig(col("doc_id"), m.pSig), m.pSig, s"$v/sigs", col("doc_id"),
-      m.nDocs, SigRowsPerPart)
-  private def writeIndex(index: DataFrame, m: Meta, v: String): Unit =
-    writePartitioned(index, pbIdx(col("key64"), m.pIdx), m.pIdx, s"$v/index", col("key64"),
-      m.nDocs * m.bands, IdxRowsPerPart)
 
   /** Build the standing artifacts from a deduplicated corpus. `sigs` may
     * be precomputed (id, sig) — pass null to sign `docs` here. One
@@ -256,14 +281,12 @@ object StandingCorpus {
             lsh: Lsh.Params = Lsh.Params()): StandingCorpus = {
     val spark = docs.sparkSession
     val nDocs = docs.count()
-    val meta = Meta(1, nDocs,
-      partsFor(nDocs, HashRowsPerPart), partsFor(nDocs, SigRowsPerPart),
-      partsFor(nDocs * lsh.bands, IdxRowsPerPart),
-      kShingle, byWord, lsh.bands, lsh.numPerm, lsh.maxBucketSize, threshold)
+    val meta = sized(Meta(1, nDocs, 0, 0, 0,
+      kShingle, byWord, lsh.bands, lsh.numPerm, lsh.maxBucketSize, threshold))
     val s = Option(sigs).getOrElse(sign(docs, meta, idCol, textCol))
       .select(col(idCol).cast("long").as("doc_id"), col("sig"))
     val v = s"$dir/v1"
-    def writeDocHashes(): Unit = writeHashes(docs.select(md5(col(textCol)).as("_h")), meta, v)
+    def writeDocHashes(): Unit = write(Hashes, docs.select(md5(col(textCol)).as("_h")), meta, v)
     // The three table writes are mutually independent once the signature
     // frame is materialized, so below the size gate ALL THREE overlap
     // (guide: submit independent jobs from driver threads so one job's
@@ -291,16 +314,16 @@ object StandingCorpus {
             if (seeded) hs = Lsh.loadMd5s(docs.select(md5(col(textCol)).as("_h")))
           }),
           "graft-standing-build-sigs" -> (() => {
-            writeSigs(sMat, meta, v)
+            write(Sigs, sMat, meta, v)
             if (seeded) ss = Lsh.loadSigs(sMat)
           }),
           "graft-standing-build-index" -> (() =>
-            if (!seeded) writeIndex(Lsh.postings(sMat, "doc_id", "sig", lsh), meta, v)
+            if (!seeded) write(Index, Lsh.postings(sMat, "doc_id", "sig", lsh), meta, v)
             else {
               val post = Lsh.postings(sMat, "doc_id", "sig", lsh)
                 .select("id", "band", "key64", "key64b").localCheckpoint(true)
               try {
-                writeIndex(post, meta, v)
+                write(Index, post, meta, v)
                 ps = Lsh.loadPostings(post)
               } finally QueryEngine.releaseFrame(post)
             }))
@@ -311,10 +334,10 @@ object StandingCorpus {
         if (seeded) { ix.append(Lsh.concat(Seq(hs, ss, ps)), 0, null); ix } else null
       } else {
         writeDocHashes()
-        writeSigs(s, meta, v)
+        write(Sigs, s, meta, v)
         // sign from the WRITTEN sig table so the (expensive) signature
         // projection is not recomputed for the postings pass
-        writeIndex(Lsh.postings(spark.read.parquet(s"$v/sigs").drop("_pb"),
+        write(Index, Lsh.postings(spark.read.parquet(s"$v/sigs").drop("_pb"),
           "doc_id", "sig", lsh), meta, v)
         null
       }
@@ -345,14 +368,22 @@ object StandingCorpus {
       .filter(f => f.isDirectory &&
         (f.getName.startsWith(".build-v") ||
           (f.getName.startsWith("v") && f.getName != s"v${meta.version}")))
-      .foreach(deleteRecursivelyStatic)
+      .foreach(deleteRecursively)
     // under the replica gate the constructor loads the driver view: the
     // three base tables read concurrently
     new StandingCorpus(spark, dir, meta, null)
   }
 
-  private def deleteRecursivelyStatic(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursivelyStatic)
+  /** A fresh dir under `java.io.tmpdir` for a throwaway corpus, deleted
+    * with its contents at JVM exit. */
+  def tempDir(prefix: String): java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(deleteRecursively(d))
+    d
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
     f.delete()
   }
 
@@ -412,76 +443,36 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * the ceiling (the measurement contrast BenchIncremental exposes),
     * None = the size-gated default. */
   private[graft] var keyPushdownOverride: Option[Boolean] = None
-  private def pushKeys(sizeGate: Boolean): Boolean =
-    keyPushdownOverride.getOrElse(sizeGate)
 
   private def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graftbridge.CheckpointStats.strip(df.localCheckpoint(true))
 
-  /** Run `body` with spark.sql.parquet.pushdown.inFilterThreshold raised
-    * to MaxPushedKeys when a pushed-key probe is active: Spark 4 converts
-    * an In with more values than the threshold (default 10) into a single
-    * gteq/lteq RANGE predicate for parquet pushdown, and probe keys are
-    * uniform hashes — the range spans the whole domain and prunes no row
-    * groups. Raising the threshold keeps the In an OR-of-eq set so
-    * row-group min/max pruning actually fires at real batch sizes
-    * (round-14 advice). Raised for the probe action and restored after,
-    * but the conf is session-wide: while a window is open, any other
-    * query planned on the session (e.g. a bucketed probe's IN list,
-    * where a 32k-term parquet predicate taxes planning for nothing) also
-    * sees the raised threshold. A plan-local mechanism would close that
-    * (ROADMAP 7(a)). */
-  // REFERENCE-COUNTED push-conf window: concurrent classifies (the
-  // read-locked serving path) each open a window, and a naive
-  // set/restore would race — one probe's restore could drop the raised
-  // threshold out from under another probe's planning (results are
-  // unaffected, but the row-group pruning the push exists for would
-  // silently lapse). The conf is raised on the first open and restored
-  // when the last window closes.
-  private val pushGate = new Object
-  private var pushDepth = 0
-  private var pushPrev: Option[String] = None
-  private def withPushConf[A](push: Boolean)(body: => A): A =
-    if (!push) body
-    else {
-      val key = "spark.sql.parquet.pushdown.inFilterThreshold"
-      pushGate.synchronized {
-        if (pushDepth == 0) {
-          pushPrev = spark.conf.getOption(key)
-          spark.conf.set(key, MaxPushedKeys.toString)
-        }
-        pushDepth += 1
-      }
-      try body
-      finally pushGate.synchronized {
-        pushDepth -= 1
-        if (pushDepth == 0) pushPrev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
-      }
-    }
-
-  /** True when ANY standing table's pushed-key gate is open for this
-    * probe (fat layout or spec override) — the condition under which
-    * [[withPushConf]] must hold across the probe's actions. */
-  private def anyPushGateOpen: Boolean = keyPushdownOverride.getOrElse(
-    meta.pHash.toLong * HashRowsPerPart < meta.nDocs ||
-      meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands ||
-      meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
+  /** The session every base-table read is planned in: a child of `spark`,
+    * made once, whose parquet In threshold is MaxPushedKeys. Spark 4
+    * converts an In with more values than that threshold (default 10)
+    * into one gteq/lteq RANGE predicate for parquet pushdown, and probe
+    * keys are uniform hashes — the range spans the whole domain and
+    * prunes no row group. A parquet scan reads the threshold from its
+    * relation's session, so a pushed-key probe keeps its OR-of-eq set
+    * whichever session runs the query, while the owner's conf — and
+    * every other query planned on it — stays as it was. The child copies
+    * the owner's runtime confs once, here: a conf set on the owner later
+    * does not reach queries rooted at a base read. */
+  private val readSession = org.apache.spark.sql.graftbridge.Bridge.childSession(spark,
+    "spark.sql.parquet.pushdown.inFilterThreshold" -> MaxPushedKeys.toString)
 
   private var version = meta.version
   private def vdir = s"$dir/v$version"
-  private var baseHashes = spark.read.parquet(s"$vdir/hashes")
-  private var baseSigs = spark.read.parquet(s"$vdir/sigs")
-  private var baseIndex = spark.read.parquet(s"$vdir/index")
+  /** Version `v`'s three base tables, read through [[readSession]]. */
+  private def readBase(v: Int): Map[Table[_], DataFrame] =
+    Tables.map(t => t -> readSession.read.parquet(s"$dir/v$v/${t.name}")).toMap
+  private var bases = readBase(version)
 
   // per-batch increments (each O(batch)); probes union them. Trickle
   // absorbs append driver-local rows wrapped as LocalRelations (zero
   // cluster jobs); bulk absorbs append localCheckpointed frames.
-  private val deltaHashes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val deltaSigs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val deltaIndex = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val deltas: Map[Table[_], scala.collection.mutable.ArrayBuffer[DataFrame]] =
+    Tables.map(_ -> scala.collection.mutable.ArrayBuffer.empty[DataFrame]).toMap
   private var deltaBatches = 0
 
   // ---- driver-side trickle fast path --------------------------------
@@ -548,9 +539,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     if (withBase) {
       var (hs, ss, ps) = (Lsh.Rows(), Lsh.Rows(), Lsh.Rows())
       concurrently(
-        "graft-standing-load-hashes" -> (() => hs = Lsh.loadMd5s(baseHashes)),
-        "graft-standing-load-sigs" -> (() => ss = Lsh.loadSigs(baseSigs)),
-        "graft-standing-load-index" -> (() => ps = Lsh.loadPostings(baseIndex)))
+        "graft-standing-load-hashes" -> (() => hs = Lsh.loadMd5s(bases(Hashes))),
+        "graft-standing-load-sigs" -> (() => ss = Lsh.loadSigs(bases(Sigs))),
+        "graft-standing-load-index" -> (() => ps = Lsh.loadPostings(bases(Index))))
       ix.append(Lsh.concat(Seq(hs, ss, ps)), 0, null)
     }
     localDeltas.foreach(ix.append(_, 0, null))
@@ -646,7 +637,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       val base: Lsh.DriverIndex)
 
   /** Base postings in the buckets of `quads` ((id, band, key64, key64b),
-    * [[Lsh.postingsLocal]]): one partition-pruned index read joined to a
+    * [[Lsh.postingsLocal]]): the index's pruned read joined to a
     * broadcast LocalRelation of the buckets, as a driver index. None past
     * PostingsCollectBound. */
   private def prunedBase(quads: Array[Long]): Option[Lsh.DriverIndex] = {
@@ -654,17 +645,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val triples = quads.indices.by(4)
       .map(i => Row(quads(i + 1).toInt, quads(i + 2), quads(i + 3))).distinct
     if (triples.nonEmpty) {
-      val ks = triples.map(_.getLong(1)).distinct
-      val pbs = ks.map(pbIdxLocal(_, meta.pIdx)).distinct
-      val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
-      val pruned0 = baseIndex.filter(col("_pb").isin(pbs: _*))
-      val pruned =
-        if (fat && ks.size <= MaxPushedKeys) pruned0.filter(col("key64").isin(ks: _*))
-        else pruned0
-      val got = withPushConf(fat) {
-        Lsh.loadPostings(pruned.join(broadcast(localDf(triples, tripleSchema)),
-          Seq("band", "key64", "key64b")).limit(PostingsCollectBound + 1))
-      }
+      val got = Lsh.loadPostings(pruned(Index, triples.map(_.getLong(1)).distinct)
+        .join(broadcast(localDf(triples, tripleSchema)), Seq("band", "key64", "key64b"))
+        .limit(PostingsCollectBound + 1))
       if (got.posts.length + 2 * got.nullPosts.length > 4 * PostingsCollectBound) return None
       base.append(got, 0, null)
     }
@@ -678,16 +661,6 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * (over-bound fan-out on the pruned reads). */
   private def driverClassify(rows: Array[BatchRow]): Option[DriverClassified] = {
     val lv = view
-    // ONE push-conf window across the whole pruned classify: the exact
-    // tier runs on its own driver thread concurrent with the candidate ->
-    // signature chain, and the per-tier conf set/restore would race
-    // across threads (same final value, but a probe could plan with the
-    // push off). Inside this window the per-tier withPushConf calls are
-    // idempotent no-ops.
-    withPushConf(!lv.holdsBase && anyPushGateOpen)(classifyWith(rows, lv))
-  }
-
-  private def classifyWith(rows: Array[BatchRow], lv: View): Option[DriverClassified] = {
     // exact tier: which of the batch's md5s exist in the base. On the
     // pruned path it is independent of the candidate -> signature chain,
     // so it runs on its own driver thread and the two pruned reads overlap
@@ -697,27 +670,16 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val standingHF =
       if (lv.holdsBase || hs.isEmpty) null
       else {
-        val task = new java.util.concurrent.FutureTask[Set[String]](() => {
-          val pbs = hs.map(pbHashLocal(_, meta.pHash)).distinct
-          val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
-          val pruned0 = baseHashes.filter(col("_pb").isin(pbs: _*))
-          val pruned =
-            if (fat && hs.size <= MaxPushedKeys) pruned0.filter(col("_h").isin(hs: _*))
-            else pruned0
-          withPushConf(fat) {
-            pruned.join(broadcast(localDf(hs.map(Row(_)), hashSchema)),
-                Seq("_h"), "left_semi")
-              .select("_h").distinct().collect().map(_.getString(0)).toSet
-          }
-        })
+        val task = new java.util.concurrent.FutureTask[Set[String]](() =>
+          pruned(Hashes, hs).join(broadcast(localDf(hs.map(Row(_)), hashSchema)),
+            Seq("_h"), "left_semi").distinct().collect().map(_.getString(0)).toSet)
         val t = new Thread(task, "graft-trickle-exact")
         t.setDaemon(true)
         t.start()
         task
       }
-    // the fallback returns must not leave the exact-tier job in flight
-    // (its plan would race the conf restore; the caller may start the
-    // distributed fallback immediately after)
+    // the fallback returns wait for the exact tier too: no read of this
+    // classify outlives it (a later swap may delete the version it reads)
     def awaitExact(): Set[String] =
       if (standingHF == null) Set.empty
       else try standingHF.get()
@@ -744,15 +706,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     if (base != null && candByBid.nonEmpty) {
       val standIds = candByBid.valuesIterator.flatten.toArray.distinct
       if (standIds.length > CandSigBound) { awaitExact(); return None }
-      val pbs = standIds.map(pbSigLocal(_, meta.pSig)).distinct.toSeq
-      val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
-      val pruned0 = baseSigs.filter(col("_pb").isin(pbs: _*))
-      val pruned =
-        if (fat) pruned0.filter(col("doc_id").isin(standIds.toSeq: _*))
-        else pruned0
       val localI = localDf(standIds.map(Row(_)).toSeq, idSchema)
-      withPushConf(fat)(
-        base.append(Lsh.loadSigs(pruned.join(broadcast(localI), Seq("doc_id"))), 0, null))
+      base.append(Lsh.loadSigs(pruned(Sigs, standIds.toSeq).join(broadcast(localI), Seq("doc_id"))),
+        0, null)
     }
     // verdict fold: exact > near > new, per distinct id
     val sigsByBid = rows.filter(_.sig != null).groupMap(_.id.longValue())(_.sig)
@@ -799,9 +755,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       val rows = Lsh.Rows(posts = quads, sigIds = newRows.map(_.id.longValue()),
         sigs = newRows.map(_.sig), md5s = Lsh.md5Pairs(newRows.iterator.map(_.h)))
       val d = rows.copy(posts = lv.ix.append(rows, meta.maxBucketSize, base))
-      deltaHashes += localDf(newRows.map(r => Row(r.h)).toSeq, hashSchema)
-      deltaSigs += localDf(newRows.map(r => Row(r.id, r.sig.toSeq)).toSeq, sigSchema)
-      deltaIndex += localDf(d.posts.indices.by(4).map(i =>
+      deltas(Hashes) += localDf(newRows.map(r => Row(r.h)).toSeq, hashSchema)
+      deltas(Sigs) += localDf(newRows.map(r => Row(r.id, r.sig.toSeq)).toSeq, sigSchema)
+      deltas(Index) += localDf(d.posts.indices.by(4).map(i =>
         Row(d.posts(i), d.posts(i + 1).toInt, d.posts(i + 2), d.posts(i + 3))), idxSchema)
       localDeltas += d
       meta = meta.copy(nDocs = meta.nDocs + newRows.length)
@@ -819,86 +775,52 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
   private def unionAll(base: DataFrame, deltas: Seq[DataFrame]): DataFrame =
     deltas.foldLeft(base)(_.unionByName(_))
 
-  /** Standing frames for the BULK path (full, unpruned). */
-  private[graft] def fullHashes: DataFrame =
-    unionAll(baseHashes.select("_h"), deltaHashes.toSeq)
-  private[graft] def fullSigs: DataFrame =
-    unionAll(baseSigs.select("doc_id", "sig"), deltaSigs.toSeq)
-  private[graft] def fullIndex: DataFrame =
-    unionAll(baseIndex.select("id", "band", "key64", "key64b"), deltaIndex.toSeq)
+  /** Standing table `t` for the BULK path (full, unpruned): the base and
+    * its first `nDeltas` deltas. */
+  private[graft] def full(t: Table[_], nDeltas: Int = Int.MaxValue): DataFrame =
+    unionAll(bases(t).select(t.cols.map(col): _*), deltas(t).take(nDeltas).toSeq)
 
-  /** Pruned standing hash rows for a batch: read only the partitions the
-    * batch's own md5 values can land in. */
-  /** Each probe collects the batch's own PROBE KEYS (one tiny job over a
-    * materialized batch-sized frame), derives the touched partition
-    * buckets driver-side, and prunes the standing read on `_pb`. When a
-    * table has grown PAST ITS PARTITION CEILING (MaxParts reached, so
-    * rows-per-partition exceed the per-table target and the
-    * partition-level bound alone would grow linearly with the corpus),
-    * the key set is ALSO pushed down as a parquet In filter: partition
-    * files are key-sorted with small row groups, so row-group min/max
-    * pruning bounds the rows read inside a fat partition by
-    * (keys x rows-per-row-group) — corpus-independent again. Below the
-    * ceiling the key push is deliberately OFF: with one row group per
-    * file it can prune nothing, and evaluating it costs extra reads
-    * (dictionary pages + column indexes — measured 3x the probe bytes at
-    * spec scale). Null keys are dropped: a null text hashes to a null
-    * key, and the matching standing rows are definitionally absent, so
-    * the row falls through to 'new' exactly as the bulk path classifies
-    * it — not NPE the probe. All filters only remove rows that cannot
-    * join; the trickle==bulk identity is unaffected
-    * (StandingCorpusSpec). */
-  private[graft] def prunedHashes(batchHashes: DataFrame): DataFrame = {
-    val hs = batchHashes.select("_h").distinct().collect().iterator
-      .filterNot(_.isNullAt(0)).map(_.getString(0)).toSeq
-    val pbs = hs.map(pbHashLocal(_, meta.pHash)).distinct
-    val fat = pushKeys(meta.pHash.toLong * HashRowsPerPart < meta.nDocs)
-    val pruned = baseHashes.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && hs.nonEmpty && hs.size <= MaxPushedKeys)
-        pruned.filter(col("_h").isin(hs: _*))
-      else pruned
-    unionAll(keyed.select("_h"), deltaHashes.toSeq)
+  /** THE pruned read of base table `t` for the distinct non-null probe
+    * `keys`: only the `_pb` partitions they land in. When the table has
+    * grown PAST ITS PARTITION CEILING ([[Table.fat]], or
+    * keyPushdownOverride) and there are at most MaxPushedKeys keys, the
+    * keys are ALSO pushed down as a parquet In filter: partition files
+    * are key-sorted with small row groups, so row-group min/max pruning
+    * bounds the rows read inside a fat partition by (keys x
+    * rows-per-row-group) — corpus-independent again. Below the ceiling
+    * the key push is deliberately OFF: with one row group per file it can
+    * prune nothing, and evaluating it costs extra reads (dictionary pages
+    * + column indexes — measured 3x the probe bytes at spec scale). Every
+    * filter only removes rows that cannot match a key, so the trickle ==
+    * bulk identity is unaffected (StandingCorpusSpec). */
+  private def pruned[K](t: Table[K], keys: Seq[K]): DataFrame =
+    prunedOn(t, keys.map(t.pbLocal(_, t.parts(meta))).distinct, keys)
+
+  /** [[pruned]] for the keys in the one column of `keys`: a bounded
+    * collect of its distinct non-null values (a null key has no standing
+    * match, so its row falls through to 'new' as on the bulk path); past
+    * MaxPushedKeys the partition set is computed in Spark and no key is
+    * pushed. */
+  private def pruned[K](t: Table[K], keys: DataFrame): DataFrame = {
+    val k = col(keys.columns.head)
+    val ks = keys.select(k).distinct().limit(MaxPushedKeys + 1).collect().toSeq
+      .collect { case r if !r.isNullAt(0) => r.get(0).asInstanceOf[K] }
+    if (ks.length <= MaxPushedKeys) pruned(t, ks)
+    else prunedOn(t, keys.select(t.pb(k, t.parts(meta))).distinct().collect().toSeq
+      .collect { case r if !r.isNullAt(0) => r.getInt(0) }, Nil)
   }
 
-  /** Pruned standing postings for a batch's band keys. */
-  private[graft] def prunedIndex(batchKeys: DataFrame): DataFrame = {
-    val ks = batchKeys.select("key64").distinct().collect().iterator
-      .filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq
-    val pbs = ks.map(pbIdxLocal(_, meta.pIdx)).distinct
-    val fat = pushKeys(meta.pIdx.toLong * IdxRowsPerPart < meta.nDocs * meta.bands)
-    val pruned = baseIndex.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && ks.nonEmpty && ks.size <= MaxPushedKeys)
-        pruned.filter(col("key64").isin(ks: _*))
-      else pruned
-    unionAll(keyed.select("id", "band", "key64", "key64b"), deltaIndex.toSeq)
+  private def prunedOn(t: Table[_], pbs: Seq[Int], keys: Seq[Any]): DataFrame = {
+    val read = bases(t).filter(col("_pb").isin(pbs: _*))
+    val push = keys.nonEmpty && keys.size <= MaxPushedKeys &&
+      keyPushdownOverride.getOrElse(t.fat(meta))
+    (if (push) read.filter(col(t.key).isin(keys: _*)) else read).select(t.cols.map(col): _*)
   }
 
-  /** Pruned standing signatures for a candidate-id frame. The partition
-    * bucket ([[StandingCorpus.pbSig]]) is evaluated in Spark over the
-    * candidate frame, so the collect carries (bucket, id) pairs and the
-    * id set doubles as the pushed key filter when the sig table is past
-    * its partition ceiling. */
-  private[graft] def prunedSigs(candIds: DataFrame): DataFrame = {
-    val idc = candIds.columns.head
-    val fat = pushKeys(meta.pSig.toLong * SigRowsPerPart < meta.nDocs)
-    val rows = candIds
-      .select(pbSig(col(idc), meta.pSig).as("_pb"), col(idc).cast("long").as("_id"))
-      .distinct().limit(MaxPushedKeys + 1).collect()
-      .filterNot(_.isNullAt(0))
-    val overflow = rows.length > MaxPushedKeys
-    val pbs =
-      if (!overflow) rows.iterator.map(_.getInt(0)).toSeq.distinct
-      else candIds.select(pbSig(col(idc), meta.pSig).as("_pb")).distinct().collect()
-        .iterator.filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
-    val pruned = baseSigs.filter(col("_pb").isin(pbs: _*))
-    val keyed =
-      if (fat && !overflow && rows.nonEmpty)
-        pruned.filter(col("doc_id").isin(rows.map(_.getLong(1)).toSeq: _*))
-      else pruned
-    unionAll(keyed.select("doc_id", "sig"), deltaSigs.toSeq)
-  }
+  /** The Spark trickle plan's read of table `t` for the keys of `keys`:
+    * its pruned base read and its deltas. */
+  private def probe(t: Table[_], keys: DataFrame): DataFrame =
+    unionAll(pruned(t, keys), deltas(t).toSeq)
 
   /** Classify one batch of (idCol, textCol) docs against the standing
     * corpus: 'exact' / 'near' / 'new' per id, bit-identical to
@@ -935,9 +857,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * difference is that the compaction swap is skipped (the caller swaps
     * under its write lock via [[swapCompactedIfReady]]), so no standing
     * state mutates on this path. The shared state it reads is safe
-    * under concurrency: the driver view is read-only here, the push-conf
-    * window is reference-counted, and the view, deltas, meta and base
-    * tables only change under the caller's exclusive lock. */
+    * under concurrency: the driver view is read-only here, no conf is
+    * set on any session, and the view, deltas, meta and base tables only
+    * change under the caller's exclusive lock. */
   def classifyShared(batchDocs: DataFrame, idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
     val fast = collectBatch(batchDocs, idCol, textCol)
@@ -964,9 +886,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val b = ckpt(batchDocs.select(col(idCol).cast("long").as(idCol),
       col(textCol).as(textCol)))
     val batchSigs = ckpt(sign(b, meta, idCol, textCol))
-    val st = withPushConf(anyPushGateOpen) {
-      ckpt(classifyPlan(b, batchSigs, idCol, textCol))
-    }
+    val st = ckpt(classifyPlan(b, batchSigs, idCol, textCol))
     (b, batchSigs, st)
   }
 
@@ -976,7 +896,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
                                   idCol: String, textCol: String): DataFrame = {
     val n = b.count()
     if (n > trickleMaxDocs)
-      Dedup.incrementalStatusIndexed(fullHashes, fullSigs, fullIndex,
+      Dedup.incrementalStatusIndexed(full(Hashes), full(Sigs), full(Index),
         b, batchSigs, meta.threshold, idCol, textCol, meta.lsh)
     else {
       // TRICKLE path — the same joins as incrementalStatusIndexed, each
@@ -984,15 +904,15 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       // duplicate batch id must yield ONE row per input row, not a
       // multiplied join).
       val bh = b.select(col(idCol), md5(col(textCol)).as("_h"))
-      val exactIds = bh.join(prunedHashes(bh.select("_h")), Seq("_h"), "left_semi")
+      val exactIds = bh.join(probe(Hashes, bh.select("_h")), Seq("_h"), "left_semi")
         .select(col(idCol)).distinct()
       val batchKeys = ckpt(Lsh.postings(batchSigs, idCol, "sig", meta.lsh)
         .withColumnRenamed("id", "_bid"))
-      val cand = ckpt(prunedIndex(batchKeys)
+      val cand = ckpt(probe(Index, batchKeys.select("key64"))
         .join(batchKeys, Seq("band", "key64", "key64b"))
         .select(col("_bid"), col("id").as("_cid")).distinct())
       val sb = batchSigs.select(col(idCol).as("_bid"), col("sig").as("_sb"))
-      val sc = prunedSigs(cand.select("_cid"))
+      val sc = probe(Sigs, cand.select("_cid"))
         .select(col("doc_id").as("_cid"), col("sig").as("_sc"))
       val nearIds = cand.join(sb, "_bid").join(sc, "_cid")
         .filter(est_jaccard(col("_sb"), col("_sc")) >= meta.threshold)
@@ -1047,8 +967,8 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
       else sign(newDocs, meta, idCol, textCol))
     val nNew = newSigs.count()
     if (nNew > 0) {
-      deltaHashes += ckpt(newDocs.select(md5(col(textCol)).as("_h")))
-      deltaSigs += ckpt(newSigs.select(col(idCol).as("doc_id"), col("sig")))
+      deltas(Hashes) += ckpt(newDocs.select(md5(col(textCol)).as("_h")))
+      deltas(Sigs) += ckpt(newSigs.select(col(idCol).as("doc_id"), col("sig")))
       // append-under-cap (Lsh.admitUnderCap — the shared cap owner):
       // count each touched bucket ONCE (pruned standing read + deltas),
       // admit the batch's smallest-id postings while the bucket stays
@@ -1060,12 +980,12 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         if (meta.maxBucketSize <= 0) Lsh.admitUnderCap(newKeys, null, meta.maxBucketSize)
         else {
           val keys = Seq("band", "key64", "key64b")
-          val standCnt = prunedIndex(newKeys)
+          val standCnt = probe(Index, newKeys.select("key64"))
             .join(broadcast(newKeys.select(keys.map(col): _*).distinct()), keys)
             .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_cnt"))
           Lsh.admitUnderCap(newKeys, standCnt, meta.maxBucketSize)
         }
-      deltaIndex += withPushConf(anyPushGateOpen)(ckpt(admitted))
+      deltas(Index) += ckpt(admitted)
       // a distributed delta blinds the driver fold — later trickle
       // probes fall back to the Spark plan until a compaction folds it
       deltasAllLocal = false
@@ -1110,6 +1030,9 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failed = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
     var thread: Thread = _
+    /** The new version's base tables, opened by the builder (published
+      * to the swap by `done`). */
+    var bases: Map[Table[_], DataFrame] = _
   }
   // volatile: compactionReady is read by serving threads outside the
   // corpus lock
@@ -1130,8 +1053,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     * GC is 30 min away, and a 16M-doc compaction holding two ~12 GB
     * shuffles plus the half-written new version exhausted the bench
     * box's disk). */
-  private def writeVersion(grown: Meta, hashes: DataFrame, sigs: DataFrame,
-                           index: DataFrame): Unit = {
+  private def writeVersion(grown: Meta, tables: Seq[(Table[_], DataFrame)]): Unit = {
     // build into a dot-prefixed temp dir and rename into place at
     // completion (round-14 advice): an unfinished build is then never
     // confused with an adoptable orphan version — open()'s cleanup or a
@@ -1139,37 +1061,28 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     // from under the builder
     val nv = s"$dir/.build-v${grown.version}"
     deleteRecursively(new java.io.File(nv))
-    writeHashes(hashes, grown, nv)
-    System.gc()
-    writeSigs(sigs, grown, nv)
-    System.gc()
-    writeIndex(index, grown, nv)
-    System.gc()
+    tables.foreach { case (t, df) =>
+      write(t, df, grown, nv)
+      System.gc()
+    }
     val finalDir = new java.io.File(s"$dir/v${grown.version}")
     if (!new java.io.File(nv).renameTo(finalDir))
       sys.error(s"could not publish compacted version: rename $nv -> $finalDir failed")
   }
 
-  private def grownMeta: Meta = meta.copy(
-    version = version + 1,
-    pHash = partsFor(meta.nDocs, HashRowsPerPart),
-    pSig = partsFor(meta.nDocs, SigRowsPerPart),
-    pIdx = partsFor(meta.nDocs * meta.bands, IdxRowsPerPart))
+  private def grownMeta: Meta = sized(meta.copy(version = version + 1))
 
   /** Kick off a background compaction if none is running and there is
     * anything to fold. The snapshot covers the deltas present NOW;
     * later absorbs keep appending and survive the swap untouched. */
   private def startBackgroundCompaction(): Unit = {
     if (pendingCompaction.isDefined) return
-    if (deltaHashes.isEmpty && deltaSigs.isEmpty && deltaIndex.isEmpty) {
+    if (deltas.values.forall(_.isEmpty)) {
       deltaBatches = 0
       return
     }
-    val p = new PendingCompaction(grownMeta, deltaHashes.length)
-    val h = unionAll(baseHashes.select("_h"), deltaHashes.take(p.nDeltas).toSeq)
-    val s = unionAll(baseSigs.select("doc_id", "sig"), deltaSigs.take(p.nDeltas).toSeq)
-    val i = unionAll(baseIndex.select("id", "band", "key64", "key64b"),
-      deltaIndex.take(p.nDeltas).toSeq)
+    val p = new PendingCompaction(grownMeta, deltas(Hashes).length)
+    val snapshot = Tables.map(t => t -> full(t, p.nDeltas))
     deltaBatches = 0
     p.thread = new Thread(() => {
       try {
@@ -1184,15 +1097,12 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         // latency-sensitive ingest).
         spark.sparkContext.setLocalProperty("spark.scheduler.pool",
           "graft_compact")
-        writeVersion(p.grown, h, s, i)
-        // warm the shared FileStatusCache for the new version HERE: the
-        // ingest thread's swap re-opens three partitioned tables
-        // (tens of thousands of dirs), and a cold listing inside the
-        // next measured batch cost ~50 s at 8M docs — listed on this
-        // thread, the swap's spark.read hits the cache
-        Seq("hashes", "sigs", "index").foreach { t =>
-          spark.read.parquet(s"$dir/v${p.grown.version}/$t")
-        }
+        writeVersion(p.grown, snapshot)
+        // open the new version's three partitioned tables HERE, for the
+        // swap to adopt: each open lists its (tens of thousands of) dirs,
+        // and a cold listing inside the next measured batch cost ~50 s at
+        // 8M docs
+        p.bases = readBase(p.grown.version)
       }
       catch { case t: Throwable => p.failed.set(t) }
       finally p.done.set(true)
@@ -1229,12 +1139,8 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
         // the live in-memory meta keeps the current total (round-14
         // advice: a crash after this write must not overcount)
         writeMeta(dir, meta.copy(nDocs = p.grown.nDocs))
-        baseHashes = spark.read.parquet(s"$vdir/hashes")
-        baseSigs = spark.read.parquet(s"$vdir/sigs")
-        baseIndex = spark.read.parquet(s"$vdir/index")
-        deltaHashes.remove(0, p.nDeltas)
-        deltaSigs.remove(0, p.nDeltas)
-        deltaIndex.remove(0, p.nDeltas)
+        bases = p.bases
+        deltas.values.foreach(_.remove(0, p.nDeltas))
         baseDocs = p.grown.nDocs
         if (deltasAllLocal && p.nDeltas <= localDeltas.length) {
           localDeltas.remove(0, p.nDeltas)
@@ -1249,7 +1155,7 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
           // until the buffers empty, then the local fold resumes (over a
           // fresh read of the base, under the gate)
           localDeltas.clear()
-          deltasAllLocal = deltaHashes.isEmpty
+          deltasAllLocal = deltas(Hashes).isEmpty
           resetView(deltasAllLocal && wantReplica)
         }
         deleteRecursively(new java.io.File(old))
@@ -1277,12 +1183,12 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     // no deltas — an O(corpus) rewrite would change nothing, so just
     // reset the batch counter (a dup-heavy stream must not pay a full
     // three-table rewrite every compactEveryBatches batches)
-    if (deltaHashes.isEmpty && deltaSigs.isEmpty && deltaIndex.isEmpty) {
+    if (deltas.values.forall(_.isEmpty)) {
       deltaBatches = 0
       return
     }
     val grown = grownMeta
-    writeVersion(grown, fullHashes, fullSigs, fullIndex)
+    writeVersion(grown, Tables.map(t => t -> full(t)))
     writeMeta(dir, grown)
     compactionFailure = None
     val old = vdir
@@ -1292,18 +1198,11 @@ final class StandingCorpus private (val spark: SparkSession, val dir: String,
     meta = grown
     version = grown.version
     baseDocs = grown.nDocs
-    baseHashes = spark.read.parquet(s"$vdir/hashes")
-    baseSigs = spark.read.parquet(s"$vdir/sigs")
-    baseIndex = spark.read.parquet(s"$vdir/index")
-    deltaHashes.clear(); deltaSigs.clear(); deltaIndex.clear()
+    bases = readBase(version)
+    deltas.values.foreach(_.clear())
     localDeltas.clear(); deltasAllLocal = true
     if (!(viewCurrent && wantReplica)) resetView(wantReplica)
     deltaBatches = 0
     deleteRecursively(new java.io.File(old))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete()
   }
 }

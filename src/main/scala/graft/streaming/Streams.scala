@@ -239,7 +239,7 @@ object Streams {
                                     lsh: Lsh.Params = Lsh.Params(),
                                     stateDir: String = null) {
     private val dir = Option(stateDir).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-s14-standing").toString)
+      graft.operators.StandingCorpus.tempDir("graft-s14-standing").toString)
     /** The standing artifacts — exposed so a service can compact or
       * reopen them across restarts. */
     val standing: graft.operators.StandingCorpus =

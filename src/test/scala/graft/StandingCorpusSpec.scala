@@ -60,7 +60,8 @@ class StandingCorpusSpec extends SparkSpec {
   }
 
   private def postings(sc: StandingCorpus): Seq[(Long, Int, Long, Long)] =
-    sc.fullIndex.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    sc.full(StandingCorpus.Index).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
 
   private def assertSamePostings(a: StandingCorpus, b: StandingCorpus, what: String): Unit = {
@@ -171,14 +172,14 @@ class StandingCorpusSpec extends SparkSpec {
     val st2 = statuses(sc.classify(Seq((200L, t2)).toDF("doc_id", "text")))
     assert(st2 === Seq((200L, "exact")))
     // standing index buckets must hold at most cap entries
-    val overCap = sc.fullIndex.groupBy("band", "key64", "key64b")
+    val overCap = sc.full(StandingCorpus.Index).groupBy("band", "key64", "key64b")
       .agg(count(lit(1)).as("n")).filter(col("n") > 3).count()
     assert(overCap === 0L, "no bucket may exceed the cap after appends")
     // re-cap twin: postings over the grown sig table, capped globally
-    val grownSigs = sc.fullSigs
+    val grownSigs = sc.full(StandingCorpus.Sigs)
     val recap = Lsh.postings(grownSigs, "doc_id", "sig", lsh)
       .select("id", "band", "key64", "key64b")
-    val appended = sc.fullIndex.select("id", "band", "key64", "key64b")
+    val appended = sc.full(StandingCorpus.Index).select("id", "band", "key64", "key64b")
     assert(appended.exceptAll(recap).count() === 0L &&
       recap.exceptAll(appended).count() === 0L,
       "append-under-cap must equal global keep-smallest re-cap for monotone ids")
@@ -574,5 +575,169 @@ class StandingCorpusSpec extends SparkSpec {
       s"the two writer threads' errors ride on the thrown one: ${e.getSuppressed.toSeq}")
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
       "the signature and postings checkpoints must be released")
+  }
+
+  test("pruned base reads carry the raised In threshold in their own session; the owner's conf never moves") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    val owner = spark.conf.getOption(key)
+    val dir = tmpDir()
+    // every standing scan a reported query plans: (table dir, its
+    // relation's session is the owner's, that session's threshold)
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean, Option[String])]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach {
+          case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+            r.location.rootPaths.map(_.toString).filter(_.contains(dir)).foreach { p =>
+              scans.add((p.split('/').last, r.sparkSession eq spark,
+                r.sparkSession.conf.getOption(key)))
+            }
+          case _ => ()
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val ownerAtJobStart = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val jl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        ownerAtJobStart.add(spark.conf.getOption(key))
+    }
+    // registered before the build, so a session the corpus derives from
+    // the owner's reports to it too
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      val sc = StandingCorpus.build(mkDocs(0L until 200L), null, dir)
+      sc.keyPushdownOverride = Some(true)
+      sc.driverReplicaOff = true
+      val base = mkDocs(Seq(0L, 5L)).select(col("text")).as[String].collect()
+      val batch = (i: Long) => Seq((i, base(0)),
+        (i + 1, base(1).split(" ").dropRight(1).mkString(" ") + " y1"),
+        (i + 2, words(s"th$i").mkString(" "))).toDF("doc_id", "text")
+      // the driver fold, then the Spark trickle plan (no driver collect)
+      val (folded, foldJobs) = jobsIn(statuses(sc.classifyAbsorb(batch(1000L))))
+      sc.trickleMaxDocs = Int.MaxValue.toLong
+      val (planned, planJobs) = jobsIn(statuses(sc.classifyAbsorb(batch(1010L))))
+      assert(foldJobs > 0 && planJobs > 0)
+      assert(folded.map(_._2) === Seq("exact", "near", "new") && planned.map(_._2) === folded.map(_._2))
+      import scala.jdk.CollectionConverters._
+      assert(ownerAtJobStart.size >= foldJobs + planJobs)
+      assert(ownerAtJobStart.asScala.forall(_ == owner),
+        s"the owner's $key moved during a pushed-key classifyAbsorb: ${ownerAtJobStart.asScala.toSet}")
+      val seen = scans.asScala.toSeq
+      assert(seen.map(_._1).toSet === Set("hashes", "sigs", "index"), s"standing scans reported: $seen")
+      assert(seen.forall { case (_, ownerSession, v) =>
+        !ownerSession && v.contains(StandingCorpus.MaxPushedKeys.toString) }, s"standing scans: $seen")
+    } finally {
+      spark.sparkContext.removeSparkListener(jl)
+      spark.listenerManager.unregister(qel)
+    }
+  }
+
+  test("each written standing table's _pb column is its table's partition bucket") {
+    // the layout is persisted: a corpus open() reads must have been
+    // bucketed hashes on the md5 prefix, sigs on xxhash64(doc_id) and the
+    // index on key64
+    val dir = tmpDir()
+    val sc = StandingCorpus.build(mkDocs(0L until 300L), null, dir)
+    val m = sc.currentMeta
+    for ((name, pb) <- Seq(
+      "hashes" -> StandingCorpus.pbHash(col("_h"), m.pHash),
+      "sigs" -> StandingCorpus.pbSig(col("doc_id"), m.pSig),
+      "index" -> StandingCorpus.pbIdx(col("key64"), m.pIdx))) {
+      val t = spark.read.parquet(s"$dir/v1/$name")
+      assert(t.count() > 0)
+      assert(t.filter(col("_pb") =!= pb).count() === 0L, s"$name rows outside their bucket")
+    }
+  }
+
+  test("an absorb past MaxPushedKeys distinct keys takes its partition set from Spark; verdicts and postings equal the replica's") {
+    val lsh = Lsh.Params(maxBucketSize = 3)
+    val on = buildCapped(lsh)
+    val off = buildCapped(lsh)
+    off.driverReplicaOff = true
+    off.keyPushdownOverride = Some(true)
+    off.trickleMaxDocs = 512 // the big batch takes the Spark path, absorbImpl included
+    // 1100 fresh texts (32 distinct band keys each) plus copies and
+    // variants that meet standing buckets at every occupancy
+    val big = ((2000L until 3100L).map(i => (i, words(s"b${i}_").mkString(" "))) ++ Seq(
+      (3100L, words("c").mkString(" ")), (3101L, variant("c", 3, "bx")),
+      (3102L, variant("d", 3, "by")), (3103L, variant("e", 4, "bz")))).toDF("doc_id", "text")
+    val keys = Lsh.postings(StandingCorpus.sign(big, off.currentMeta), "doc_id", "sig", lsh)
+      .select("key64").distinct().count()
+    assert(keys > StandingCorpus.MaxPushedKeys, s"$keys distinct keys do not overflow the pushed set")
+    assert(statuses(on.classifyAbsorb(big)) === statuses(off.classifyAbsorb(big)), "the big batch")
+    trickleBatches.zipWithIndex.foreach { case (b, i) =>
+      assert(statuses(on.classifyAbsorb(b)) === statuses(off.classifyAbsorb(b)), s"trickle batch ${i + 1}")
+    }
+    assertSamePostings(on, off, "admitted postings")
+  }
+
+  test("concurrent classifyShared under a read lock, with absorbs and swaps under the write lock, equals the serialized run") {
+    val lsh = Lsh.Params(maxBucketSize = 3)
+    def corpus(): StandingCorpus = {
+      val sc = buildCapped(lsh)
+      sc.driverReplicaOff = true
+      sc.keyPushdownOverride = Some(true)
+      sc.compactEveryBatches = 2
+      sc.compactInBackground = true
+      sc
+    }
+    val base = mkDocs(0L until 60L).select(col("text")).as[String].collect()
+    // probes: copies, near copies and fresh texts in a vocabulary no
+    // absorb shares, so their verdicts do not depend on how they
+    // interleave with the absorbs
+    val probes = (0 until 12).map { i =>
+      val l = 5000L + 10 * i
+      Seq((l, base(5 * i)), (l + 1, base(5 * i + 1).split(" ").dropRight(1).mkString(" ") + " pz"),
+        (l + 2, words(s"p${i}_").mkString(" "))).toDF("doc_id", "text")
+    }
+    val absorbs = (0 until 6).map { i =>
+      val l = 6000L + 10 * i
+      Seq((l, words(s"a${i}_").mkString(" ")), (l + 1, variant(s"a${i}_", 3, s"am$i")),
+        (l + 2, words(s"a${i / 2}_").mkString(" "))).toDF("doc_id", "text")
+    }
+    val rounds = 3
+    val serial = corpus()
+    val serialAbsorbs = absorbs.map(b => statuses(serial.classifyAbsorb(b)))
+    val serialProbes = probes.map(b => statuses(serial.classifyShared(b)))
+    serial.awaitCompaction()
+
+    val live = corpus()
+    val lock = new java.util.concurrent.locks.ReentrantReadWriteLock()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    try {
+      val writer = pool.submit(() => {
+        start.await()
+        absorbs.map { b =>
+          val w = lock.writeLock(); w.lock()
+          val st = try live.classifyAbsorb(b) finally w.unlock()
+          statuses(st)
+        }
+      })
+      val readers = (0 until 4).map { t =>
+        pool.submit(() => {
+          start.await()
+          (0 until rounds).flatMap(_ => probes.indices.filter(_ % 4 == t).map { i =>
+            if (live.compactionReady) {
+              val w = lock.writeLock(); w.lock()
+              try live.swapCompactedIfReady() finally w.unlock()
+            }
+            val r = lock.readLock(); r.lock()
+            val st = try live.classifyShared(probes(i)) finally r.unlock()
+            i -> statuses(st)
+          })
+        })
+      }
+      start.countDown()
+      assert(writer.get() === serialAbsorbs, "absorb verdicts")
+      readers.flatMap(_.get()).foreach { case (i, st) => assert(st === serialProbes(i), s"probe $i") }
+    } finally pool.shutdownNow()
+    live.awaitCompaction()
+    assert(live.currentVersion >= 2, "a compaction swapped in during the run")
+    assertSamePostings(live, serial, "admitted postings")
   }
 }
